@@ -68,8 +68,10 @@ def _affected_in_predicate(affected, group_by) -> str | None:
     """A SQL ``col IN (...)`` conjunction over the affected group keys,
     or None when pushdown doesn't apply (too many keys, or a key type
     that can't be rendered as a safe literal). Values are int/str only;
-    strings containing a quote abort (conservative — the semi-join
-    restriction still guarantees correctness without the pushdown)."""
+    strings containing a quote or a backslash abort (Spark's parser
+    reads ``\\b`` in a literal as a backspace, so the IN list would miss
+    the group; the semi-join restriction still guarantees correctness
+    without the pushdown)."""
     rows = affected.limit(_RESCAN_PUSHDOWN_MAX_KEYS + 1).collect()
     if len(rows) > _RESCAN_PUSHDOWN_MAX_KEYS:
         return None
@@ -80,7 +82,7 @@ def _affected_in_predicate(affected, group_by) -> str | None:
             if isinstance(v, bool) or not isinstance(v, (int, str)):
                 return None
             if isinstance(v, str):
-                if "'" in v:
+                if "'" in v or "\\" in v:
                     return None
                 lits.append(f"'{v}'")
             else:

@@ -11,9 +11,8 @@ IMMUTABLE; a tiny log says which files are live. Then
   data dirs are garbage, not corruption.
 - time travel = read the file list of an older version.
 - concurrency = optimistic: writers race to create ``_txlog/<v>.json``
-  with a PUT-IF-ABSENT; the loser re-reads the log and REBASES if its
-  touched partitions are disjoint from the winner's (and no intervening
-  commit replaced the whole snapshot), else aborts. No locks.
+  with a PUT-IF-ABSENT; the loser re-reads the log and REBASES or
+  aborts as the conflict table ``_CONFLICTS`` decides. No locks.
 
 The log talks to storage ONLY through the ``LogStore`` interface —
 put-if-absent / read / exists / list / delete — the same design as
@@ -95,6 +94,17 @@ _UNPARTITIONED = "__all__"
 # mode="mor", append()) — every reader goes through _ptrs.
 def _ptrs(e) -> list[dict]:
     return list(e) if isinstance(e, list) else [e]
+
+
+def _ptr(rel: str, sub: str, v: int, files: list | None = None) -> dict:
+    """A live pointer: one staged commit dir's partition subdir, stamped
+    with the version that made it live (and its per-file stats)."""
+    return {
+        "commit_dir": rel,
+        "part_dir": sub,
+        "v": v,
+        **({"files": files} if files else {}),
+    }
 
 
 # Stable file identity for positional deletion vectors: the path suffix
@@ -373,6 +383,95 @@ class ConcurrentWriteError(RuntimeError):
     """Another writer committed a conflicting (overlapping-partition or
     snapshot-replacing) change between this writer's read and its
     commit attempt."""
+
+
+# ------------------------------------------------------------ conflicts
+_R = "rebase"
+_C = "conflict"
+_O = "conflict-if-touched-overlaps"
+
+# Column groups of _CONFLICTS: the op an intervening commit recorded.
+# An op in no group (a future op, or "clone") conflicts.
+_COLUMNS = (
+    ("overwrite", "compact", "restore",
+     "rename_column", "drop_column", "widen_column"),
+    ("analyze",),
+    ("delete_keys",),
+    ("wap_stage", "wap_discard", "wap_publish"),
+    ("merge", "delete", "update", "compact_parts"),
+    ("append",),
+    ("delete_rows",),
+    ("update_rows",),
+)
+
+# Row classes: the op being committed.
+_ROWS = {
+    "blind": ("overwrite", "compact", "restore", "analyze",
+              "rename_column", "drop_column", "widen_column",
+              "delete_keys", "wap_stage", "wap_discard"),
+    "copy_on_write": ("merge", "delete", "update", "compact_parts"),
+    "append": ("append",),
+    "delete_rows": ("delete_rows",),
+    "update_rows": ("update_rows",),
+    "wap_publish": ("wap_publish",),
+}
+
+_CONFLICTS = {
+    #             replace analyze dkeys wap cow append drows urows
+    "blind":         (_R, _R, _R, _R, _R, _R, _R, _R),
+    "copy_on_write": (_C, _R, _C, _C, _O, _O, _O, _O),
+    "append":        (_C, _R, _R, _C, _R, _R, _R, _R),
+    "delete_rows":   (_C, _R, _C, _C, _O, _R, _R, _O),
+    "update_rows":   (_C, _R, _C, _C, _O, _R, _O, _O),
+    "wap_publish":   (_C, _R, _R, _R, _R, _R, _R, _R),
+}
+"""The rebase rules of the transaction log, all of them: may a commit
+whose base is older than the head be rebuilt on the head (``rebase``),
+or must it raise ConcurrentWriteError (``conflict``; the caller re-reads
+and retries)? ``conflict-if-touched-overlaps`` conflicts only when the
+intervening commit's ``touched`` shares a partition with ours, or names
+the whole unpartitioned table. ``VersionedTable._commit`` walks every
+commit in (base, head] and applies the cell of (our row, its column);
+any conflicting commit aborts.
+
+- blind: the op rebuilds its whole entry from whatever head it finds
+  (nothing it commits was computed from an older snapshot), so it
+  rebases over everything and the walk is skipped.
+- copy_on_write rewrote its touched partitions from the base. Ops that
+  enumerate every partition they changed in ``touched`` (copy-on-write,
+  append, merge-on-read) are safe when disjoint. overwrite, compact and
+  restore list only partitions they KEPT, so disjointness proves
+  nothing: conflict, or a rebase would resurrect rows they removed.
+  Schema changes conflict because our column-mapping fields were taken
+  at the base. A delete_keys tombstone conflicts: our survivors were
+  read blind to it, and the rewritten pointers' newer ``v`` would exempt
+  them from it. WAP commits conflict: a publish adds pointers like an
+  append (stage and discard change none, so those cells are
+  conservative).
+- append reads no existing rows, so it rebases over every commit that
+  keeps the snapshot, same partitions included (insert-after
+  serialization); tombstones never apply to its pointers (their ``v``
+  is newer). Snapshot replacement and schema changes conflict; WAP
+  commits conflict too (conservative).
+- delete_rows / update_rows are per-row predicates over immutable
+  files. Appended rows serialize after them; two deletes compose in
+  either order (a row's match never depends on other rows). An update
+  against an overlapping update or delete, in either direction, matches
+  no serial order, and a copy-on-write rewrite of an overlapping
+  partition replaced the files the positional DV names. delete_keys
+  and WAP commits conflict (conservative).
+- wap_publish folds in NEW rows no other writer could have read, so it
+  rebases over every snapshot-keeping commit, WAP commits included; a
+  snapshot replacement or schema change invalidates the audit.
+
+analyze only attaches footer stats (its ``touched`` is empty), so it
+never conflicts."""
+
+_RULES = {
+    op: {theirs: cell
+         for group, cell in zip(_COLUMNS, cells) for theirs in group}
+    for row, cells in _CONFLICTS.items() for op in _ROWS[row]
+}
 
 
 class LogStore:
@@ -904,39 +1003,113 @@ class VersionedTable:
                 self._advance_checkpoint(version)
         return ok
 
+    # ------------------------------------------------------ commit core
+    def _read_or_conflict(self, version: int) -> dict:
+        try:
+            return self._read_entry(version)
+        except FileNotFoundError as e:
+            # Under the delta codec an entry reconstructs through its
+            # ancestors, so a concurrent vacuum can drop one mid-walk
+            # (before its checkpoint lands). The serializable answer is
+            # a conflict the caller retries, not an opaque IO error.
+            raise ConcurrentWriteError(
+                f"log entry {e} vacuumed during commit; re-read and retry"
+            ) from None
+
+    def _commit(
+        self,
+        base: int | None,
+        touched: list[str],
+        op: str,
+        build,
+        txn: tuple[str, int] | None = None,
+    ) -> int:
+        """The one commit-and-rebase loop: every write commits here.
+
+        ``base`` is the version the writer's staged data was computed
+        against, or None for a blind writer (see _CONFLICTS).
+        ``build(head, head_entry) -> (live, dv, extra_fields)`` returns
+        the writer's part of the entry, built on ``head``: ``dv`` None
+        carries the head's tombstones forward, and an extra field whose
+        value is None is left out. ``txn=(app_id, seq)`` is the
+        per-stream idempotence watermark: if the head already carries
+        it, the head is returned and nothing commits.
+
+        Each attempt reads the head, checks ``txn``, walks the commits
+        in (base, head] through ``_CONFLICTS``, assembles the entry and
+        races for the next version; a lost race retries from the new
+        head. Returns the committed version."""
+        rules = _RULES[op]
+        while True:
+            head = self.latest_version() or 0
+            head_entry = (
+                self._read_or_conflict(head) if head else {"live": {}}
+            )
+            applied = dict(head_entry.get("txn", {}))
+            if txn is not None:
+                if applied.get(txn[0], -1) >= txn[1]:
+                    return head  # already applied: replay is a no-op
+                applied[txn[0]] = txn[1]
+            if base is not None:
+                for v in range(base + 1, head + 1):
+                    theirs = self._read_or_conflict(v)
+                    rule = rules.get(theirs.get("op"), _C)
+                    hit = set(theirs.get("touched", []))
+                    if rule == _C or (
+                        rule == _O
+                        and (hit & set(touched) or _UNPARTITIONED in hit)
+                    ):
+                        raise ConcurrentWriteError(
+                            f"concurrent '{theirs.get('op')}' at v{v} "
+                            f"conflicts with this '{op}' (base v{base}, "
+                            f"head v{head}); re-read, re-stage and retry"
+                        )
+                base = head
+            live, dv, extra = build(head, head_entry)
+            if dv is None:
+                dv = head_entry.get("dv", [])
+            entry = {
+                "version": head + 1,
+                "ts": time.time(),
+                "op": op,
+                "live": live,
+                "touched": list(touched),
+                "txn": applied,
+                **({"dv": dv} if dv else {}),
+                **self._meta_fields(head_entry),
+                **extra,
+            }
+            entry = {k: v for k, v in entry.items() if v is not None}
+            if self._try_commit(entry):
+                return head + 1
+
     # ----------------------------------------------------- constraints
     def _effective_constraints(
-        self,
+        self, entry: dict | None = None
     ) -> tuple[dict[str, str], list[str], dict[str, str]]:
         """The handle's configured constraints/generated columns unioned
-        with whatever the head commit recorded — the sticky half of the
-        contract: once committed, every later writer enforces them
-        whether or not its handle was constructed with them."""
+        with whatever ``entry`` (default: the head commit) recorded —
+        the sticky half of the contract: once committed, every later
+        writer enforces them whether or not its handle was constructed
+        with them."""
+        if entry is None:
+            head = self.latest_version()
+            entry = self._read_entry(head) if head is not None else {}
         chk, nn = dict(self.constraints), list(self.not_null)
         gen = dict(self.generated)
-        head = self.latest_version()
-        e = self._read_entry(head) if head is not None else {}
-        for name, expr in e.get("constraints", {}).items():
+        for name, expr in entry.get("constraints", {}).items():
             chk.setdefault(name, expr)
-        for c in e.get("not_null", []):
+        for c in entry.get("not_null", []):
             if c not in nn:
                 nn.append(c)
-        for c, expr in e.get("generated", {}).items():
+        for c, expr in entry.get("generated", {}).items():
             gen.setdefault(c, expr)
         return chk, nn, gen
 
-    def _meta_fields(self) -> dict:
-        head = self.latest_version()
-        e = self._read_entry(head) if head is not None else {}
-        chk, nn = dict(self.constraints), list(self.not_null)
-        gen = dict(self.generated)
-        for name, expr in e.get("constraints", {}).items():
-            chk.setdefault(name, expr)
-        for c in e.get("not_null", []):
-            if c not in nn:
-                nn.append(c)
-        for c, expr in e.get("generated", {}).items():
-            gen.setdefault(c, expr)
+    def _meta_fields(self, e: dict) -> dict:
+        """The metadata every commit carries forward from the head entry
+        ``e``: constraints, column mapping, widening, protocol floor."""
+        chk, nn, gen = self._effective_constraints(e)
         out: dict = {}
         if chk:
             out["constraints"] = chk
@@ -1176,22 +1349,9 @@ class VersionedTable:
         """Commit a METADATA-ONLY entry: the head's live map, dv list
         and txn watermarks carried unchanged, plus ``fields``. Zero
         data IO — rename/drop cost the same at 100 TB as at 100 rows."""
-        while True:
-            head = self.latest_version()
-            e = self._read_entry(head)
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                "op": op,
-                "live": e["live"],
-                "touched": [],
-                "txn": dict(e.get("txn", {})),
-                **({"dv": e["dv"]} if e.get("dv") else {}),
-                **self._meta_fields(),
-                **fields,
-            }
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+        return self._commit(
+            None, [], op, lambda head, e: (e["live"], None, fields)
+        )
 
     def rename_column(self, spark: SparkSession, old: str, new: str) -> int:
         """RENAME COLUMN as a metadata-only commit: the logical name
@@ -1420,10 +1580,8 @@ class VersionedTable:
         names, defaulting to the handle's configured list; Bloom
         indexes are deliberately NOT backfilled here (they need a data
         scan — use compact() when that trade is worth it). Snapshot-
-        preserving and row-invariant: concurrent merges/appends rebase
-        across it (op 'analyze' is in their allowlists), and its own
-        retry loop re-reads the head so it never clobbers a racing
-        commit's pointers."""
+        preserving and row-invariant, so every writer rebases across it
+        (see _CONFLICTS)."""
         cols = list(stats_cols) if stats_cols else self.stats_cols
         if not cols:
             raise ValueError(
@@ -1478,9 +1636,7 @@ class VersionedTable:
                 ],
             }
 
-        while True:
-            head = self.latest_version()
-            e = self._read_entry(head)
+        def build(head: int, e: dict):
             live = {
                 p: (
                     [backfill(x) for x in v]
@@ -1489,18 +1645,9 @@ class VersionedTable:
                 )
                 for p, v in e["live"].items()
             }
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                "op": "analyze",
-                "live": live,
-                "touched": [],
-                "txn": dict(e.get("txn", {})),
-                **({"dv": e["dv"]} if e.get("dv") else {}),
-                **self._meta_fields(),
-            }
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+            return live, None, {}
+
+        return self._commit(None, [], "analyze", build)
 
     def _enforce(self, df: DataFrame) -> DataFrame:
         """Weave the constraint checks into the staging write itself: a
@@ -1848,41 +1995,19 @@ class VersionedTable:
             df, _cm = self._prep_write(df)
         df = self._materialize_generated(df)
         rel, parts, files = self._stage(df)
-        while True:
-            base = self.latest_version() or 0
-            applied = dict(self._read_entry(base).get("txn", {})) if base else {}
-            # txn watermarks survive overwrites: idempotence tracking
-            # must not reset when the data is replaced.
-            if txn is not None:
-                if applied.get(txn[0], -1) >= txn[1]:
-                    return base  # already applied — replay is a no-op
-                applied[txn[0]] = txn[1]
+
+        def build(head: int, head_entry: dict):
             live = {
-                p: {
-                    "commit_dir": rel,
-                    "part_dir": sub,
-                    "v": base + 1,
-                    **({"files": files[p]} if files else {}),
-                }
+                p: _ptr(rel, sub, head + 1, files.get(p))
                 for p, sub in parts.items()
             }
-            entry = {
-                "version": base + 1,
-                "ts": time.time(),
-                "op": op,
-                "live": live,
-                "touched": sorted(parts),
-                "txn": applied,
-                # a full-snapshot rewrite reads THROUGH the tombstones
-                # (read() applies them), so the new files are
-                # materialized and the dv list resets
-                **self._meta_fields(),
-                **_cm,
-            }
-            if self._try_commit(entry):
-                return entry["version"]
-            # Overwrite replaces everything — rebase is always safe: just
-            # retry on top of whatever version won.
+            # a full-snapshot rewrite reads THROUGH the tombstones
+            # (read() applies them), so the dv list resets
+            return live, [], _cm
+
+        # txn watermarks survive overwrites: idempotence tracking must
+        # not reset when the data is replaced
+        return self._commit(None, sorted(parts), op, build, txn=txn)
 
     def merge(
         self,
@@ -2098,80 +2223,14 @@ class VersionedTable:
         else:
             merged = delta
         rel, parts, files = self._stage(merged)
-        while True:
-            head = self.latest_version()
-            try:
-                head_entry = self._read_entry(head)
-            except FileNotFoundError as e:
-                # Under the delta codec the head's state reconstructs
-                # through its ancestors — a concurrent vacuum dropping
-                # one mid-walk (before its checkpoint lands) surfaces
-                # HERE, not only on a direct read of the dropped
-                # version. Same serializable answer: conflict, retry.
-                raise ConcurrentWriteError(
-                    f"log entry {e} vacuumed during rebase "
-                    f"(base v{base_version}); re-read and retry"
-                ) from None
-            if head != base_version:
-                # Someone committed since we read. Rebase only if every
-                # intervening commit is a MERGE on partitions disjoint
-                # from ours — then their live pointers for other
-                # partitions are still what we must preserve and ours
-                # are still correct. An intervening overwrite/compact
-                # REPLACED the whole snapshot: our survivors were
-                # computed against the pre-replacement state, and
-                # rebasing would resurrect rows the overwrite removed
-                # (its 'touched' list only names partitions it KEPT, so
-                # disjointness proves nothing — ADVICE r6). Serializable
-                # answer: conflict, caller re-reads and retries.
-                conflicting = set()
-                for v in range(base_version + 1, head + 1):
-                    try:
-                        e = self._read_entry(v)
-                    except FileNotFoundError:
-                        # A concurrent vacuum dropped an intervening
-                        # entry mid-scan: the base we computed against
-                        # is gone, so the serializable answer is a
-                        # conflict (caller re-reads head and retries),
-                        # not an opaque IO error (ADVICE r7).
-                        raise ConcurrentWriteError(
-                            f"log entry v{v} vacuumed during rebase "
-                            f"(base v{base_version}); re-read and retry"
-                        ) from None
-                    # merge, delete, update and compact_parts all
-                    # enumerate EVERY partition they modified/dropped in
-                    # 'touched', so disjointness is a real proof for
-                    # them; overwrite/compact/restore list only
-                    # partitions they KEPT, so it proves nothing and we
-                    # must conflict.
-                    if e.get("op") not in (
-                        "merge", "delete", "update", "compact_parts", "analyze",
-                        "append", "delete_rows", "update_rows"
-                    ):
-                        raise ConcurrentWriteError(
-                            f"snapshot replaced by a concurrent "
-                            f"'{e.get('op')}' at v{v} "
-                            f"(base v{base_version}, head {head})"
-                        )
-                    conflicting |= set(e.get("touched", []))
-                if conflicting & set(touched) or _UNPARTITIONED in conflicting:
-                    raise ConcurrentWriteError(
-                        f"partitions {sorted(conflicting & set(touched))} "
-                        f"changed by a concurrent commit (v{base_version}->v{head})"
-                    )
-                base_version = head
-                head_entry = self._read_entry(head)
+
+        def build(head: int, head_entry: dict):
             live = dict(head_entry["live"])
             # Every touched partition has delta rows by construction
             # (touched came from delta's distinct), so _stage created
             # its dir; a KeyError here would be a real invariant break.
             for p in touched:
-                ptr = {
-                    "commit_dir": rel,
-                    "part_dir": parts[p],
-                    "v": head + 1,
-                    **({"files": files[p]} if files else {}),
-                }
+                ptr = _ptr(rel, parts[p], head + 1, files.get(p))
                 if pointer_append:
                     # no-match fast path: existing pointers stay live,
                     # the staged delta joins their list (append's
@@ -2179,36 +2238,18 @@ class VersionedTable:
                     live[p] = _ptrs(live[p]) + [ptr] if p in live else ptr
                 else:
                     live[p] = ptr
-            applied = dict(head_entry.get("txn", {}))
-            if txn is not None:
-                if applied.get(txn[0], -1) >= txn[1]:
-                    return head  # a rebase revealed our txn already landed
-                applied[txn[0]] = txn[1]
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                # the no-match fast path committed a pure insert — say
-                # so: downstream window_ops insert-only proofs get to
-                # stay metadata-only through this commit
-                "op": "append" if pointer_append else "merge",
-                "live": live,
-                "touched": touched,
-                "txn": applied,
-                # tombstones carry forward: they still apply to the
-                # untouched pointers (older v); the rewritten pointers
-                # carry v = head+1 > every tombstone's v, and their
-                # rows were read THROUGH the tombstones, so nothing
-                # deleted can resurface
-                **(
-                    {"dv": head_entry["dv"]}
-                    if head_entry.get("dv")
-                    else {}
-                ),
-                **self._meta_fields(),
-                **_cm,
-            }
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+            # tombstones carry forward: they still apply to the
+            # untouched pointers (older v); the rewritten pointers
+            # carry v = head+1 > every tombstone's v, and their rows
+            # were read THROUGH the tombstones, so nothing deleted can
+            # resurface. The no-match fast path committed a pure insert
+            # and says so, keeping window_ops insert-only proofs
+            # metadata-only through this commit; it still rebases as a
+            # merge (its no-match probe read the base).
+            extra = {**_cm, "op": "append"} if pointer_append else _cm
+            return live, None, extra
+
+        return self._commit(base_version, touched, "merge", build, txn=txn)
 
     def append(
         self, df: DataFrame, txn: tuple[str, int] | None = None
@@ -2221,11 +2262,7 @@ class VersionedTable:
         terabytes. Readers union each partition's pointer list;
         compact/compact_partitions folds lists back to one pointer.
         Schema must match the table exactly (additive widening stays
-        merge's job, with merge_schema=True). Concurrency: an append
-        never reads existing rows, so it rebases over ANY commit that
-        enumerates its touched partitions — including same-partition
-        ones (serializable as insert-after); snapshot-replacing commits
-        (overwrite/compact/restore) conflict. Existing key tombstones
+        merge's job, with merge_schema=True). Existing key tombstones
         do not apply to the new pointers (v = head+1 exceeds every
         tombstone's stamp): inserting a previously deleted key is an
         insert, not a resurrection. ``txn`` is the merge idempotence
@@ -2252,60 +2289,15 @@ class VersionedTable:
         rel, parts, files = self._stage(df)
         if not self.partition_col:
             parts = {_UNPARTITIONED: ""}
-        touched = sorted(parts)
-        while True:
-            head = self.latest_version()
-            head_entry = self._read_entry(head)
-            if head != base:
-                for v in range(base + 1, head + 1):
-                    try:
-                        e = self._read_entry(v)
-                    except FileNotFoundError:
-                        raise ConcurrentWriteError(
-                            f"log entry v{v} vacuumed during rebase "
-                            f"(base v{base}); re-read and retry"
-                        ) from None
-                    if e.get("op") not in (
-                        "merge", "delete", "update", "compact_parts", "analyze",
-                        "append", "delete_rows", "update_rows",
-                        "delete_keys",
-                    ):
-                        raise ConcurrentWriteError(
-                            f"snapshot replaced by a concurrent "
-                            f"'{e.get('op')}' at v{v}"
-                        )
-                base = head
+
+        def build(head: int, head_entry: dict):
             live = dict(head_entry["live"])
-            for p in touched:
-                ptr = {
-                    "commit_dir": rel,
-                    "part_dir": parts[p],
-                    "v": head + 1,
-                    **({"files": files[p]} if files else {}),
-                }
+            for p, sub in parts.items():
+                ptr = _ptr(rel, sub, head + 1, files.get(p))
                 live[p] = _ptrs(live[p]) + [ptr] if p in live else ptr
-            applied = dict(head_entry.get("txn", {}))
-            if txn is not None:
-                if applied.get(txn[0], -1) >= txn[1]:
-                    return head
-                applied[txn[0]] = txn[1]
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                "op": "append",
-                "live": live,
-                "touched": touched,
-                "txn": applied,
-                **(
-                    {"dv": head_entry["dv"]}
-                    if head_entry.get("dv")
-                    else {}
-                ),
-                **self._meta_fields(),
-                **_cm,
-            }
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+            return live, None, _cm
+
+        return self._commit(base, sorted(parts), "append", build, txn=txn)
 
     # ------------------------------------------- write-audit-publish
     def stage_wap(self, df: DataFrame, wap_id: str) -> int:
@@ -2342,42 +2334,18 @@ class VersionedTable:
         rel, parts, files = self._stage(df)
         if not self.partition_col:
             parts = {_UNPARTITIONED: ""}
-        while True:
-            head = self.latest_version()
-            head_entry = self._read_entry(head)
+
+        def build(head: int, head_entry: dict):
             staged = {
-                p: {
-                    "commit_dir": rel,
-                    "part_dir": parts[p],
-                    "v": head + 1,
-                    **({"files": files[p]} if files else {}),
-                }
-                for p in parts
+                p: _ptr(rel, sub, head + 1, files.get(p))
+                for p, sub in parts.items()
             }
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                "op": "wap_stage",
-                # live byte-identical to head: invisible to readers,
-                # zero-diff under the delta codec
-                "live": dict(head_entry["live"]),
-                "touched": [],
-                "txn": dict(head_entry.get("txn", {})),
-                "wap": {
-                    "id": wap_id,
-                    "files": staged,
-                    "touched": sorted(parts),
-                },
-                **(
-                    {"dv": head_entry["dv"]}
-                    if head_entry.get("dv")
-                    else {}
-                ),
-                **self._meta_fields(),
-                **_cm,
-            }
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+            wap = {"id": wap_id, "files": staged, "touched": sorted(parts)}
+            # live byte-identical to head: invisible to readers,
+            # zero-diff under the delta codec
+            return dict(head_entry["live"]), None, {"wap": wap, **_cm}
+
+        return self._commit(None, [], "wap_stage", build)
 
     def _wap_entry(self, staged_version: int, wap_id: str) -> dict:
         e = self._read_entry(staged_version)
@@ -2412,75 +2380,34 @@ class VersionedTable:
     ) -> int:
         """PUBLISH: fold the staged pointers into the live map — a
         metadata-only commit, idempotent via the txn stamp (a retried
-        publish after a crash lands once). Serializable against
-        concurrent history exactly like append's rebase: intervening
-        commits that enumerate their partitions are fine (the staged
-        files are NEW rows no other writer could have read or touched);
-        a snapshot-replacing commit (overwrite/compact/restore)
-        invalidates the audit and conflicts."""
-        e = self._wap_entry(staged_version, wap_id)
-        wap = e["wap"]
-        txn = (f"wap:{wap_id}", staged_version)
-        base = staged_version
-        while True:
-            head = self.latest_version()
-            head_entry = self._read_entry(head)
-            if head_entry.get("txn", {}).get(txn[0], -1) >= txn[1]:
-                return head  # already published (crash-retry replay)
-            for v in range(base + 1, head + 1):
-                try:
-                    ev = self._read_entry(v)
-                except FileNotFoundError:
-                    raise ConcurrentWriteError(
-                        f"log entry v{v} vacuumed during WAP publish "
-                        f"(staged v{staged_version}); re-stage"
-                    ) from None
-                if (
-                    ev.get("op") == "wap_discard"
-                    and ev.get("wap_discarded", {}).get("id") == wap_id
-                    and ev["wap_discarded"].get("staged") == staged_version
-                ):
+        publish after a crash lands once). It rebases over every
+        commit that keeps the snapshot (see _CONFLICTS); a discard of
+        this staged commit makes it fail."""
+        wap = self._wap_entry(staged_version, wap_id)["wap"]
+        scanned = staged_version
+
+        def build(head: int, head_entry: dict):
+            nonlocal scanned
+            for v in range(scanned + 1, head + 1):
+                d = self._read_entry(v).get("wap_discarded", {})
+                if d.get("id") == wap_id and d.get("staged") == staged_version:
                     raise ValueError(
                         f"WAP {wap_id!r} (staged v{staged_version}) was "
                         f"discarded at v{v} — re-stage to publish"
                     )
-                if ev.get("op") not in (
-                    "merge", "delete", "update", "compact_parts",
-                    "analyze", "append", "delete_rows", "update_rows",
-                    "delete_keys", "wap_stage", "wap_publish",
-                    "wap_discard",
-                ):
-                    raise ConcurrentWriteError(
-                        f"snapshot replaced by a concurrent "
-                        f"'{ev.get('op')}' at v{v}: the audited base is "
-                        "gone — re-stage and re-audit"
-                    )
-            base = head
+            scanned = head
             live = dict(head_entry["live"])
             for p, ptr in wap["files"].items():
                 # stamp the publish version so older key tombstones
                 # never gate these rows (same rule as append)
                 ptr = {**ptr, "v": head + 1}
                 live[p] = _ptrs(live[p]) + [ptr] if p in live else ptr
-            applied = dict(head_entry.get("txn", {}))
-            applied[txn[0]] = txn[1]
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                "op": "wap_publish",
-                "live": live,
-                "touched": list(wap["touched"]),
-                "txn": applied,
-                "wap_published": wap_id,
-                **(
-                    {"dv": head_entry["dv"]}
-                    if head_entry.get("dv")
-                    else {}
-                ),
-                **self._meta_fields(),
-            }
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+            return live, None, {"wap_published": wap_id}
+
+        return self._commit(
+            staged_version, list(wap["touched"]), "wap_publish", build,
+            txn=(f"wap:{wap_id}", staged_version),
+        )
 
     def discard_wap(
         self, spark: SparkSession, staged_version: int, wap_id: str
@@ -2490,9 +2417,8 @@ class VersionedTable:
         never land'); the staged files stay referenced by the stage
         entry until vacuum retires it, then age out with it."""
         self._wap_entry(staged_version, wap_id)  # validates the handle
-        while True:
-            head = self.latest_version()
-            head_entry = self._read_entry(head)
+
+        def build(head: int, head_entry: dict):
             if head_entry.get("txn", {}).get(f"wap:{wap_id}", -1) >= (
                 staged_version
             ):
@@ -2500,23 +2426,10 @@ class VersionedTable:
                     f"WAP {wap_id!r} (staged v{staged_version}) already "
                     "published — discard would not unpublish it"
                 )
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                "op": "wap_discard",
-                "live": dict(head_entry["live"]),
-                "touched": [],
-                "txn": dict(head_entry.get("txn", {})),
-                "wap_discarded": {"id": wap_id, "staged": staged_version},
-                **(
-                    {"dv": head_entry["dv"]}
-                    if head_entry.get("dv")
-                    else {}
-                ),
-                **self._meta_fields(),
-            }
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+            marker = {"id": wap_id, "staged": staged_version}
+            return dict(head_entry["live"]), None, {"wap_discarded": marker}
+
+        return self._commit(None, [], "wap_discard", build)
 
     # --------------------------------------------------------- deletes
     def merge_into(
@@ -2553,8 +2466,8 @@ class VersionedTable:
         partition its source row names). One full-outer join on the key
         within touched partitions; assignments cast back to the target
         column type; constraints/stats flow through staging like every
-        other write; rebase/conflict and ``txn`` idempotence are the
-        merge rules unchanged. The plain :meth:`merge` stays the fast
+        other write; it commits as op 'merge' (see _CONFLICTS), with
+        merge's ``txn`` idempotence. The plain :meth:`merge` stays the fast
         path for unconditional upserts (left-anti survivors, no outer
         join). Reference analog: none — this is the lakehouse DML
         surface (VERDICT r7 item 2 family).
@@ -2716,84 +2629,23 @@ class VersionedTable:
         files: dict[str, list[dict]] | None = None,
         txn: tuple[str, int] | None = None,
     ) -> int:
-        """Shared commit loop for the row-level DML forms (delete,
-        partition drop, update, conditional merge): rewrite pointers for
-        touched partitions that still have data (``parts``), drop the
-        rest from live. Rebase rules match merge: disjoint merges/
-        deletes/updates rebase over, overwrite/compact conflict. ``txn``
-        threads the same per-stream idempotence watermark merge uses."""
-        while True:
-            head = self.latest_version()
-            try:
-                head_entry = self._read_entry(head)
-            except FileNotFoundError as e:
-                # Under the delta codec the head's state reconstructs
-                # through its ancestors — a concurrent vacuum dropping
-                # one mid-walk (before its checkpoint lands) surfaces
-                # HERE, not only on a direct read of the dropped
-                # version. Same serializable answer: conflict, retry.
-                raise ConcurrentWriteError(
-                    f"log entry {e} vacuumed during rebase "
-                    f"(base v{base_version}); re-read and retry"
-                ) from None
-            if head != base_version:
-                conflicting = set()
-                for v in range(base_version + 1, head + 1):
-                    try:
-                        e = self._read_entry(v)
-                    except FileNotFoundError:
-                        raise ConcurrentWriteError(
-                            f"log entry v{v} vacuumed during rebase "
-                            f"(base v{base_version}); re-read and retry"
-                        ) from None
-                    if e.get("op") not in (
-                        "merge", "delete", "update", "compact_parts", "analyze",
-                        "append", "delete_rows", "update_rows"
-                    ):
-                        raise ConcurrentWriteError(
-                            f"snapshot replaced by a concurrent "
-                            f"'{e.get('op')}' at v{v}"
-                        )
-                    conflicting |= set(e.get("touched", []))
-                if conflicting & set(touched) or _UNPARTITIONED in conflicting:
-                    raise ConcurrentWriteError(
-                        f"partitions {sorted(conflicting & set(touched))} "
-                        f"changed by a concurrent commit"
-                    )
-                base_version = head
-                head_entry = self._read_entry(head)
+        """Commit for the copy-on-write DML forms (delete, partition
+        drop, update, conditional merge, partition compaction): rewrite
+        pointers for touched partitions that still have data
+        (``parts``), drop the rest from live."""
+
+        def build(head: int, head_entry: dict):
             live = dict(head_entry["live"])
             for p in touched:
                 if rel is not None and p in parts:
-                    live[p] = {
-                        "commit_dir": rel,
-                        "part_dir": parts[p],
-                        "v": head + 1,
-                        **({"files": files[p]} if files else {}),
-                    }
+                    live[p] = _ptr(
+                        rel, parts[p], head + 1, (files or {}).get(p)
+                    )
                 else:
                     live.pop(p, None)  # every row of p deleted
-            applied = dict(head_entry.get("txn", {}))
-            if txn is not None:
-                if applied.get(txn[0], -1) >= txn[1]:
-                    return head  # rebase revealed our txn already landed
-                applied[txn[0]] = txn[1]
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                "op": op,
-                "live": live,
-                "touched": touched,
-                "txn": applied,
-                **(
-                    {"dv": head_entry["dv"]}
-                    if head_entry.get("dv")
-                    else {}
-                ),
-                **self._meta_fields(),
-            }
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+            return live, None, {}
+
+        return self._commit(base_version, touched, op, build, txn=txn)
 
     def _commit_rdv(
         self,
@@ -2806,106 +2658,26 @@ class VersionedTable:
         add_files: dict[str, list[dict]] | None = None,
         update_cols: list[str] | None = None,
     ) -> int:
-        """Commit loop for the merge-on-read DML forms: live pointers
-        are NEVER rewritten — the entry gains a positional DV sidecar
-        ref (and, for update_rows, appended pointers carrying the
-        updated row images). Rebase rules follow from DELETE/UPDATE
-        being pure per-row predicates over immutable files:
+        """Commit for the merge-on-read DML forms: live pointers are
+        NEVER rewritten — the entry gains a positional DV sidecar ref
+        (and, for update_rows, appended pointers carrying the updated
+        row images)."""
 
-        - delete_rows over append/delete_rows on the SAME partitions is
-          fine — deleting set A and set B concurrently equals either
-          serial order (a row's match never depends on other rows), and
-          appended rows simply serialize after the delete.
-        - update_rows over append is fine (insert-after serialization).
-        - update_rows vs update_rows, and update_rows vs delete_rows in
-          EITHER direction, conflict on overlap: an update changes rows
-          the other predicate evaluated (or evaluates rows the other
-          changed), so the concurrent outcome matches no serial order.
-        - any COW rewrite (merge/delete/update/compact_parts) of an
-          overlapping partition conflicts — its rewrite was computed
-          blind to this DV and would resurrect the deleted rows.
-        - snapshot-replacing ops (overwrite/compact/restore) conflict."""
-        compatible = (
-            {"append", "delete_rows"}
-            if op == "delete_rows"
-            else {"append"}
-        )
-        while True:
-            head = self.latest_version()
-            try:
-                head_entry = self._read_entry(head)
-            except FileNotFoundError as e:
-                # Under the delta codec the head's state reconstructs
-                # through its ancestors — a concurrent vacuum dropping
-                # one mid-walk (before its checkpoint lands) surfaces
-                # HERE, not only on a direct read of the dropped
-                # version. Same serializable answer: conflict, retry.
-                raise ConcurrentWriteError(
-                    f"log entry {e} vacuumed during rebase "
-                    f"(base v{base_version}); re-read and retry"
-                ) from None
-            if head != base_version:
-                conflicting = set()
-                for v in range(base_version + 1, head + 1):
-                    try:
-                        e = self._read_entry(v)
-                    except FileNotFoundError:
-                        raise ConcurrentWriteError(
-                            f"log entry v{v} vacuumed during rebase "
-                            f"(base v{base_version}); re-read and retry"
-                        ) from None
-                    if e.get("op") not in (
-                        "merge", "delete", "update", "compact_parts", "analyze",
-                        "append", "delete_rows", "update_rows",
-                    ):
-                        raise ConcurrentWriteError(
-                            f"snapshot replaced by a concurrent "
-                            f"'{e.get('op')}' at v{v}"
-                        )
-                    if e.get("op") not in compatible:
-                        conflicting |= set(e.get("touched", []))
-                if conflicting & set(touched) or _UNPARTITIONED in conflicting:
-                    raise ConcurrentWriteError(
-                        f"partitions {sorted(conflicting & set(touched))} "
-                        f"changed by a concurrent commit"
-                    )
-                base_version = head
-                head_entry = self._read_entry(head)
+        def build(head: int, head_entry: dict):
             live = dict(head_entry["live"])
-            if add_rel is not None:
-                for p, sub in (add_parts or {}).items():
-                    ptr = {
-                        "commit_dir": add_rel,
-                        "part_dir": sub,
-                        "v": head + 1,
-                        **({"files": add_files[p]} if add_files else {}),
-                    }
-                    live[p] = (
-                        _ptrs(live[p]) + [ptr] if p in live else ptr
-                    )
+            for p, sub in (add_parts or {}).items():
+                ptr = _ptr(add_rel, sub, head + 1, (add_files or {}).get(p))
+                live[p] = _ptrs(live[p]) + [ptr] if p in live else ptr
             dvs = list(head_entry.get("dv", [])) + [
                 {"commit_dir": dv_rel, "pos": True, "v": head + 1}
             ]
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                "op": op,
-                "live": live,
-                "touched": touched,
-                "txn": dict(head_entry.get("txn", {})),
-                "dv": dvs,
-                # which columns the UPDATE's assignments touched — the
-                # change feed's O(churn) fast path needs to know the
-                # key columns did NOT move (see _cdf_single_commit_fast)
-                **(
-                    {"dv_update_cols": sorted(update_cols)}
-                    if update_cols is not None
-                    else {}
-                ),
-                **self._meta_fields(),
-            }
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+            # which columns the UPDATE's assignments touched — the
+            # change feed's O(churn) fast path needs to know the key
+            # columns did NOT move (see _cdf_single_commit_fast)
+            cols = sorted(update_cols) if update_cols is not None else None
+            return live, dvs, {"dv_update_cols": cols}
+
+        return self._commit(base_version, touched, op, build)
 
     def drop_partitions(self, values: Sequence[str]) -> int:
         """METADATA-ONLY delete of whole partitions: the new log entry
@@ -3050,11 +2822,8 @@ class VersionedTable:
         DELETE + MERGE, as in Delta). SQL UPDATE semantics: only rows
         where the predicate evaluates TRUE change; NULL (unknown) keeps
         the row as-is. ``candidate_partitions`` bounds the probe scan
-        exactly as in delete_where. Concurrency: commits as op='update'
-        with the touched-partition list, so disjoint merges/deletes/
-        updates rebase over it and snapshot-replacing commits conflict.
-        Returns the new version (or the current one when nothing
-        matches).
+        exactly as in delete_where. Returns the new version (or the
+        current one when nothing matches).
 
         ``mode="mor"`` is the deletion-vector UPDATE (Delta DV update /
         Iceberg positional delete + data file): the OLD images of
@@ -3064,8 +2833,8 @@ class VersionedTable:
         unmatched rows sharing their partitions. Constraints, generated
         columns and file stats apply to the appended images exactly as
         to any staged write; OPTIMIZE folds both halves back into plain
-        files. Read/conflict model: see delete_where(mode="mor") and
-        _commit_rdv.
+        files. Read model: see delete_where(mode="mor"); conflicts:
+        see _CONFLICTS.
 
         Reference analog: none — the reference rebuilds whole tables
         (src/warehousing_lambda.py:64-71); this is the in-place DML a
@@ -3221,13 +2990,10 @@ class VersionedTable:
         deletes and clears the list; read cost until then is one
         broadcast-sized anti-join per tombstone column-set.
 
-        Concurrency: the commit touches no partitions, so it never
-        conflicts; a concurrent merge racing PAST it conflicts instead
-        (its survivors were computed blind to the tombstone — the
-        serializable answer is retry). vs :meth:`delete_where`: that is
-        copy-on-write (read-optimal, O(touched partitions) write);
-        this is merge-on-read (write-optimal, small per-read tax) —
-        the standard lakehouse trade, now available on both sides."""
+        vs :meth:`delete_where`: that is copy-on-write (read-optimal,
+        O(touched partitions) write); this is merge-on-read
+        (write-optimal, small per-read tax) — the standard lakehouse
+        trade, now available on both sides."""
         if self.latest_version() is None:
             # Probe BEFORE staging the tombstone parquet: failing after
             # the write leaves orphan files under data/ that no log
@@ -3247,24 +3013,13 @@ class VersionedTable:
         commit_id = uuid.uuid4().hex[:12]
         rel = os.path.join("data", commit_id)
         keys_df.coalesce(1).write.parquet(os.path.join(self.path, rel))
-        while True:
-            head = self.latest_version()
-            if head is None:
-                raise FileNotFoundError(f"no commits at {self.path}")
-            head_entry = self._read_entry(head)
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                "op": "delete_keys",
-                "live": dict(head_entry["live"]),
-                "touched": [],
-                "txn": dict(head_entry.get("txn", {})),
-                "dv": head_entry.get("dv", [])
-                + [{"commit_dir": rel, "cols": cols, "v": head + 1}],
-                **self._meta_fields(),
-            }
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+
+        def build(head: int, head_entry: dict):
+            tomb = {"commit_dir": rel, "cols": cols, "v": head + 1}
+            dv = head_entry.get("dv", []) + [tomb]
+            return dict(head_entry["live"]), dv, {}
+
+        return self._commit(None, [], "delete_keys", build)
 
     # ---------------------------------------------------------- reads
     def _commit_scan(
@@ -4189,8 +3944,7 @@ class VersionedTable:
             n_out = max(1, -(-self._live_bytes() // target))
             df = df.coalesce(n_out)
         # op is part of the entry from the start (no post-hoc relabel of
-        # a visible entry), and concurrent merges rebasing across this
-        # commit see 'compact' and conflict correctly.
+        # a visible entry): writers rebasing across it read 'compact'
         return self.overwrite(df, op="compact")
 
     def _live_bytes(self) -> int:
@@ -4214,6 +3968,23 @@ class VersionedTable:
                     )
                 except FileNotFoundError:
                     pass
+        return total
+
+    def _live_file_count(self, entry) -> int:
+        """Files behind one live-map value — pointer ``files`` stats
+        when present, else one listdir per pointer (control-plane)."""
+        total = 0
+        for ptr in _ptrs(entry):
+            if ptr.get("files") is not None:
+                total += len(ptr["files"])
+                continue
+            d = os.path.join(self.path, ptr["commit_dir"], ptr["part_dir"])
+            try:
+                total += sum(
+                    1 for n in os.listdir(d) if n.endswith(".parquet")
+                )
+            except FileNotFoundError:
+                pass
         return total
 
     def clone_to(
@@ -4311,14 +4082,13 @@ class VersionedTable:
         at scale — a full-snapshot :meth:`compact` is a table rewrite,
         unrealistic at 100 TB, while small-file debt accumulates
         per-partition and can be paid per-partition. Because the commit
-        enumerates exactly the partitions it rewrote, it joins the
-        merge/delete/update rebase class: concurrent DISJOINT writers
-        rebase over it instead of conflicting (a whole-snapshot compact
-        must conflict; this one must not — that asymmetry is the
-        point). Returns the current version when nothing is fragmented.
-        Requires a partitioned table; file counts come from the log's
-        stats entries when present, else from listing the pointer's
-        directory (one listdir per candidate)."""
+        enumerates exactly the partitions it rewrote, concurrent
+        DISJOINT writers rebase over it, where a whole-snapshot compact
+        conflicts (see _CONFLICTS). Returns the current version when
+        nothing is fragmented. Requires a partitioned table; file
+        counts come from the log's stats entries when present, else
+        from listing the pointer's directory (one listdir per
+        candidate)."""
         if not self.partition_col:
             raise ValueError(
                 "compact_partitions needs a partitioned table; use "
@@ -4328,31 +4098,12 @@ class VersionedTable:
         if base is None:
             raise FileNotFoundError(f"no commits at {self.path}")
         live = self._read_entry(base)["live"]
-
-        def file_count(e) -> int:
-            total = 0
-            for ptr in _ptrs(e):
-                if ptr.get("files") is not None:
-                    total += len(ptr["files"])
-                    continue
-                d = os.path.join(
-                    self.path, ptr["commit_dir"], ptr["part_dir"]
-                )
-                try:
-                    total += sum(
-                        1
-                        for n in os.listdir(d)
-                        if n.endswith(".parquet")
-                    )
-                except FileNotFoundError:
-                    pass
-            return total
-
         if partitions is not None:
             touched = sorted(str(p) for p in partitions if str(p) in live)
         else:
             touched = sorted(
-                p for p, e in live.items() if file_count(e) >= min_files
+                p for p, e in live.items()
+                if self._live_file_count(e) >= min_files
             )
         if not touched:
             return base
@@ -4401,24 +4152,8 @@ class VersionedTable:
             v = self.compact_partitions(spark, min_files=max_files)
             did = v != head
         else:
-            live = self._read_entry(head)["live"]
-            entry = live.get(_UNPARTITIONED)
-            n = 0
-            for ptr in _ptrs(entry) if entry else []:
-                if ptr.get("files") is not None:
-                    n += len(ptr["files"])
-                else:
-                    d = os.path.join(
-                        self.path, ptr["commit_dir"], ptr["part_dir"]
-                    )
-                    try:
-                        n += sum(
-                            1
-                            for f in os.listdir(d)
-                            if f.endswith(".parquet")
-                        )
-                    except FileNotFoundError:
-                        pass
+            entry = self._read_entry(head)["live"].get(_UNPARTITIONED)
+            n = self._live_file_count(entry) if entry else 0
             did = n >= max_files
             v = self.compact(spark) if did else head
         if vacuum_retention is not None:
@@ -4432,8 +4167,7 @@ class VersionedTable:
         exactly why vacuum has a retention window). History is preserved:
         the bad commits stay readable for forensics, and the restore
         itself is an auditable entry. Snapshot-replacing like overwrite
-        (op='restore'), so concurrent merges rebasing across it conflict
-        rather than resurrect rows. Raises if ``version``'s entry or any
+        (op='restore'; see _CONFLICTS). Raises if ``version``'s entry or any
         of its data dirs has been vacuumed away."""
         entry = self._read_entry(version)  # raises if vacuumed
         for e in entry["live"].values():
@@ -4446,29 +4180,25 @@ class VersionedTable:
                         " vacuumed; restore target must be within "
                         "retention"
                     )
-        while True:
-            head = self.latest_version()
-            applied = dict(self._read_entry(head).get("txn", {}))
-            new_entry = {
-                "version": head + 1,
-                "ts": time.time(),
-                "op": "restore",
-                "restored_from": version,
-                "live": dict(entry["live"]),
-                "touched": sorted(entry["live"]),
-                "txn": applied,
-                **({"dv": entry["dv"]} if entry.get("dv") else {}),
-                **self._meta_fields(),
-            }
-            # schema travels with the restore: the RESTORED version's
-            # column mapping replaces the head's (including restoring
-            # to a pre-mapping state, where the keys must disappear)
-            for k in ("colmap", "colmap_used", "dropped_cols", "renamed"):
-                new_entry.pop(k, None)
-                if k in entry:
-                    new_entry[k] = entry[k]
-            if self._try_commit(new_entry):
-                return new_entry["version"]
+        # schema travels with the restore: the RESTORED version's
+        # column mapping replaces the head's (including restoring to a
+        # pre-mapping state, where the keys must disappear — None drops
+        # a field)
+        extra = {
+            "restored_from": version,
+            **{
+                k: entry.get(k)
+                for k in ("colmap", "colmap_used", "dropped_cols", "renamed")
+            },
+        }
+        return self._commit(
+            None,
+            sorted(entry["live"]),
+            "restore",
+            lambda head, head_entry: (
+                dict(entry["live"]), entry.get("dv", []), extra
+            ),
+        )
 
     def register_sql(
         self,

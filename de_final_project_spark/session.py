@@ -140,11 +140,8 @@ def run_concurrently(*thunks):
     UI labels stay correct. Returns results in thunk order; if any
     thunk raises, every other thunk is still awaited (no half-run
     commit left racing the caller) and the first error re-raises."""
-    if len(thunks) == 1 or os.environ.get("SPARK_GRAFT_NO_OVERLAP"):
-        # kill switch: run the thunks sequentially (diagnostic tool —
-        # results must be identical either way; a divergence under
-        # overlap is a bug, not a tuning knob)
-        return [t() for t in thunks]
+    if len(thunks) == 1:
+        return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:

@@ -183,6 +183,23 @@ def test_rescan_vanished_group_deleted(spark, tmp_path):
     assert set(_state(view, spark)) == {("a",)}
 
 
+def test_rescan_backslash_group_key_is_not_dropped(spark, tmp_path):
+    """A group key holding a backslash must not reach the pushed-down
+    IN list: Spark's parser reads '\\b' in a literal as a backspace, so
+    the scan would miss the group and the rescan would treat it as
+    vanished."""
+    base = _base(
+        spark, tmp_path,
+        [(1, "a\\b", 1.0), (2, "a\\b", 2.0), (3, "x", 3.0), (4, "x", 4.0)],
+    )
+    view = _view(base, tmp_path, aggs={"mn": ("min", "v"), "mx": ("max", "v")})
+    view.refresh(spark)
+    base.delete_where(spark, "id IN (1, 3)")
+    assert view.refresh(spark)["mode"] == "rescan"
+    assert view.verify(spark)
+    assert _state(view, spark)[("a\\b",)] == (2.0, 2.0)
+
+
 def _stream_fold(spark, base, mv_path, ckpt):
     """Run the availableNow change-feed stream folding into an MV at
     mv_path (maxVersionsPerTrigger=1 forces one micro-batch per

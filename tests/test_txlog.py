@@ -95,6 +95,35 @@ def test_crash_before_log_commit_is_invisible(spark, table_factory):
     assert _rows(t.read(spark)) == {1: "A"}
 
 
+def test_run_concurrently_failure_awaits_siblings_and_reraises_first():
+    """Sibling-table commits overlap through run_concurrently: when one
+    thunk fails, every other thunk still runs to completion before the
+    first error (in thunk order) re-raises, so no commit is left racing
+    the caller."""
+    import time
+
+    from de_final_project_spark.session import run_concurrently
+
+    done = []
+
+    def first():
+        time.sleep(0.1)
+        raise ValueError("first")
+
+    def second():
+        raise RuntimeError("second")
+
+    def slow():
+        time.sleep(0.3)
+        done.append(True)
+        return "slow"
+
+    with pytest.raises(ValueError, match="first"):
+        run_concurrently(first, second, slow)
+    assert done == [True]
+    assert run_concurrently(lambda: 1, lambda: 2) == [1, 2]
+
+
 def test_concurrent_disjoint_merge_rebases(spark, table_factory):
     """A commit landing between read and commit on DISJOINT partitions
     is rebased over, and both changes survive."""
