@@ -242,10 +242,7 @@ class IncrementalAggView:
     # -------------------------------------------------------- refresh
     def applied_version(self) -> int | None:
         """Base version the view state reflects (the txn watermark)."""
-        head = self.mv.latest_version()
-        if head is None:
-            return None
-        return self.mv._read_entry(head).get("txn", {}).get(_APP_ID)
+        return self.mv.txn_version(_APP_ID)
 
     def refresh(self, spark: SparkSession) -> dict:
         """Advance the view to the base head. Returns a report dict:
@@ -557,10 +554,7 @@ class IncrementalJoinAggView(IncrementalAggView):
         ).drop(dim_df[self.dim_on])
 
     def applied_versions(self) -> tuple[int, int] | None:
-        head = self.mv.latest_version()
-        if head is None:
-            return None
-        enc = self.mv._read_entry(head).get("txn", {}).get(_J_APP_ID)
+        enc = self.mv.txn_version(_J_APP_ID)
         if enc is None:
             return None
         return divmod(enc, _J_SHIFT)

@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from de_final_project_spark.operators.txlog import EmptyChangeFeed
 from de_final_project_spark.sources.readers import read_testdata
 
 SHINGLE_K = 3
@@ -835,9 +834,12 @@ class IncrementalNearDupIndex:
     the corpus), probes their bands against the stored index with one
     equi-join, verifies candidates with exact shingle Jaccard against a
     semi-join-restricted text read, and lands two txn-stamped commits
-    (verdict append, band-index merge) so a crashed refresh replays as
-    a no-op per table. This is the ``ivm.py`` subscription pattern
-    applied to the dedup tier (the streamed IVF index at
+    (verdict append, band-index merge). The two tables form one
+    ``RefreshGroup`` (operators/refresh.py): a refresh that fails
+    between the commits leaves the group torn, and the next refresh
+    finishes exactly that window before it advances, so the verdicts
+    and the index never drift apart. This is the ``ivm.py`` subscription
+    pattern applied to the dedup tier (the streamed IVF index at
     streaming/pipeline.py:241 is the vector-side precedent).
 
     Costs per refresh: O(batch) signature work, O(batch·B) index
@@ -870,6 +872,7 @@ class IncrementalNearDupIndex:
     def __init__(self, docs: "VersionedTable", root: str):
         import os
 
+        from de_final_project_spark.operators.refresh import RefreshGroup
         from de_final_project_spark.operators.txlog import VersionedTable
 
         self.docs = docs
@@ -877,18 +880,14 @@ class IncrementalNearDupIndex:
             os.path.join(root, "band_index"), partition_col="hbucket"
         )
         self.verdicts = VersionedTable(os.path.join(root, "verdicts"))
-
-    def _applied(self, table) -> int | None:
-        head = table.latest_version()
-        if head is None:
-            return None
-        return table._read_entry(head).get("txn", {}).get(_NDIDX_APP)
-
-    def applied_version(self) -> int | None:
-        return self._applied(self.index)
+        self.group = RefreshGroup(
+            docs, _NDIDX_APP, (self.verdicts, self.index), "doc_id",
+            probe=self.index,
+        )
+        self.applied_version = self.group.applied_version
 
     @staticmethod
-    def _sign(docs_df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    def _sign(docs_df: DataFrame, persist) -> tuple[DataFrame, DataFrame]:
         """(shingles, band rows) for a doc frame — the same signature
         pipeline the batch operators use, applied to ONLY these rows.
         The batch is fanned out first: a change-feed/bronze read is
@@ -896,17 +895,20 @@ class IncrementalNearDupIndex:
         dominant per-row cost (session.fan_out)."""
         from de_final_project_spark.session import fan_out
 
-        sh = fan_out(docs_df).select(
-            "doc_id", shingle_set(F.col("text")).alias("shingles")
-        ).persist()
+        sh = persist(
+            fan_out(docs_df).select(
+                "doc_id", shingle_set(F.col("text")).alias("shingles")
+            )
+        )
         # sigs IS persisted deliberately: the band frame is consumed by
         # a self-join whose two branches race to fill new_bands' cache —
         # without this, each branch recomputes the 128-hash MinHash
-        # (measured: the build refresh doubled). Returned to the caller
-        # for unpersist (it used to leak until the LRU caught it).
-        sigs = sh.select(
-            "doc_id", minhash_signature(F.col("shingles")).alias("sig")
-        ).persist()
+        # (measured: the build refresh doubled).
+        sigs = persist(
+            sh.select(
+                "doc_id", minhash_signature(F.col("shingles")).alias("sig")
+            )
+        )
         bands = sigs.select(
             "doc_id", F.explode(lsh_bands(F.col("sig"))).alias("b")
         ).select(
@@ -914,7 +916,7 @@ class IncrementalNearDupIndex:
             F.col("b.band_idx").cast("long").alias("band_idx"),
             F.col("b.band_hash").alias("band_hash"),
         ).withColumn("hbucket", _hbucket_col())
-        return sh, sigs, bands
+        return sh, bands
 
     def _verify(
         self, spark, cands: DataFrame, sh_new: DataFrame, base_v: int
@@ -958,81 +960,16 @@ class IncrementalNearDupIndex:
         mode, the version window, ``signed_docs`` (rows through the
         signature pipeline — the churn-proportionality measurement) and
         ``n_candidates``."""
-        base_v = self.docs.latest_version()
-        if base_v is None:
-            raise FileNotFoundError(f"no commits at {self.docs.path}")
-        applied = self.applied_version()
-        if applied is not None and applied >= base_v:
-            return {"mode": "noop", "from": applied, "to": applied,
-                    "signed_docs": 0, "n_candidates": 0}
-        if applied is None:
-            feed = self.docs.read(spark, version=base_v).withColumn(
-                "_change_type", F.lit("insert")
-            )
-            mode = "build"
-        else:
-            try:
-                feed = self.docs.read_changes(
-                    spark, ["doc_id"], applied, base_v,
-                    include_deletes=True,
-                    include_update_preimages=True,
-                )
-            except EmptyChangeFeed:
-                # metadata-only window: watermark stays put (ivm.py's
-                # stance); real misuse ValueErrors now propagate.
-                return {"mode": "noop", "from": applied, "to": base_v,
-                        "signed_docs": 0, "n_candidates": 0}
-            mode = "delta"
-        # Control-plane proof that the window is insert-only: every
-        # commit in (applied, base_v] is an append (log-entry ops, no
-        # data IO). Then the feed carries no deletes/preimages BY
-        # CONSTRUCTION (unique-keyed producer contract, the same
-        # assumption _cdf_single_commit_fast documents), so the
-        # "any removed rows?" probe job and the removed-side anti-join
-        # are skipped outright.
-        insert_only = mode == "build" or all(
-            op == "append" for op in self.docs.window_ops(applied, base_v)
+        return self.group.refresh(
+            spark, self._plan, {"signed_docs": 0, "n_candidates": 0}
         )
-        new_docs = feed.where(
-            F.col("_change_type").isin("insert", "update_postimage")
-        ).persist()
-        removed_ids = feed.where(
-            F.col("_change_type").isin("delete", "update_preimage")
-        ).select("doc_id").distinct()
-        # Runtime hardening of the unique-keyed producer contract
-        # (VERDICT r12 item 4): the insert-only fast path below skips
-        # the MERGE, so a re-appended EXISTING doc_id would silently
-        # duplicate band rows where the rewrite path upserted. One
-        # column-pruned id semi-join (doc_id only — no band/text bytes
-        # read) fails loudly instead; conf-disabled for producers that
-        # enforce uniqueness upstream.
-        if (
-            mode == "delta"
-            and insert_only
-            and self.index.latest_version() is not None
-            and self.docs.verify_insert_only_keys(spark)
-        ):
-            dup = (
-                self.index.read(spark)
-                .select("doc_id")
-                .join(new_docs.select("doc_id"), "doc_id", "left_semi")
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise ValueError(
-                    "insert-only refresh re-appends an EXISTING doc_id: "
-                    "the unique-keyed producer contract is violated — "
-                    "commit updates as update/merge ops (the MERGE path "
-                    "upserts them), or disable "
-                    "spark.de_final_project.verifyInsertOnlyKeys if "
-                    "uniqueness is enforced upstream."
-                )
-        sh_new, sigs_new, new_bands = self._sign(new_docs)
-        new_bands = new_bands.persist()
-        signed = new_docs.count()
 
-        have_index = self.index.latest_version() is not None
+    def _plan(self, w) -> tuple[dict, dict]:
+        spark = w.spark
+        sh_new, new_bands = self._sign(w.new, w.persist)
+        new_bands = w.persist(new_bands)
+        signed = w.new.count()
+
         # ---- verdicts against the PRE-MERGE index + within the batch
         within = (
             new_bands.select(
@@ -1049,7 +986,7 @@ class IncrementalNearDupIndex:
             .select("new_id", "other_id")
         )
         cands = within
-        if have_index:
+        if w.version(self.index) is not None:
             # bucket-pruned probe: only partitions the BATCH's band
             # hashes map to are listed/opened — lossless, because a
             # band-hash match implies an equal bucket. The bucket list
@@ -1057,14 +994,14 @@ class IncrementalNearDupIndex:
             bks = sorted(
                 {r[0] for r in new_bands.select("hbucket").distinct().collect()}
             )
-            stored = self.index.read(
-                spark,
+            stored = w.read(
+                self.index,
                 where="hbucket IN (%s)" % ", ".join(str(b) for b in bks)
                 if bks
                 else "hbucket IS NULL",
             )
-            if not insert_only:
-                stored = stored.join(removed_ids, "doc_id", "left_anti")
+            if not w.insert_only:
+                stored = stored.join(w.removed, "doc_id", "left_anti")
             probe = (
                 new_bands.select(
                     F.col("doc_id").alias("new_id"), "band_idx",
@@ -1081,99 +1018,35 @@ class IncrementalNearDupIndex:
                 .select("new_id", "other_id")
             )
             cands = cands.unionByName(probe)
-        cands = cands.distinct().persist()
+        cands = w.persist(cands.distinct())
         n_cands = cands.count()
 
-        # The verdict commit and the band-index commit are INDEPENDENT:
-        # separate tables (separate log dirs, separate head CAS); the
-        # verdict branch reads cands (persisted, materialized above) +
-        # the PINNED docs snapshot, the index branch reads new_bands
-        # (persisted, materialized) + the feed — neither reads the
-        # table the other commits to. Overlapping them back-fills the
-        # ~1.3–1.9 s/commit staged-write floor of one branch with the
-        # other's verification/staging jobs (guide §2.6; OPTIMIZATION
-        # r12's top deferred item).
-        from de_final_project_spark.session import run_concurrently
-
-        def _commit_verdicts() -> None:
-            verdict = self._verify(spark, cands, sh_new, base_v)
-            if self._applied(self.verdicts) != base_v:
-                if self.verdicts.latest_version() is None:
-                    self.verdicts.overwrite(
-                        verdict, txn=(_NDIDX_APP, base_v)
-                    )
-                else:
-                    self.verdicts.append(verdict, txn=(_NDIDX_APP, base_v))
-
-        # ---- band-index merge: full-row key, bucket-partitioned.
-        # New rows carry sv=base_v (signed-at provenance); stale rows of
-        # updated/removed docs become NULL-sv tombstones built FROM the
-        # stored index (they inherit their real hbucket, so the merge
-        # touches exactly the right partitions). Insert-only batches
-        # skip the tombstone scan — the one refresh step that would
-        # read outside the batch's own buckets.
-        def _commit_index() -> None:
-            new_rows = new_bands.withColumn(
-                "sv", F.lit(base_v).cast("long")
-            )
-            if not have_index:
-                self.index.overwrite(new_rows, txn=(_NDIDX_APP, base_v))
-            elif insert_only:
-                # Control-plane-proven insert-only window: every key
-                # (doc_id, band_idx, band_hash) is NEW (append commits
-                # carry unique doc_ids — the same producer contract the
-                # tombstone skip above rides), so the MERGE's matched
-                # clauses can never fire and the full-outer rewrite of
-                # touched buckets would be the identity on every stored
-                # row. Commit the new band rows as a pointer-list
-                # APPEND instead: O(batch) staging, ZERO stored-index
-                # IO (guide §1.2 — don't compute things you throw away;
-                # auto_compact below still bounds the per-bucket
-                # pointer lists).
-                self.index.append(new_rows, txn=(_NDIDX_APP, base_v))
+        # The verdict branch reads cands (persisted, materialized above)
+        # + the PINNED docs snapshot, the index branch reads new_bands
+        # (persisted, materialized) + the feed — neither reads the table
+        # the other commits to, so the group overlaps them.
+        def verdicts(txn) -> None:
+            verdict = self._verify(spark, cands, sh_new, w.to)
+            if w.version(self.verdicts) is None:
+                self.verdicts.overwrite(verdict, txn=txn)
             else:
-                src = new_rows
-                if removed_ids.limit(1).count() > 0:
-                    tomb = (
-                        self.index.read(spark)
-                        .join(removed_ids, "doc_id", "left_semi")
-                        .join(
-                            new_bands,
-                            ["doc_id", "band_idx", "band_hash"],
-                            "left_anti",
-                        )
-                        .select(
-                            "doc_id", "band_idx", "band_hash", "hbucket",
-                            F.lit(None).cast("long").alias("sv"),
-                        )
-                    )
-                    src = src.unionByName(tomb)
-                self.index.merge_into(
-                    spark,
-                    src,
-                    on=["doc_id", "band_idx", "band_hash"],
-                    matched_update={"sv": "s.sv"},
-                    matched_update_condition="s.sv IS NOT NULL",
-                    matched_delete_condition="s.sv IS NULL",
-                    insert_condition="s.sv IS NOT NULL",
-                    txn=(_NDIDX_APP, base_v),
-                )
+                self.verdicts.append(verdict, txn=txn)
 
-        run_concurrently(_commit_verdicts, _commit_index)
-        for df in (new_docs, new_bands, cands, sh_new, sigs_new):
-            df.unpersist()
-        # small-file lifecycle (VERDICT r11 item 5): per-partition
-        # OPTIMIZE for the bucketed band index, whole-pointer compact
-        # for the append-only verdict relation (each refresh appends a
-        # pointer — unbounded reads-per-file otherwise). No-op unless
-        # some live set reaches the threshold; txn watermarks ride
-        # through compaction commits. Overlapped — disjoint tables.
-        run_concurrently(
-            lambda: self.index.auto_compact(spark),
-            lambda: self.verdicts.auto_compact(spark),
+        # ---- band index: full-row key (bucket-partitioned, so rows
+        # never move partitions); new rows carry sv=w.to (signed-at
+        # provenance), and the rows of updated/removed docs become
+        # NULL-sv tombstones that inherit their real hbucket.
+        def index(txn) -> None:
+            w.upsert(
+                self.index,
+                new_bands.withColumn("sv", F.lit(w.to).cast("long")),
+                ["doc_id", "band_idx", "band_hash"], "sv", txn,
+            )
+
+        return (
+            {self.verdicts: verdicts, self.index: index},
+            {"signed_docs": signed, "n_candidates": n_cands},
         )
-        return {"mode": mode, "from": applied, "to": base_v,
-                "signed_docs": signed, "n_candidates": n_cands}
 
     def read_verdicts(self, spark: SparkSession) -> DataFrame:
         return self.verdicts.read(spark)

@@ -21,11 +21,14 @@ precedent, the streamed IVF index the vector-tier one):
   aggregate at serve time; unpartitioned, its reads are corpus-global).
 
 Each refresh tokenizes ONLY the feed's documents (churn-proportional,
-asserted by the driver query), merges their postings in (update/delete
-by (doc_id, term) — a dropped term of an updated doc is tombstoned by a
-NULL-tf marker row built distributedly from the stored index, never a
-driver-side id list), and txn-stamps the applied version so a crashed
-refresh replays as a no-op.
+asserted by ``incremental_bm25_search``) and merges their postings in
+(update/delete by (doc_id, term) — a dropped term of an updated doc is
+tombstoned by a NULL-tf marker row built distributedly from the stored
+index, never a collected id list). The two tables form one ``RefreshGroup``
+(operators/refresh.py): both commits carry the applied version's txn
+stamp, and a refresh that lands one and fails the other leaves the group
+torn, which the next refresh repairs before it advances — so doclens
+never disagree with the postings that BM25 scores them against.
 
 Query serving recomputes the corpus-global statistics (N, avgdl, df)
 from the INDEX tables at query time — they are aggregate-sized reads,
@@ -46,7 +49,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_final_project_spark.functions.text import tokens
-from de_final_project_spark.operators.txlog import EmptyChangeFeed
 from de_final_project_spark.operators.corpusops import (
     BM25_B,
     BM25_K1,
@@ -79,6 +81,7 @@ def _tbucket_col():
 
 class IncrementalPostingIndex:
     def __init__(self, docs, root: str):
+        from de_final_project_spark.operators.refresh import RefreshGroup
         from de_final_project_spark.operators.txlog import VersionedTable
 
         self.docs = docs
@@ -86,12 +89,13 @@ class IncrementalPostingIndex:
             os.path.join(root, "postings"), partition_col="tbucket"
         )
         self.doclens = VersionedTable(os.path.join(root, "doclens"))
-
-    def applied_version(self) -> int | None:
-        head = self.postings.latest_version()
-        if head is None:
-            return None
-        return self.postings._read_entry(head).get("txn", {}).get(_BMIDX_APP)
+        # the duplicate-key probe reads DOCLENS (doc-count-sized, far
+        # smaller than postings)
+        self.group = RefreshGroup(
+            docs, _BMIDX_APP, (self.postings, self.doclens), "doc_id",
+            probe=self.doclens,
+        )
+        self.applied_version = self.group.applied_version
 
     @staticmethod
     def _tokenize(docs_df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -117,192 +121,23 @@ class IncrementalPostingIndex:
         """Advance the index to the docs head. Report: mode, version
         window, ``tokenized_docs`` (the churn-proportionality
         measurement)."""
-        base_v = self.docs.latest_version()
-        if base_v is None:
-            raise FileNotFoundError(f"no commits at {self.docs.path}")
-        applied = self.applied_version()
-        if applied is not None and applied >= base_v:
-            return {"mode": "noop", "from": applied, "to": applied,
-                    "tokenized_docs": 0}
-        if applied is None:
-            feed = self.docs.read(spark, version=base_v).withColumn(
-                "_change_type", F.lit("insert")
-            )
-            mode = "build"
-        else:
-            try:
-                feed = self.docs.read_changes(
-                    spark, ["doc_id"], applied, base_v,
-                    include_deletes=True,
-                    include_update_preimages=True,
-                )
-            except EmptyChangeFeed:
-                # metadata-only commits in the window: the applied
-                # watermark intentionally stays put (same stance as
-                # ivm.py) — the next real change re-diffs from the same
-                # cheap endpoints. Other ValueErrors (schema misuse)
-                # now propagate instead of masquerading as no-ops.
-                return {"mode": "noop", "from": applied, "to": base_v,
-                        "tokenized_docs": 0}
-            mode = "delta"
-        # Control-plane insert-only proof (same as the near-dup index):
-        # an all-append window carries no deletes/preimages under the
-        # unique-keyed producer contract, so the removed-rows probe job
-        # is skipped without running the feed pipeline.
-        insert_only = mode == "build" or all(
-            op == "append" for op in self.docs.window_ops(applied, base_v)
-        )
-        new_docs = feed.where(
-            F.col("_change_type").isin("insert", "update_postimage")
-        ).persist()
-        removed_ids = feed.where(
-            F.col("_change_type").isin("delete", "update_preimage")
-        ).select("doc_id").distinct()
-        # Runtime hardening of the unique-keyed producer contract
-        # (VERDICT r12 item 4), same stance as the near-dup index: a
-        # re-appended doc_id under the insert-only fast path would
-        # silently duplicate posting/doclen rows. Probe the DOCLENS id
-        # column (doc-count-sized, far smaller than postings) and fail
-        # loudly; conf-disabled for trusted producers.
-        if (
-            mode == "delta"
-            and insert_only
-            and self.doclens.latest_version() is not None
-            and self.docs.verify_insert_only_keys(spark)
-        ):
-            dup = (
-                self.doclens.read(spark)
-                .select("doc_id")
-                .join(new_docs.select("doc_id"), "doc_id", "left_semi")
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise ValueError(
-                    "insert-only refresh re-appends an EXISTING doc_id: "
-                    "the unique-keyed producer contract is violated — "
-                    "commit updates as update/merge ops (the MERGE path "
-                    "upserts them), or disable "
-                    "spark.de_final_project.verifyInsertOnlyKeys if "
-                    "uniqueness is enforced upstream."
-                )
-        new_post, new_dl = self._tokenize(new_docs)
-        new_post = new_post.persist()
-        n_tokenized = new_docs.count()
+        return self.group.refresh(spark, self._plan, {"tokenized_docs": 0})
 
-        # The postings and doclens commits are INDEPENDENT: separate
-        # tables (separate log dirs, separate head CAS), sources derived
-        # from the same persisted new_docs/new_post frames, no shared
-        # uncommitted state. Overlapping them lets the second commit's
-        # staging tasks back-fill executors idled by the first one's
-        # straggler tail + committer walk (guide §2.6) — the measured
-        # ~1.3–1.9 s/commit staged-write floor was the dominant cost of
-        # an append refresh (OPTIMIZATION r12 "Not yet optimized").
-        from de_final_project_spark.session import run_concurrently
-
-        if self.postings.latest_version() is None:
-            run_concurrently(
-                lambda: self.postings.overwrite(
-                    new_post, txn=(_BMIDX_APP, base_v)
+    def _plan(self, w) -> tuple[dict, dict]:
+        new_post, new_dl = self._tokenize(w.new)
+        new_post = w.persist(new_post)
+        n_tokenized = w.new.count()
+        return (
+            {
+                self.postings: lambda txn: w.upsert(
+                    self.postings, new_post, ["doc_id", "term"], "tf", txn
                 ),
-                lambda: self.doclens.overwrite(
-                    new_dl, txn=(_BMIDX_APP, base_v)
+                self.doclens: lambda txn: w.upsert(
+                    self.doclens, new_dl, ["doc_id"], "dl", txn
                 ),
-            )
-        elif insert_only:
-            # Control-plane-proven insert-only window: every posting
-            # key (doc_id, term) and doclen key (doc_id) is NEW (append
-            # commits carry unique doc_ids — the contract the tombstone
-            # skip already rides), so the MERGEs' matched clauses can
-            # never fire and their full-outer rewrites of touched
-            # buckets would be the identity on stored rows. Commit both
-            # deltas as pointer-list APPENDs: O(batch) staging, zero
-            # stored-index IO; auto_compact below bounds the pointer
-            # lists a steady append diet accumulates (guide §1.2).
-            run_concurrently(
-                lambda: self.postings.append(
-                    new_post, txn=(_BMIDX_APP, base_v)
-                ),
-                lambda: self.doclens.append(
-                    new_dl, txn=(_BMIDX_APP, base_v)
-                ),
-            )
-        else:
-            src = new_post
-            # Insert-only batches (the common append corpus) skip the
-            # tombstone pass entirely — it is the only step that reads
-            # the stored index during a refresh, so an append refresh
-            # scans NO index data beyond the buckets its MERGE touches.
-            has_removed = (
-                not insert_only and removed_ids.limit(1).count() > 0
-            )
-            if has_removed:
-                # tombstone markers: the stored (doc_id, term) rows of
-                # removed/updated docs that the new batch does NOT
-                # re-assert — built by joins against the stored index,
-                # no driver lists. tbucket rides along from the stored
-                # row (it is a pure function of term, so it matches).
-                stale = (
-                    self.postings.read(spark)
-                    .join(removed_ids, "doc_id", "left_semi")
-                    .join(new_post, ["doc_id", "term"], "left_anti")
-                    .select(
-                        "doc_id", "term",
-                        F.lit(None).cast("long").alias("tf"), "tbucket",
-                    )
-                )
-                src = new_post.unionByName(stale)
-            if has_removed:
-                gone = (
-                    self.doclens.read(spark)
-                    .join(removed_ids, "doc_id", "left_semi")
-                    .join(new_dl, ["doc_id"], "left_anti")
-                    .select("doc_id", F.lit(None).cast("long").alias("dl"))
-                )
-            else:
-                gone = new_dl.limit(0).select(
-                    "doc_id", F.lit(None).cast("long").alias("dl")
-                )
-            # same independence argument as the append path: the two
-            # MERGEs read/rewrite disjoint tables (each only its own).
-            run_concurrently(
-                lambda: self.postings.merge_into(
-                    spark,
-                    src,
-                    on=["doc_id", "term"],
-                    matched_update={"tf": "s.tf"},
-                    matched_update_condition="s.tf IS NOT NULL",
-                    matched_delete_condition="s.tf IS NULL",
-                    insert_condition="s.tf IS NOT NULL",
-                    txn=(_BMIDX_APP, base_v),
-                ),
-                lambda: self.doclens.merge_into(
-                    spark,
-                    new_dl.unionByName(gone),
-                    on=["doc_id"],
-                    matched_update={"dl": "s.dl"},
-                    matched_update_condition="s.dl IS NOT NULL",
-                    matched_delete_condition="s.dl IS NULL",
-                    insert_condition="s.dl IS NOT NULL",
-                    txn=(_BMIDX_APP, base_v),
-                ),
-            )
-        for df in (new_docs, new_post):
-            df.unpersist()
-        # small-file lifecycle (VERDICT r11 item 5): a long-lived index
-        # still fragments over hundreds of refreshes — per-partition
-        # OPTIMIZE for the bucketed postings, whole-pointer compact for
-        # the unpartitioned doclens once its live set reaches the
-        # threshold. Control-plane no-op when nothing is fragmented;
-        # the txn watermark carries through compaction commits, so
-        # applied_version() is unaffected. Overlapped for the same
-        # reason as the commits — two disjoint tables' lifecycles.
-        run_concurrently(
-            lambda: self.postings.auto_compact(spark),
-            lambda: self.doclens.auto_compact(spark),
+            },
+            {"tokenized_docs": n_tokenized},
         )
-        return {"mode": mode, "from": applied, "to": base_v,
-                "tokenized_docs": n_tokenized}
 
     def bm25_topk(
         self,

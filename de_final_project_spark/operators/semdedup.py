@@ -214,8 +214,12 @@ class IncrementalSemDedup:
     as streaming/pipeline.py streamed_ivf_index); assign, normalize,
     judge all within-cluster pairs, persist three relations (centroids,
     the cluster-partitioned (vec_id, cluster, u) index, and per-vector
-    verdicts), each commit txn-stamped so a crashed refresh replays as
-    a no-op.
+    verdicts). The index and the verdicts form one ``RefreshGroup``
+    (operators/refresh.py): both commits carry the applied version's
+    txn stamp, and a refresh that lands one and fails the other leaves
+    the group torn, which the next refresh repairs before it advances.
+    The centroids table is not a member: its stamp records the corpus
+    version the quantizer was TRAINED on.
 
     Refresh: assign ONLY the feed's vectors to frozen cells, read the
     stored index pruned to the TOUCHED clusters (partition pruning —
@@ -265,6 +269,7 @@ class IncrementalSemDedup:
     def __init__(self, emb: "VersionedTable", root: str):
         import os
 
+        from de_final_project_spark.operators.refresh import RefreshGroup
         from de_final_project_spark.operators.txlog import VersionedTable
 
         self.emb = emb
@@ -273,12 +278,26 @@ class IncrementalSemDedup:
         )
         self.verdicts = VersionedTable(os.path.join(root, "sd_verdicts"))
         self.cents = VersionedTable(os.path.join(root, "sd_centroids"))
-
-    def applied_version(self) -> int | None:
-        head = self.index.latest_version()
-        if head is None:
-            return None
-        return self.index._read_entry(head).get("txn", {}).get(_SD_APP)
+        # A re-inserted id would append a duplicate (vec_id, cluster, u)
+        # index row and inflate every later pair judgment while
+        # verdicts.merge upserts over the symptom, so the probe runs on
+        # EVERY delta window, before any state changes.
+        self.group = RefreshGroup(
+            emb, _SD_APP, (self.verdicts, self.index), "vec_id",
+            probe=self.index,
+            removal_error=(
+                "incremental semdedup requires an INSERT-only feed: an "
+                "updated/deleted embedding invalidates frozen-centroid "
+                "geometry — rebuild the index."
+            ),
+            dup_error=(
+                "incremental semdedup requires NEW vec_ids: the feed "
+                "re-inserts an id already in the index — re-embedding "
+                "invalidates frozen-centroid geometry; rebuild the "
+                "index."
+            ),
+        )
+        self.applied_version = self.group.applied_version
 
     @staticmethod
     def _quantize(emb_df: DataFrame) -> DataFrame:
@@ -333,83 +352,41 @@ class IncrementalSemDedup:
         )
 
     def refresh(self, spark: SparkSession) -> dict:
-        from de_final_project_spark.operators.kmeans import assign_cells
-        from de_final_project_spark.operators.txlog import EmptyChangeFeed
+        return self.group.refresh(
+            spark, self._plan, {"assigned": 0, "flipped": 0}
+        )
 
-        base_v = self.emb.latest_version()
-        if base_v is None:
-            raise FileNotFoundError(f"no commits at {self.emb.path}")
-        applied = self.applied_version()
-        if applied is not None and applied >= base_v:
-            return {"mode": "noop", "from": applied, "to": applied,
-                    "assigned": 0, "flipped": 0}
-        if applied is None:
-            n, k = self._full_train_commit(spark, base_v)
-            return {"mode": "build", "from": None, "to": base_v,
-                    "assigned": n, "flipped": 0}
-        try:
-            # full feed (deletes + preimages) so a non-insert change is
-            # SEEN and refused rather than silently skipped
-            feed = self.emb.read_changes(
-                spark, ["vec_id"], applied, base_v,
-                include_deletes=True,
-                include_update_preimages=True,
-            )
-        except EmptyChangeFeed:
-            return {"mode": "noop", "from": applied, "to": base_v,
-                    "assigned": 0, "flipped": 0}
-        # Control-plane fast path: an all-append window is insert-only
-        # by construction (log-entry ops, no data IO), so the probe job
-        # over the feed is skipped. Any other op shape keeps the data
-        # probe as the semantics of record.
-        all_appends = all(
-            op == "append" for op in self.emb.window_ops(applied, base_v)
-        )
-        if not all_appends and feed.where(
-            F.col("_change_type") != "insert"
-        ).limit(1).count():
-            raise ValueError(
-                "incremental semdedup requires an INSERT-only feed: an "
-                "updated/deleted embedding invalidates frozen-centroid "
-                "geometry — rebuild the index."
-            )
-        new = feed.select("vec_id", "embedding")
-        # refuse re-inserted ids BEFORE any state changes: a duplicate
-        # (vec_id, cluster, u) row would inflate pair judgments in all
-        # later refreshes while verdicts.merge upserts over the
-        # symptom (ADVICE r11). One column-pruned semi-join probe —
-        # the id column only, no embedding bytes read.
-        dup = (
-            self.index.read(spark)
-            .select("vec_id")
-            .join(new.select("vec_id"), "vec_id", "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "incremental semdedup requires NEW vec_ids: the feed "
-                "re-inserts an id already in the index — re-embedding "
-                "invalidates frozen-centroid geometry; rebuild the "
-                "index."
-            )
+    def _plan(self, w) -> tuple[dict, dict]:
+        from de_final_project_spark.functions.pairs import pair_dots_update
+        from de_final_project_spark.operators.kmeans import assign_cells
+
+        spark = w.spark
+        if w.mode == "build":
+            cents, commits, n, _ = self._train(w)
+            # the centroids land FIRST: a retry re-trains the same
+            # quantizer (training is deterministic) and this commit's
+            # stamp makes it a no-op
+            self.cents.overwrite(cents, txn=(_SD_APP, w.to))
+            return commits, {"assigned": n, "flipped": 0}
+        new = w.new.select("vec_id", "embedding")
         centroids = self._frozen(spark)
-        newrows = (
+        newrows = w.persist(
             assign_cells(self._quantize(new), centroids, out="cluster")
             .select("vec_id", F.col("cluster").cast("long").alias("cluster"))
             .join(unit_vectors(new), "vec_id")
-            .persist()
         )
         assigned = newrows.count()
         touched = sorted(
             {r[0] for r in newrows.select("cluster").distinct().collect()}
         )
-        stored = self.index.read(
-            spark,
-            where="cluster IN (%s)" % ", ".join(str(c) for c in touched)
-            if touched
-            else "cluster IS NULL",
-        ).persist()
+        stored = w.persist(
+            w.read(
+                self.index,
+                where="cluster IN (%s)" % ", ".join(str(c) for c in touched)
+                if touched
+                else "cluster IS NULL",
+            )
+        )
         self._guard(
             spark,
             stored.unionByName(newrows.select("vec_id", "cluster", "u"))
@@ -419,19 +396,13 @@ class IncrementalSemDedup:
         # BOTH keep-rule directions in ONE cogrouped pair stage
         # (OPTIMIZATION r13): the stored×new Gram is accumulated once
         # and serves "is the arrival dropped?" (b new) and "does a late
-        # small-id arrival revoke an earlier keep?" (b stored) — the
-        # two pair_dots_between calls this replaces each re-ran that
-        # Gram, and the flip frame additionally re-executed for its
-        # count and again inside the merge source. The thresholded id
-        # frame (churn-sized) is persisted so every consumer — the new
-        # verdicts, the flips, the flip count, the merge staging —
-        # reads one materialization. Values are bit-identical (IEEE
-        # multiply commutes; d-order accumulation unchanged — pinned
-        # by tests/test_pairs.py).
-        from de_final_project_spark.functions.pairs import pair_dots_update
-        from de_final_project_spark.session import run_concurrently
-
-        judged = (
+        # small-id arrival revoke an earlier keep?" (b stored). The
+        # thresholded id frame (churn-sized) is persisted so every
+        # consumer — the new verdicts, the flips, the flip count, the
+        # merge staging — reads one materialization. Values are
+        # bit-identical (IEEE multiply commutes; d-order accumulation
+        # unchanged — pinned by tests/test_pairs.py).
+        judged = w.persist(
             pair_dots_update(
                 stored.select("vec_id", "cluster", "u"),
                 newrows.select("vec_id", "cluster", "u"),
@@ -442,7 +413,6 @@ class IncrementalSemDedup:
             )
             .select("b_id", "b_new")
             .distinct()
-            .persist()
         )
         dropped_new = judged.where(F.col("b_new")).select(
             F.col("b_id").alias("vec_id")
@@ -458,50 +428,32 @@ class IncrementalSemDedup:
             stored.join(flip_ids, "vec_id", "left_semi")
             .select("vec_id", "cluster", F.lit(False).alias("kept"))
         )
-        # stored vec_ids are unique (the dup probe refuses re-inserts),
-        # so |flips| == |flip_ids| — counted off the persisted id frame.
+        # stored vec_ids are unique (the group's probe refuses
+        # re-inserts), so |flips| == |flip_ids| — counted off the
+        # persisted id frame.
         n_flips = flip_ids.count()
-        # the two commits land on DIFFERENT tables and read only
-        # persisted frames — overlap them so the second's staging
-        # back-fills the first's commit tail (guide §2.6)
-        run_concurrently(
-            lambda: self.verdicts.merge(
-                spark,
-                new_verdicts.unionByName(flips),
-                ["vec_id"],
-                txn=(_SD_APP, base_v),
-            ),
-            lambda: self.index.append(
-                newrows.select("vec_id", "cluster", "u"),
-                txn=(_SD_APP, base_v),
-            ),
+        return (
+            {
+                self.verdicts: lambda txn: self.verdicts.merge(
+                    spark, new_verdicts.unionByName(flips), ["vec_id"],
+                    txn=txn,
+                ),
+                self.index: lambda txn: self.index.append(
+                    newrows.select("vec_id", "cluster", "u"), txn=txn
+                ),
+            },
+            {"assigned": assigned, "flipped": n_flips},
         )
-        out = {"mode": "delta", "from": applied, "to": base_v,
-               "assigned": assigned, "flipped": n_flips}
-        judged.unpersist()
-        newrows.unpersist()
-        stored.unpersist()
-        return out
 
-    def _full_train_commit(self, spark: SparkSession, base_v: int):
-        """Train a fresh quantizer on the corpus at ``base_v`` (sampled:
-        vec_id < train_cap, adaptive K), assign everything, recompute
-        the batch keep rule, and overwrite centroids/index/verdicts in
-        txn-stamped commits. Shared by build (first refresh) and
+    def _train(self, w) -> tuple[DataFrame, dict, int, int]:
+        """Train a fresh quantizer on the corpus at ``w.to`` (sampled:
+        vec_id < train_cap, adaptive K), assign everything and recompute
+        the batch keep rule: (centroid frame, one overwrite thunk per
+        group table, corpus size, K). Shared by build (first refresh) and
         :meth:`reoptimize` (drift-triggered re-train) — the two are the
         SAME operation over different corpus states, which is what
         makes the re-train invariant testable: post-reoptimize state
-        must equal a fresh build on the same corpus.
-
-        Stamp discipline: ``txn=(_SD_APP, base_v)`` is the refresh
-        replay guard, and overwrite() SKIPS a commit whose stamp does
-        not advance — a reoptimize at a corpus version the delta
-        refresh already applied would silently drop its verdict/index
-        rewrites (found live: the driver twin's drift query served
-        stale frozen-era assignments). So each table is stamped only
-        when the stamp ADVANCES; otherwise the overwrite goes
-        unstamped, and the existing txn map carries forward across
-        overwrites, keeping the post-retrain refresh a no-op."""
+        must equal a fresh build on the same corpus."""
         from de_final_project_spark.operators.kmeans import (
             _assign,
             choose_k,
@@ -509,66 +461,41 @@ class IncrementalSemDedup:
             train_kmeans_frame,
         )
 
-        full = self.emb.read(spark, version=base_v)
-        qdf = self._quantize(full).persist()
+        spark = w.spark
+        full = self.emb.read(spark, version=w.to)
+        qdf = w.persist(self._quantize(full))
         n = qdf.count()
         k = choose_k(n)
-        cap = train_cap(n, k)
-        train = qdf.where(F.col("vec_id") < cap)
+        train = qdf.where(F.col("vec_id") < train_cap(n, k))
         centroids = train_kmeans_frame(train, k=k)
-        def _stamp(table):
-            head = table.latest_version()
-            applied = (
-                table._read_entry(head).get("txn", {}).get(_SD_APP, -1)
-                if head is not None
-                else -1
-            )
-            return (_SD_APP, base_v) if applied < base_v else None
-
-        rows = (
+        rows = w.persist(
             _assign(qdf, centroids)
             .select("vec_id", F.col("cluster").cast("long").alias("cluster"))
             .join(unit_vectors(full), "vec_id")
-            .persist()
         )
         self._guard(spark, rows.groupBy("cluster").count())
         dropped = self._dropped(rows, rows).withColumn("_d", F.lit(True))
         verdict = rows.join(dropped, "vec_id", "left").select(
             "vec_id", "cluster", F.col("_d").isNull().alias("kept")
         )
-        cents_df = spark.createDataFrame(
+        cents = spark.createDataFrame(
             [(j, [int(v) for v in c]) for j, c in enumerate(centroids)],
             "j bigint, c array<bigint>",
         )
-        # three commits to three DIFFERENT tables off driver-local
-        # centroids and the persisted rows frame (the verdict branch's
-        # pair stage runs inside its own staging job) — overlapped so
-        # the index/centroid commits back-fill the verdict stage's tail
-        # (guide §2.6)
-        from de_final_project_spark.session import run_concurrently
-
-        run_concurrently(
-            lambda: self.cents.overwrite(cents_df, txn=_stamp(self.cents)),
-            lambda: self.verdicts.overwrite(
-                verdict, txn=_stamp(self.verdicts)
+        # the verdict branch's pair stage runs inside its own staging
+        # job; the group overlaps it with the index commit
+        return cents, {
+            self.verdicts: lambda txn: self.verdicts.overwrite(verdict, txn=txn),
+            self.index: lambda txn: self.index.overwrite(
+                rows.select("vec_id", "cluster", "u"), txn=txn
             ),
-            lambda: self.index.overwrite(
-                rows.select("vec_id", "cluster", "u"),
-                txn=_stamp(self.index),
-            ),
-        )
-        qdf.unpersist()
-        rows.unpersist()
-        return n, k
+        }, n, k
 
     def trained_version(self) -> int | None:
         """The embeddings-table version the frozen quantizer last
         trained on (the cents table's txn stamp — set by build and by
         every reoptimize)."""
-        head = self.cents.latest_version()
-        if head is None:
-            return None
-        return self.cents._read_entry(head).get("txn", {}).get(_SD_APP)
+        return self.cents.txn_version(_SD_APP)
 
     @staticmethod
     def _psi_max(ref: DataFrame, cand: DataFrame) -> float:
@@ -591,8 +518,9 @@ class IncrementalSemDedup:
         the cents txn stamp) and everything inserted since. Below the
         threshold: a no-op report. At/above it: re-train sampled
         centroids on the CURRENT corpus, re-assign every vector,
-        recompute the batch keep rule, and overwrite
-        centroids/index/verdicts in txn-stamped commits — after which
+        recompute the batch keep rule, and overwrite the index and the
+        verdicts (``RefreshGroup.commit`` with ``rewrite``: stamped
+        where the stamp advances), then the centroids — after which
         a pending refresh is a no-op (the stamp advanced) and a second
         reoptimize reports no new data.
 
@@ -631,7 +559,12 @@ class IncrementalSemDedup:
         if psi < psi_threshold:
             return {"retrained": False, "max_psi": psi,
                     "trained_on": trained_v, "head": base_v}
-        n, k = self._full_train_commit(spark, base_v)
+        with self.group.window(spark, base_v) as w:
+            cents, commits, n, k = self._train(w)
+            self.group.commit(w, commits, rewrite=True)
+        # the centroids land LAST: their stamp is what says "retrained",
+        # so a reoptimize that failed before it re-runs in full
+        self.cents.overwrite(cents, txn=(_SD_APP, base_v))
         return {"retrained": True, "max_psi": psi, "k": k,
                 "assigned": n, "trained_on": base_v, "head": base_v}
 

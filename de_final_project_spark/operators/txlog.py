@@ -883,6 +883,16 @@ class VersionedTable:
         commit id) — entries dropped by vacuum are skipped."""
         return [self._read_entry(v) for v in self._list_versions()]
 
+    def txn_version(
+        self, app_id: str, version: int | None = None
+    ) -> int | None:
+        """The ``seq`` of the ``txn=(app_id, seq)`` watermark recorded at
+        ``version`` (default: the head) — Delta's per-application txn
+        action. None when the table has no commits or no commit carried
+        ``app_id``."""
+        v = self.latest_version() if version is None else version
+        return None if v is None else self._read_entry(v).get("txn", {}).get(app_id)
+
     def window_ops(self, from_version: int, to_version: int) -> list[str]:
         """The ``op`` of every commit in ``(from_version, to_version]``
         — a control-plane metadata read (log entries only, no data IO).
@@ -2074,11 +2084,9 @@ class VersionedTable:
             keys = self._cols_to_physical(keys)
         delta = self._materialize_generated(delta)
         if txn is not None:
-            head0 = self.latest_version()
-            if head0 is not None:
-                applied = self._read_entry(head0).get("txn", {})
-                if applied.get(txn[0], -1) >= txn[1]:
-                    return head0
+            seen = self.txn_version(txn[0])
+            if seen is not None and seen >= txn[1]:
+                return self.latest_version()
         if self.latest_version() is None:
             # First commit: an overwrite with the txn threaded into the
             # entry itself (post-hoc stamping of a visible entry is a
@@ -2270,11 +2278,9 @@ class VersionedTable:
         df, _cm = self._prep_write(df)
         df = self._materialize_generated(df)
         if txn is not None:
-            head0 = self.latest_version()
-            if head0 is not None:
-                applied = self._read_entry(head0).get("txn", {})
-                if applied.get(txn[0], -1) >= txn[1]:
-                    return head0
+            seen = self.txn_version(txn[0])
+            if seen is not None and seen >= txn[1]:
+                return self.latest_version()
         base = self.latest_version()
         if base is None:
             return self.overwrite(df, txn=txn, op="append", _cm=_cm)
@@ -2493,11 +2499,9 @@ class VersionedTable:
                 }
         source = self._materialize_generated(source)
         if txn is not None:
-            head0 = self.latest_version()
-            if head0 is not None:
-                applied = self._read_entry(head0).get("txn", {})
-                if applied.get(txn[0], -1) >= txn[1]:
-                    return head0
+            seen = self.txn_version(txn[0])
+            if seen is not None and seen >= txn[1]:
+                return self.latest_version()
         src = source.alias("s")
         # SQL three-valued logic, null-safed once (the delete_where NULL
         # lesson): a clause condition evaluating NULL is NOT satisfied.

@@ -131,15 +131,19 @@ def run_concurrently(*thunks):
     last task + commit protocol to finish (guide §2.6 — actions are only
     sequential because driver code calls them sequentially).
 
-    Safety contract, checked by the callers not the helper: the thunks
-    must not share uncommitted state — here they commit to DIFFERENT
-    tables (separate log dirs, separate head CAS), read only persisted /
+    Safety contract, which the helper does not check: the thunks must
+    not share uncommitted state — they commit to DIFFERENT tables
+    (separate log dirs, separate head CAS), read only persisted /
     pinned-version inputs, and never mutate session conf. Concurrent
     jobs schedule FIFO (earlier job first, later ones back-fill), which
     is exactly the overlap wanted; job descriptions are thread-local so
     UI labels stay correct. Returns results in thunk order; if any
     thunk raises, every other thunk is still awaited (no half-run
-    commit left racing the caller) and the first error re-raises."""
+    commit left racing the caller) and the first error re-raises — so
+    some tables may have committed and others not. Sibling tables that
+    must advance together commit through
+    ``operators.refresh.RefreshGroup``, whose next refresh finishes
+    such a torn window."""
     if len(thunks) == 1:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor

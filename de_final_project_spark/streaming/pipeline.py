@@ -557,9 +557,7 @@ def streamed_wap_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
         if batch_df.isEmpty():
             return
         wap_id = f"wap-batch-{batch_id}"
-        head = gold.latest_version()
-        stamps = gold._read_entry(head).get("txn", {}) if head else {}
-        if f"wap:{wap_id}" in stamps:
+        if gold.txn_version(f"wap:{wap_id}") is not None:
             return  # crash-replayed epoch: already published
         sp = batch_df.sparkSession
         v = gold.stage_wap(batch_df, wap_id)
