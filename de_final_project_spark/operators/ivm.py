@@ -29,11 +29,13 @@ Maintenance strategies (classic IVM taxonomy):
   (it does for the identity transform; a derived group key keeps the
   scan full while the shuffle/agg stays churn-sized).
 
-Both strategies land as ONE ``merge_into`` commit on the view's own
-VersionedTable, stamped ``txn=("ivm", base_version)`` — so a crashed
-and re-run refresh is a no-op (the watermark doubles as the applied-
-version record), and the view itself gets time travel, CDF, and
-constraints for free.
+Each view is a one-member ``RefreshGroup`` (operators/refresh.py),
+which owns the watermark and the build/delta/noop decision; the view
+supplies only its transforms. Every refresh lands as ONE commit on the
+view's own VersionedTable, stamped ``txn=("ivm", base_version)`` — so
+a crashed and re-run refresh is a no-op (the watermark doubles as the
+applied-version record), ``fold_changes`` shares the stamp, and the
+view itself gets time travel, CDF, and constraints for free.
 
 Group keys must be non-null (the MERGE key join is SQL equality); the
 refresh raises if the feed produces a NULL group key rather than
@@ -46,12 +48,14 @@ incremental form a 100 TB deployment needs.
 
 from __future__ import annotations
 
+import functools
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from de_final_project_spark.operators.txlog import EmptyChangeFeed, VersionedTable
+from de_final_project_spark.operators.refresh import RefreshGroup
+from de_final_project_spark.operators.txlog import VersionedTable
 
 _APP_ID = "ivm"
 _N = "_ivm_n"  # hidden: live-row count per group (group liveness)
@@ -164,8 +168,6 @@ class IncrementalAggView:
         for g in group_by:
             if g in hidden or g.startswith("_ivm_"):
                 raise ValueError(f"group key {g!r} collides")
-        self.base = base
-        self.keys = list(keys)
         self.group_by = list(group_by)
         self.aggs = dict(aggs)
         # identity transform ⇒ the group keys are BASE columns, which
@@ -174,6 +176,7 @@ class IncrementalAggView:
         self._identity_transform = transform is None
         self.transform = transform if transform is not None else (lambda df: df)
         self.mv = VersionedTable(path)
+        self.group = RefreshGroup([(base, keys)], _APP_ID, (self.mv,))
         # SUM/COUNT fold arithmetically; MIN/MAX/COUNT DISTINCT force
         # the affected groups to be re-aggregated from the base
         # snapshot (a delete needs the runner-up / remaining multiset).
@@ -240,74 +243,53 @@ class IncrementalAggView:
         )
 
     # -------------------------------------------------------- refresh
-    def applied_version(self) -> int | None:
+    def applied_version(self):
         """Base version the view state reflects (the txn watermark)."""
-        return self.mv.txn_version(_APP_ID)
+        return self.group.applied_version()
 
     def refresh(self, spark: SparkSession) -> dict:
         """Advance the view to the base head. Returns a report dict:
         ``mode`` in {"full", "delta", "rescan", "noop"} plus the version
         window applied. One commit per refresh, txn-stamped with the
         base version, so replays are no-ops."""
-        base_v = self.base.latest_version()
-        if base_v is None:
-            raise FileNotFoundError(f"base has no commits: {self.base.path}")
-        applied = self.applied_version()
-        if applied is None:
-            # pinned at base_v: the build must reflect exactly the
-            # version its txn stamp claims (see the rescan note)
-            full = (
-                self.transform(self.base.read(spark, version=base_v))
-                .groupBy(*self.group_by)
-                .agg(*self._full_aggs())
+        return self.group.refresh(spark, self._plan, {})
+
+    def _input(self, *sources: DataFrame) -> DataFrame:
+        """The rows the view aggregates, from its source frames."""
+        return self.transform(sources[0])
+
+    def _full(self, rows: DataFrame) -> DataFrame:
+        return rows.groupBy(*self.group_by).agg(*self._full_aggs())
+
+    def _plan(self, w) -> tuple[dict, dict]:
+        if w.mode == "build":
+            full = self._full(
+                self._input(*map(w.snapshot, range(len(self.group.sources))))
             )
-            self.mv.overwrite(full, txn=(_APP_ID, base_v))
-            return {"mode": "full", "from": None, "to": base_v}
-        if applied >= base_v:
-            return {"mode": "noop", "from": applied, "to": applied}
-        try:
-            feed = self.base.read_changes(
-                spark,
-                self.keys,
-                applied,
-                base_v,
-                include_deletes=True,
-                include_update_preimages=True,
-            )
-        except EmptyChangeFeed:
-            # metadata-only commits between the versions: nothing to
-            # fold. The watermark intentionally stays put — the next
-            # real change re-diffs from the same (cheap) endpoints.
-            return {"mode": "noop", "from": applied, "to": base_v}
+            return {self.mv: lambda txn: self.mv.overwrite(full, txn=txn)}, {
+                "mode": "full"
+            }
         if self._delta_ok:
-            self.fold_changes(spark, feed, base_v)
-            return {"mode": "delta", "from": applied, "to": base_v}
+            signed = self._delta(w)
+            return {
+                self.mv: lambda txn: self._merge_signed(w.spark, signed, txn)
+            }, {}
         # rescan-groups: MIN/MAX present. The feed only names WHICH
-        # groups moved; those groups re-aggregate from the base head
-        # snapshot (the semi-join restricts the re-aggregation —
-        # untouched groups never reach the shuffle, and the scan too
-        # when Catalyst pushes the semi-join through the transform),
-        # and one merge replaces/inserts/deletes them.
-        feed = self.transform(feed)
+        # groups moved; those groups re-aggregate from the base snapshot
+        # at the window's end (the semi-join restricts the
+        # re-aggregation — untouched groups never reach the shuffle, and
+        # the scan too when Catalyst pushes the semi-join through the
+        # transform), and one merge replaces/inserts/deletes them.
+        #
         # One pass over the feed: the distinct group keys are persisted
         # (group-cardinality-sized) and BOTH the null-key rejection and
         # every downstream use (semi-join restriction, merge source)
         # read the cached frame — the feed pipeline (snapshot diffs,
         # DV joins) runs once, not once per consumer.
-        affected = feed.select(*self.group_by).distinct().persist()
-        if affected.where(
-            " OR ".join(f"`{g}` IS NULL" for g in self.group_by)
-        ).limit(1).count():
-            affected.unpersist()
-            raise ValueError(
-                "NULL group key in the change feed — the MERGE key join "
-                "is SQL equality, so a NULL group cannot be maintained"
-            )
-        # read PINNED at the watermark target: a concurrent writer
-        # committing between latest_version() and here must not leak
-        # newer rows into a refresh stamped base_v (time travel makes
-        # snapshot isolation free)
-        #
+        affected = w.persist(
+            self.transform(w.feed).select(*self.group_by).distinct()
+        )
+        self._reject_null_keys(affected)
         # Group-key scan pushdown (guide §6; VERDICT r12 item 5): with
         # an identity transform the group keys are base columns, so the
         # affected set — control-plane-sized, already persisted for the
@@ -323,16 +305,16 @@ class IncrementalAggView:
             if self._identity_transform
             else None
         )
-        recomputed = (
-            self.transform(self.base.read(spark, version=base_v, where=where))
-            .join(affected, self.group_by, "left_semi")
-            .groupBy(*self.group_by)
-            .agg(*self._full_aggs())
+        recomputed = self._full(
+            self.transform(w.snapshot(where=where)).join(
+                affected, self.group_by, "left_semi"
+            )
         )
         # vanished groups (every row deleted) appear in `affected` but
         # not in the recompute: left join marks them with a NULL _N.
-        src = affected.join(recomputed, self.group_by, "left")
-        src = self._align_types(src, spark)
+        src = self._align_types(
+            affected.join(recomputed, self.group_by, "left"), w.spark
+        )
         upd = {_N: f"s.{_N}"}
         for col, (kind, _) in self.aggs.items():
             upd[col] = f"s.{col}"
@@ -340,20 +322,18 @@ class IncrementalAggView:
                 upd[_nn(col)] = f"s.{_nn(col)}"
             if kind == "var_pop":
                 upd[_s2(col)] = f"s.{_s2(col)}"
-        try:
-            self.mv.merge_into(
-                spark,
+        return {
+            self.mv: lambda txn: self.mv.merge_into(
+                w.spark,
                 src,
                 on=self.group_by,
                 matched_update=upd,
                 matched_update_condition=f"s.{_N} IS NOT NULL",
                 matched_delete_condition=f"s.{_N} IS NULL",
                 insert_condition=f"s.{_N} IS NOT NULL",
-                txn=(_APP_ID, base_v),
+                txn=txn,
             )
-        finally:
-            affected.unpersist()
-        return {"mode": "rescan", "from": applied, "to": base_v}
+        }, {"mode": "rescan"}
 
     def _reject_null_keys(self, feed: DataFrame) -> None:
         if feed.where(
@@ -363,6 +343,20 @@ class IncrementalAggView:
                 "NULL group key in the change feed — the MERGE key join "
                 "is SQL equality, so a NULL group cannot be maintained"
             )
+
+    def _delta(self, w) -> DataFrame:
+        """The window's change rows to fold, ``_change_type``-tagged."""
+        return self._signed(w.feed)
+
+    def _signed(self, feed: DataFrame) -> DataFrame:
+        """The transformed change rows, still ``_change_type``-tagged."""
+        feed = self.transform(feed)
+        if "_change_type" not in feed.columns:
+            raise ValueError(
+                "transform dropped _change_type — enrichment must carry "
+                "the change tag through (see the transform contract)"
+            )
+        return feed
 
     def fold_changes(
         self, spark: SparkSession, feed: DataFrame, base_version: int
@@ -380,13 +374,7 @@ class IncrementalAggView:
                 "(COUNT/SUM/AVG/VAR_POP); MIN/MAX views refresh via "
                 "refresh()"
             )
-        feed = self.transform(feed)
-        if "_change_type" not in feed.columns:
-            raise ValueError(
-                "transform dropped _change_type — enrichment must carry "
-                "the change tag through (see the transform contract)"
-            )
-        self._merge_signed(spark, feed, (_APP_ID, base_version))
+        self._merge_signed(spark, self._signed(feed), (_APP_ID, base_version))
 
     def _merge_signed(
         self, spark: SparkSession, signed: DataFrame, txn: tuple[str, int]
@@ -450,13 +438,11 @@ class IncrementalAggView:
 
     def verify(self, spark: SparkSession) -> bool:
         """Anti-entropy check: does the stored view equal a full
-        re-aggregation of the base head? Runs the recompute the view
+        re-aggregation of the source heads? Runs the recompute the view
         exists to avoid — for audits and tests, never the refresh
         path."""
-        full = (
-            self.transform(self.base.read(spark))
-            .groupBy(*self.group_by)
-            .agg(*self._full_aggs())
+        full = self._full(
+            self._input(*(t.read(spark) for t, _ in self.group.sources))
         )
         stored = self._align_types(full, spark)
         mv = self.mv.read(spark)
@@ -497,7 +483,6 @@ class IncrementalAggView:
 
 
 _J_APP_ID = "ivmj"
-_J_SHIFT = 1 << 30  # encodes (fact_version, dim_version) in one stamp
 
 
 class IncrementalJoinAggView(IncrementalAggView):
@@ -517,9 +502,9 @@ class IncrementalJoinAggView(IncrementalAggView):
     expansion — simultaneous churn on both sides is covered exactly.
 
     Contract: the join is many-to-one (dim key unique per version);
-    aggregates must be self-maintainable (COUNT/SUM). The single txn
-    stamp encodes both watermarks as ``f_v * 2^30 + d_v`` — strictly
-    monotone because versions only grow.
+    aggregates must be self-maintainable (COUNT/SUM). The view is a
+    two-source ``RefreshGroup``: its txn stamp is the list ``[fact
+    version, dim version]`` and reports carry ``(fact, dim)`` tuples.
 
     Reference analog: none — this closes the "changing dimension"
     exclusion documented on :class:`IncrementalAggView`."""
@@ -541,11 +526,12 @@ class IncrementalJoinAggView(IncrementalAggView):
                 "IncrementalJoinAggView requires self-maintainable "
                 "aggregates (COUNT/SUM)"
             )
-        self.dim = dim
-        self.dim_keys = list(dim_keys)
         self.fact_on, self.dim_on = on
+        self.group = RefreshGroup(
+            [(fact, fact_keys), (dim, dim_keys)], _J_APP_ID, (self.mv,)
+        )
 
-    def _joined(self, fact_df: DataFrame, dim_df: DataFrame) -> DataFrame:
+    def _input(self, fact_df: DataFrame, dim_df: DataFrame) -> DataFrame:
         # drop by COLUMN REFERENCE, not name: when fact_on == dim_on a
         # name-based drop removes both copies, losing the fact-side key
         # (ADVICE r9)
@@ -553,89 +539,16 @@ class IncrementalJoinAggView(IncrementalAggView):
             dim_df, fact_df[self.fact_on] == dim_df[self.dim_on]
         ).drop(dim_df[self.dim_on])
 
-    def applied_versions(self) -> tuple[int, int] | None:
-        enc = self.mv.txn_version(_J_APP_ID)
-        if enc is None:
-            return None
-        return divmod(enc, _J_SHIFT)
-
-    def refresh(self, spark: SparkSession) -> dict:
-        f_v = self.base.latest_version()
-        d_v = self.dim.latest_version()
-        if f_v is None or d_v is None:
-            raise FileNotFoundError("fact and dim both need commits")
-        enc = f_v * _J_SHIFT + d_v
-        applied = self.applied_versions()
-        if applied is None:
-            full = (
-                self._joined(
-                    self.base.read(spark, version=f_v),
-                    self.dim.read(spark, version=d_v),
-                )
-                .groupBy(*self.group_by)
-                .agg(*self._full_aggs())
-            )
-            self.mv.overwrite(full, txn=(_J_APP_ID, enc))
-            return {"mode": "full", "from": None, "to": (f_v, d_v)}
-        af, ad = applied
-        if (af, ad) == (f_v, d_v):
-            return {"mode": "noop", "from": applied, "to": applied}
+    def _delta(self, w) -> DataFrame:
+        f_feed, d_feed = w.feeds
         terms = []
-        if f_v > af:
-            try:
-                f_feed = self.base.read_changes(
-                    spark, self.keys, af, f_v,
-                    include_deletes=True,
-                    include_update_preimages=True,
-                )
-            except EmptyChangeFeed:
-                f_feed = None
-            if f_feed is not None:
-                terms.append(
-                    self._joined(
-                        f_feed, self.dim.read(spark, version=d_v)
-                    )
-                )
-        if d_v > ad:
-            try:
-                d_feed = self.dim.read_changes(
-                    spark, self.dim_keys, ad, d_v,
-                    include_deletes=True,
-                    include_update_preimages=True,
-                )
-            except EmptyChangeFeed:
-                d_feed = None
-            if d_feed is not None:
-                # the OLD fact snapshot; the join to the dim feed is
-                # itself the changed-keys restriction
-                terms.append(
-                    self._joined(
-                        self.base.read(spark, version=af), d_feed
-                    )
-                )
-        if not terms:
-            return {"mode": "noop", "from": applied, "to": (f_v, d_v)}
-        signed = terms[0]
-        for t in terms[1:]:
-            signed = signed.unionByName(t)
-        self._merge_signed(spark, signed, (_J_APP_ID, enc))
-        return {"mode": "delta", "from": applied, "to": (f_v, d_v)}
-
-    def verify(self, spark: SparkSession) -> bool:
-        full = (
-            self._joined(self.base.read(spark), self.dim.read(spark))
-            .groupBy(*self.group_by)
-            .agg(*self._full_aggs())
-        )
-        stored = self._align_types(full, spark)
-        mv = self.mv.read(spark)
-        cols = mv.columns
-        return (
-            stored.select(cols).exceptAll(mv.select(cols)).limit(1).count()
-            == 0
-            and mv.select(cols).exceptAll(stored.select(cols)).limit(1).count()
-            == 0
-        )
+        if f_feed is not None:
+            terms.append(self._input(f_feed, w.snapshot(1)))
+        if d_feed is not None:
+            # the OLD fact snapshot; the join to the dim feed is
+            # itself the changed-keys restriction
+            terms.append(self._input(w.snapshot(0, old=True), d_feed))
+        return functools.reduce(DataFrame.unionByName, terms)
 
 
 # --------------------------------------------------------------- driver

@@ -881,7 +881,7 @@ class IncrementalNearDupIndex:
         )
         self.verdicts = VersionedTable(os.path.join(root, "verdicts"))
         self.group = RefreshGroup(
-            docs, _NDIDX_APP, (self.verdicts, self.index), "doc_id",
+            [(docs, ["doc_id"])], _NDIDX_APP, (self.verdicts, self.index),
             probe=self.index,
         )
         self.applied_version = self.group.applied_version

@@ -92,7 +92,7 @@ class IncrementalPostingIndex:
         # the duplicate-key probe reads DOCLENS (doc-count-sized, far
         # smaller than postings)
         self.group = RefreshGroup(
-            docs, _BMIDX_APP, (self.postings, self.doclens), "doc_id",
+            [(docs, ["doc_id"])], _BMIDX_APP, (self.postings, self.doclens),
             probe=self.doclens,
         )
         self.applied_version = self.group.applied_version

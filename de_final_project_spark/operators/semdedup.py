@@ -283,7 +283,7 @@ class IncrementalSemDedup:
         # verdicts.merge upserts over the symptom, so the probe runs on
         # EVERY delta window, before any state changes.
         self.group = RefreshGroup(
-            emb, _SD_APP, (self.verdicts, self.index), "vec_id",
+            [(emb, ["vec_id"])], _SD_APP, (self.verdicts, self.index),
             probe=self.index,
             removal_error=(
                 "incremental semdedup requires an INSERT-only feed: an "

@@ -885,11 +885,12 @@ class VersionedTable:
 
     def txn_version(
         self, app_id: str, version: int | None = None
-    ) -> int | None:
+    ) -> int | list[int] | None:
         """The ``seq`` of the ``txn=(app_id, seq)`` watermark recorded at
         ``version`` (default: the head) — Delta's per-application txn
-        action. None when the table has no commits or no commit carried
-        ``app_id``."""
+        action; a multi-source refresh group's ``seq`` is the list of its
+        source versions. None when the table has no commits or no commit
+        carried ``app_id``."""
         v = self.latest_version() if version is None else version
         return None if v is None else self._read_entry(v).get("txn", {}).get(app_id)
 
@@ -1057,7 +1058,8 @@ class VersionedTable:
             )
             applied = dict(head_entry.get("txn", {}))
             if txn is not None:
-                if applied.get(txn[0], -1) >= txn[1]:
+                prev = applied.get(txn[0])
+                if prev is not None and prev >= txn[1]:
                     return head  # already applied: replay is a no-op
                 applied[txn[0]] = txn[1]
             if base is not None:

@@ -1,12 +1,15 @@
-"""Fault injection at every commit point of the multi-table index
-refreshes (operators/refresh.py).
+"""Fault injection at every commit point of the refresh groups
+(operators/refresh.py): the multi-table indexes and the materialized
+views.
 
-Each index's tables get a LogStore wrapper sharing one fault plan, which
+Each group's tables get a LogStore wrapper sharing one fault plan, which
 fails one table's Nth ``put_if_absent`` in one of two ways: it raises
 before the entry is written, or it writes the entry and then raises (a
 lost acknowledgement). For every commit point of near-dup build and
-delta, BM25 build and delta, SemDeDup build and delta and SemDeDup
-``reoptimize``, with and without the source head advancing before the
+delta, BM25 build and delta, SemDeDup build and delta, SemDeDup
+``reoptimize``, the aggregate view's build, delta (COUNT/SUM) and
+rescan (MIN/MAX), and the join view's build and a delta in which both
+feeds change, with and without the source heads advancing before the
 retry, the retries must converge: every table's rows equal, as a
 multiset, those of a fault-free twin driven over the same source
 versions. The twin of ``reoptimize`` is a fresh build over the final
@@ -20,6 +23,10 @@ import threading
 
 import pytest
 
+from de_final_project_spark.operators.ivm import (
+    IncrementalAggView,
+    IncrementalJoinAggView,
+)
 from de_final_project_spark.operators.neardup import IncrementalNearDupIndex
 from de_final_project_spark.operators.searchidx import IncrementalPostingIndex
 from de_final_project_spark.operators.semdedup import IncrementalSemDedup
@@ -121,31 +128,93 @@ def _vecs(spark, rows):
     )
 
 
-# family -> (index class, row frame factory, {path: batches}, tables)
+# the views' bases: a dozen rows in three groups; the join view's dim
+# gains a key in each later batch, so both feeds change in one window
+_ROWS = [(i, "abc"[i % 3], float(i)) for i in range(12)]
+_ROW_BATCHES = (_ROWS[:6], _ROWS[6:9], _ROWS[9:])
+_FACT = [(i, i % 4, float(i)) for i in range(12)]
+_JOIN_BATCHES = (
+    (_FACT[:6], [(0, "g0"), (1, "g1"), (2, "g2")]),
+    (_FACT[6:9], [(3, "g3")]),
+    (_FACT[9:], [(4, "g4")]),
+)
+_SUM = {"cnt": ("count", ""), "sv": ("sum", "CAST(v AS DECIMAL(12,2))")}
+_MINMAX = {"cnt": ("count", ""), "mn": ("min", "v"), "mx": ("max", "v")}
+
+
+def _on_src(frame):
+    """Every batch lands on the one source table, ``src``."""
+    return lambda spark, rows: {"src": frame(spark, rows)}
+
+
+def _index(cls):
+    return lambda srcs, root, path: cls(srcs["src"], root)
+
+
+def _agg_view(srcs, root, path):
+    return IncrementalAggView(
+        srcs["src"], root, keys=["id"], group_by=["g"],
+        aggs=_MINMAX if path == "rescan" else _SUM,
+    )
+
+
+def _join_view(srcs, root, path):
+    return IncrementalJoinAggView(
+        srcs["fact"], srcs["dim"], root, fact_keys=["id"], dim_keys=["k"],
+        on=("k", "k"), group_by=["grp"], aggs=_SUM,
+    )
+
+
+def _join_frames(spark, batch):
+    fact, dim = batch
+    return {
+        "fact": spark.createDataFrame(fact, "id long, k long, v double"),
+        "dim": spark.createDataFrame(dim, "k long, grp string"),
+    }
+
+
+# family -> (group maker (sources, root, path), batch -> {source:
+# frame}, {path: batches}, tables)
 _FAMILIES = {
     "neardup": (
-        IncrementalNearDupIndex, _docs,
+        _index(IncrementalNearDupIndex), _on_src(_docs),
         {"build": _DOC_BATCHES, "delta": _DOC_BATCHES},
         lambda x: {"index": x.index, "verdicts": x.verdicts},
     ),
     "bm25": (
-        IncrementalPostingIndex, _docs,
+        _index(IncrementalPostingIndex), _on_src(_docs),
         {"build": _DOC_BATCHES, "delta": _DOC_BATCHES},
         lambda x: {"postings": x.postings, "doclens": x.doclens},
     ),
     "semdedup": (
-        IncrementalSemDedup, _vecs,
+        _index(IncrementalSemDedup), _on_src(_vecs),
         {"build": _VEC_BATCHES, "delta": _VEC_BATCHES,
          "reoptimize": _DRIFT_BATCHES},
         lambda x: {"index": x.index, "verdicts": x.verdicts, "cents": x.cents},
     ),
+    "view": (
+        _agg_view,
+        _on_src(lambda s, rows: s.createDataFrame(
+            rows, "id long, g string, v double")),
+        {"build": _ROW_BATCHES, "delta": _ROW_BATCHES,
+         "rescan": _ROW_BATCHES},
+        lambda x: {"mv": x.mv},
+    ),
+    "joinview": (
+        _join_view, _join_frames,
+        {"build": _JOIN_BATCHES, "delta": _JOIN_BATCHES},
+        lambda x: {"mv": x.mv},
+    ),
 }
 
 # The operations before the faulted one: a batch index lands that batch
-# on the source (the first as an overwrite), "R" refreshes.
-_PREFIX = {"build": [0], "delta": [0, "R", 1], "reoptimize": [0, "R", 1, "R"]}
-# The batch the source head advances by before the retry.
-_ADVANCE = {"build": 1, "delta": 2, "reoptimize": 2}
+# on its sources (the first as an overwrite), "R" refreshes.
+_PREFIX = {
+    "build": [0], "delta": [0, "R", 1], "rescan": [0, "R", 1],
+    "reoptimize": [0, "R", 1, "R"],
+}
+# The batch the source heads advance by before the retry.
+_ADVANCE = {"build": 1, "delta": 2, "rescan": 2, "reoptimize": 2}
 
 
 def _land(src: VersionedTable, frame) -> None:
@@ -166,17 +235,19 @@ def _rows(spark, tables: dict) -> dict:
 
 
 class _Run:
-    """One index over its own source, with the wrapped stores; opened on
-    a copy of ``prefix`` (a finished run's root) when given."""
+    """One group over its own sources, with the wrapped stores; opened
+    on a copy of ``prefix`` (a finished run's root) when given."""
 
     def __init__(self, spark, root, family: str, path: str, prefix=None):
-        cls, frame, batches, tables = _FAMILIES[family]
+        make, frames, batches, tables = _FAMILIES[family]
         if prefix is not None:
             shutil.copytree(prefix, root, dirs_exist_ok=True)
         self.spark = spark
-        self.batches = [frame(spark, b) for b in batches[path]]
-        self.src = VersionedTable(str(root / "src"))
-        self.idx = cls(self.src, str(root / "idx"))
+        self.batches = [frames(spark, b) for b in batches[path]]
+        self.srcs = {
+            name: VersionedTable(str(root / name)) for name in self.batches[0]
+        }
+        self.idx = make(self.srcs, str(root / "idx"), path)
         self.tables = tables(self.idx)
         self.faults = _Faults()
         for name, t in self.tables.items():
@@ -186,17 +257,22 @@ class _Run:
         if step == "R":
             self.refresh()
         else:
-            _land(self.src, self.batches[step])
+            for name, frame in self.batches[step].items():
+                _land(self.srcs[name], frame)
+
+    def head(self):
+        """The source heads, as the group reports versions."""
+        heads = tuple(t.latest_version() for t, _ in self.idx.group.sources)
+        return heads[0] if len(heads) == 1 else heads
 
     def refresh(self) -> dict:
         return self.idx.refresh(self.spark)
 
-    def op(self, path: str) -> None:
+    def op(self, path: str) -> dict:
         """The operation the path faults: a refresh, or a re-train."""
         if path == "reoptimize":
-            self.idx.reoptimize(self.spark, psi_threshold=0.2)
-        else:
-            self.refresh()
+            return self.idx.reoptimize(self.spark, psi_threshold=0.2)
+        return self.refresh()
 
     def rows(self) -> dict:
         return _rows(self.spark, self.tables)
@@ -204,7 +280,8 @@ class _Run:
 
 # (family, path) -> {table: commits it takes during the path's faulted
 # operation}; the tables commit concurrently, in no fixed order. The
-# doclens' second commit is its auto_compact pass.
+# doclens' second commit is its auto_compact pass; a view lands each
+# refresh in one commit (its auto_compact pass adds none).
 _COMMIT_POINTS = {
     ("neardup", "build"): {"index": 1, "verdicts": 1},
     ("neardup", "delta"): {"index": 1, "verdicts": 1},
@@ -213,6 +290,11 @@ _COMMIT_POINTS = {
     ("semdedup", "build"): {"index": 1, "verdicts": 1, "cents": 1},
     ("semdedup", "delta"): {"index": 1, "verdicts": 1},
     ("semdedup", "reoptimize"): {"index": 1, "verdicts": 1, "cents": 1},
+    ("view", "build"): {"mv": 1},
+    ("view", "delta"): {"mv": 1},
+    ("view", "rescan"): {"mv": 1},
+    ("joinview", "build"): {"mv": 1},
+    ("joinview", "delta"): {"mv": 1},
 }
 
 
@@ -253,7 +335,7 @@ def _faulted(run: _Run, path, table, n, mode, advance) -> set:
         run.step(_ADVANCE[path])
     if path == "reoptimize":
         run.op(path)
-        assert run.idx.trained_version() == run.src.latest_version()
+        assert run.idx.trained_version() == run.head()
     for _ in range(4):
         mode_ = run.refresh()["mode"]
         applied.add(run.idx.group.applied_version())
@@ -261,8 +343,7 @@ def _faulted(run: _Run, path, table, n, mode, advance) -> set:
             break
     else:
         pytest.fail("retries did not converge")
-    head = run.src.latest_version()
-    assert run.idx.group.stamps() == [head] * len(run.idx.group.tables)
+    assert run.idx.group.stamps() == [run.head()] * len(run.idx.group.tables)
     return applied - {None}
 
 
@@ -274,7 +355,7 @@ def _twin_rows(spark, root, family, path, advance, applied) -> dict:
     steps += [_ADVANCE[path]] if advance else []
     for s in steps:
         twin.step(s)
-        if path != "reoptimize" and twin.src.latest_version() in applied:
+        if path != "reoptimize" and twin.head() in applied:
             twin.refresh()
     if path == "reoptimize":
         twin.refresh()
@@ -353,20 +434,23 @@ def test_repeated_commit_point_converges(
 @pytest.mark.parametrize("family,path", list(_COMMIT_POINTS))
 def test_grid_names_every_commit_point(spark, tmp_path, prefixes, family, path):
     """The grid is complete: a fault-free run of each path's operation
-    commits to exactly the listed tables, the listed number of times."""
+    commits to exactly the listed tables, the listed number of times,
+    and a view's path runs its strategy."""
     run = _Run(spark, tmp_path, family, path, prefix=prefixes(family, path))
     run.faults.arm("-", 0, "raise")  # zero the counts; never fires
-    run.op(path)
+    report = run.op(path)
     assert run.faults.counts == _COMMIT_POINTS[(family, path)]
+    if family in ("view", "joinview"):
+        assert report["mode"] == {"build": "full"}.get(path, path)
 
 
 # ----------------------------------------------- named regressions
 def _fresh_rows(spark, root, family) -> dict:
     """A fault-free build over all 24 docs."""
-    cls, _, _, tables = _FAMILIES[family]
+    make, _, _, tables = _FAMILIES[family]
     src = VersionedTable(str(root / "src"))
     src.overwrite(_docs(spark, _DOCS))
-    idx = cls(src, str(root / "idx"))
+    idx = make({"src": src}, str(root / "idx"), "build")
     idx.refresh(spark)
     return _rows(spark, tables(idx))
 
@@ -379,12 +463,12 @@ def _two_window_run(spark, root, family, table, advance=False) -> _Run:
     run.step(0)
     run.refresh()
     rest = _DOCS[10:17] if advance else _DOCS[10:]
-    _land(run.src, _docs(spark, rest))
+    _land(run.srcs["src"], _docs(spark, rest))
     run.faults.arm(table, 1, "raise")
     with pytest.raises(InjectedFault):
         run.refresh()
     if advance:
-        _land(run.src, _docs(spark, _DOCS[17:]))
+        _land(run.srcs["src"], _docs(spark, _DOCS[17:]))
     for _ in range(4):
         if run.refresh()["mode"] == "noop":
             break
@@ -423,3 +507,18 @@ def test_neardup_torn_window_is_not_reapplied_past_the_head(spark, tmp_path):
     )
     got = run.rows()["verdicts"]
     assert len(got) == len(set(got)) == 204
+
+
+def test_stamp_without_a_version_per_source_is_refused():
+    """A two-source group whose member carries a one-int stamp (the
+    retired join-view encoding) refuses to refresh instead of reading
+    it as a watermark."""
+    from de_final_project_spark.operators.refresh import RefreshGroup
+    from de_final_project_spark.operators.txlog import ConditionalPutLogStore
+
+    mv = VersionedTable("/nonexistent/mv", log_store=ConditionalPutLogStore())
+    mv._commit(None, [], "overwrite", lambda h, e: ({}, [], {}),
+               txn=("ivmj", 5 * 2**30 + 3))
+    group = RefreshGroup([(None, ["id"]), (None, ["k"])], "ivmj", (mv,))
+    with pytest.raises(ValueError, match="one version per source"):
+        group.applied_version()

@@ -315,3 +315,21 @@ def test_landed_txn_wins_over_a_conflicting_rebase():
         t._commit(1, ["a"], "merge",
                   _build("merge", "O", ["a"], t, base_entry),
                   txn=("app", 4))
+
+
+def test_list_txn_stamp_commits_replays_and_advances():
+    """A refresh group over several sources stamps the list of their
+    versions. The first list stamp on a table without one commits, the
+    same stamp replayed is a no-op that returns the head, and a list
+    larger in one component commits."""
+    t = _seeded(ConditionalPutLogStore())
+
+    def merge(tag: str, stamp: list[int]) -> int:
+        return t._commit(None, ["a"], "merge",
+                         _build("merge", tag, ["a"], t, None),
+                         txn=("mv", stamp))
+
+    assert merge("T", [3, 5]) == 2
+    assert merge("O", [3, 5]) == 2 == t.latest_version()
+    assert merge("U", [3, 6]) == 3
+    assert t.txn_version("mv") == [3, 6]
