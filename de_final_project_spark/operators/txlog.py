@@ -1,9 +1,7 @@
 """Minimal transaction-log table format ("lakehouse-lite").
 
-The rename-based MERGE (operators/merge.py) gives partition-level
-atomicity but still mutates the live directory — the step beyond it
-(VERDICT r5, What's-missing 3) is the Delta/Iceberg idea: DATA FILES ARE
-IMMUTABLE; a tiny log says which files are live. Then
+The Delta/Iceberg idea: DATA FILES ARE IMMUTABLE; a tiny log says
+which files are live, so no write ever mutates a live directory. Then
 
 - commit = write new files (invisible until referenced) + atomically
   create ONE small log entry. A crash anywhere before the log create
@@ -63,8 +61,7 @@ group is ONE parquet scan with ``basePath`` set to the commit dir (so
 Spark's partition discovery restores the partition column); the plan
 holds O(live commits) scans — bounded by vacuum/compaction — not
 O(partitions). Cost of MERGE is O(touched partitions) new data plus one
-log write, the touched-file bound the copy-on-write rename MERGE only
-approximates.
+log write: the touched-file bound at partition granularity.
 
 Reference analog: none — the reference overwrites whole tables
 (src/warehousing_lambda.py:64-71); this is the transactional layer a
@@ -1205,41 +1202,32 @@ class VersionedTable:
             list(entry.get("colmap_used", sorted(set(cm.values())))),
         )
 
+    def _head(self) -> tuple[int | None, dict | None]:
+        """The head version and its entry; (None, None) before the
+        first commit."""
+        v = self.latest_version()
+        return v, (self._read_entry(v) if v is not None else None)
+
     def _head_colmap(self):
-        head = self.latest_version()
-        if head is None:
-            return None
-        return self._colmap_state(self._read_entry(head))
+        return self._colmap_state(self._head()[1])
 
-    def _prep_write(self, df: DataFrame) -> tuple[DataFrame, dict]:
-        """Translate a LOGICAL frame to physical file names and return
-        (physical frame, commit-entry mapping fields). New logical
-        columns (additive evolution under mapping) are bound to fresh
-        physical names collision-checked against every name ever used;
-        writes naming a dropped column are rejected. No-op ({} fields)
-        when mapping is disabled — the zero-cost default path. Widened
-        columns are cast to their recorded target type so post-widen
-        files land physically wide (the read-side cast then only pays
-        for pre-widen file generations)."""
-
-        def _widen_out(phys_df: DataFrame) -> DataFrame:
-            widened = self._head_widen()
-            todo = {
-                c: t for c, t in widened.items() if c in phys_df.columns
-            }
-            if not todo:
-                return phys_df
-            return phys_df.select(
-                *[
-                    F.col(f"`{c}`").cast(todo[c]).alias(c) if c in todo
-                    else F.col(f"`{c}`")
-                    for c in phys_df.columns
-                ]
-            )
-
-        st = self._head_colmap()
+    def _prep_write(
+        self, df: DataFrame, entry: dict | None
+    ) -> tuple[DataFrame, dict]:
+        """Translate a LOGICAL frame to physical file names under the
+        column mapping of ``entry`` (the version the write is based on,
+        None for an empty table) and return (physical frame, commit-entry
+        mapping fields). New logical columns (additive evolution under
+        mapping) are bound to fresh physical names collision-checked
+        against every name ever used; writes naming a dropped column are
+        rejected. No-op ({} fields) when mapping is disabled — the
+        zero-cost default path. Widened columns are cast to their
+        recorded target type so post-widen files land physically wide
+        (the read-side cast then only pays for pre-widen file
+        generations)."""
+        st = self._colmap_state(entry)
         if st is None:
-            return _widen_out(df), {}
+            return self._apply_widen(df, entry), {}
         cmap, dropped, used = st
         bad = sorted(set(df.columns) & set(dropped))
         if bad:
@@ -1265,11 +1253,23 @@ class VersionedTable:
         fields: dict = {"colmap": cmap, "colmap_used": used}
         if dropped:
             fields["dropped_cols"] = dropped
-        return _widen_out(df), fields
+        return self._apply_widen(df, entry), fields
 
-    def _cols_to_physical(self, cols: Sequence[str]) -> list[str]:
-        """Map logical column names (keys, zorder dims) to physical."""
-        st = self._head_colmap()
+    def _check_colmap(self, st, head_entry: dict) -> None:
+        """A blind writer's staged files carry the physical names of the
+        mapping ``st`` it was translated under, so its entry cannot be
+        rebuilt under a newer mapping: a rename or drop that landed
+        since is a conflict (re-read and retry), never reverted."""
+        if self._colmap_state(head_entry) != st:
+            raise ConcurrentWriteError(
+                "the column mapping changed between this write's staging "
+                "and its commit; re-read and retry"
+            )
+
+    @staticmethod
+    def _cols_to_physical(cols: Sequence[str], st) -> list[str]:
+        """Map logical column names (keys, zorder dims) to physical
+        under the mapping state ``st``."""
         if st is None:
             return list(cols)
         cmap, dropped, _ = st
@@ -1468,14 +1468,8 @@ class VersionedTable:
     def _widen_state(self, entry: dict | None) -> dict[str, str]:
         return dict(entry.get("widened", {})) if entry else {}
 
-    def _head_widen(self) -> dict[str, str]:
-        head = self.latest_version()
-        if head is None:
-            return {}
-        return self._widen_state(self._read_entry(head))
-
     def _apply_widen(
-        self, df: DataFrame | None, entry: dict
+        self, df: DataFrame | None, entry: dict | None
     ) -> DataFrame | None:
         """Cast the physical columns named by ``entry``'s widen map to
         their recorded target types — the read-side half of the
@@ -1523,7 +1517,7 @@ class VersionedTable:
                 "decimal scale/integral-digit growth); narrowing would "
                 "silently corrupt out-of-range rows"
             )
-        widened = self._head_widen()
+        widened = self._widen_state(self._head()[1])
         widened[phys] = new_type.lower()
         return self._commit_metadata(
             "widen_column",
@@ -1988,7 +1982,6 @@ class VersionedTable:
         df: DataFrame,
         txn: tuple[str, int] | None = None,
         op: str = "overwrite",
-        _cm: dict | None = None,
     ) -> int:
         """Full-snapshot commit: every live partition now points at the
         new commit dir. Old versions stay readable until vacuum.
@@ -1997,25 +1990,22 @@ class VersionedTable:
         contract as merge) — never stamped onto an already-visible
         entry after the fact, because a concurrent writer could read
         the unstamped entry and propagate a txn map without our
-        watermark, losing the idempotence guarantee (ADVICE r6).
-
-        ``_cm`` (internal): the frame is already in physical column
-        names and these are the commit's mapping fields — set by
-        callers (merge/append/merge_into) that translated upstream;
-        public calls translate here."""
-        if _cm is None:
-            df, _cm = self._prep_write(df)
+        watermark, losing the idempotence guarantee (ADVICE r6)."""
+        entry = self._head()[1]
+        df, cm = self._prep_write(df, entry)
+        st = self._colmap_state(entry)
         df = self._materialize_generated(df)
         rel, parts, files = self._stage(df)
 
         def build(head: int, head_entry: dict):
+            self._check_colmap(st, head_entry)
             live = {
                 p: _ptr(rel, sub, head + 1, files.get(p))
                 for p, sub in parts.items()
             }
             # a full-snapshot rewrite reads THROUGH the tombstones
             # (read() applies them), so the dv list resets
-            return live, [], _cm
+            return live, [], cm
 
         # txn watermarks survive overwrites: idempotence tracking must
         # not reset when the data is replaced
@@ -2030,25 +2020,25 @@ class VersionedTable:
         merge_schema: bool = False,
         moving_keys: bool = False,
         probe_no_match: bool = False,
-        _cm: dict | None = None,
     ) -> int:
-        """Keyed upsert with touched-partition granularity. By default
-        the partition column must be a pure function of the key (same
-        invariant as merge_upsert_partitioned): touched partitions are
-        discovered from the DELTA's partition values alone, so an
-        update whose row CURRENTLY lives in a different partition would
-        silently leave the stale copy there — a duplicate key, not an
-        error. When updates can move rows across partitions (a
-        re-clustered cell id, a changed bucketing attribute), pass
-        ``moving_keys=True``: one column-pruned probe over the live
-        snapshot (key + partition columns only) finds where the delta's
-        keys currently live and adds those partitions to the touched
-        set, so the old copies are rewritten away — Delta MERGE's
-        touched-file discovery, priced as one key-column scan and paid
-        only when the caller opts in. Data for touched partitions is
-        rewritten into a new commit dir; untouched partitions keep
-        their existing file references — no data IO at all for them,
-        not even a directory rename.
+        """Keyed upsert with touched-partition granularity: the delta row
+        wins on every matched key, unmatched delta rows insert. By
+        default the partition column must be a pure function of the key
+        (the table invariant): touched partitions are discovered from
+        the DELTA's partition values alone, so an update whose row
+        CURRENTLY lives in a different partition would silently leave
+        the stale copy there — a duplicate key, not an error. When
+        updates can move rows across partitions (a re-clustered cell id,
+        a changed bucketing attribute), pass ``moving_keys=True``: one
+        column-pruned probe over the live snapshot (key + partition
+        columns only) finds where the delta's keys currently live and
+        adds those partitions to the touched set, so the old copies are
+        rewritten away (a partition left empty is dropped) — Delta
+        MERGE's touched-file discovery, priced as one key-column scan
+        and paid only when the caller opts in. Data for touched
+        partitions is rewritten into a new commit dir; untouched
+        partitions keep their existing file references — no data IO at
+        all for them.
 
         ``txn=(app_id, seq)`` makes the merge IDEMPOTENT per application
         stream: the log records the highest ``seq`` applied per
@@ -2080,186 +2070,306 @@ class VersionedTable:
         way, so the flag only ever changes the plan. Callers whose
         deltas are typically all-new keys (event/vector ingest sinks)
         should pass it."""
-        keys = list(keys)
-        if _cm is None:
-            delta, _cm = self._prep_write(delta)
-            keys = self._cols_to_physical(keys)
-        delta = self._materialize_generated(delta)
+        return self._merge(
+            spark, delta, keys, txn, merge_schema=merge_schema,
+            moving_keys=moving_keys, probe_no_match=probe_no_match,
+        )
+
+    def merge_into(
+        self,
+        spark: SparkSession,
+        source: DataFrame,
+        on: Sequence[str],
+        *,
+        matched_update: dict[str, str] | None = None,
+        matched_update_condition: str | None = None,
+        matched_delete_condition: str | bool | None = None,
+        insert_unmatched: bool = True,
+        insert_condition: str | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> int:
+        """The full MERGE INTO grammar (Delta's WHEN clauses):
+
+        - WHEN MATCHED [AND matched_update_condition] THEN UPDATE SET
+          ``matched_update`` ({col -> SQL expr over ``t.<col>`` target /
+          ``s.<col>`` source qualifiers});
+        - WHEN MATCHED [AND matched_delete_condition] THEN DELETE
+          (pass ``True`` for unconditional; evaluated AFTER the update
+          clause — first matching clause wins, Delta's in-order rule);
+        - WHEN NOT MATCHED [AND insert_condition] THEN INSERT * (source
+          row as-is; ``insert_unmatched=False`` drops unmatched source
+          rows, the update-only MERGE).
+
+        Matched rows satisfying neither clause keep their target values
+        byte-identical; target rows with no source match are never
+        touched, and live in partitions the commit does not rewrite at
+        all (the table invariant: the partition column is a pure
+        function of the key, so a key's target row lives in the same
+        partition its source row names). Assignments cast to the
+        table's column type (its widened type after widen_column);
+        constraints/stats flow through staging like every other write;
+        it commits as op 'merge' (see _CONFLICTS), with merge's ``txn``
+        idempotence. Reference analog: none — this is the lakehouse DML
+        surface (VERDICT r7 item 2 family).
+
+        :meth:`merge` and this method are one MERGE body
+        (:meth:`_merge`): the same name translation, touched-partition
+        discovery, schema rules and commit. Only the plan differs. The
+        WHEN clauses take one full outer join on the key within the
+        touched partitions; merge's unconditional upsert unions the
+        source with the left-anti survivors; and merge's
+        ``probe_no_match`` commits an all-new-key source as a
+        pointer-list append."""
+        return self._merge(
+            spark, source, on, txn,
+            clauses={
+                "update": matched_update,
+                "update_if": matched_update_condition,
+                "delete_if": matched_delete_condition,
+                "insert": insert_unmatched,
+                "insert_if": insert_condition,
+            },
+        )
+
+    def _merge(
+        self,
+        spark: SparkSession,
+        source: DataFrame,
+        keys: Sequence[str],
+        txn: tuple[str, int] | None,
+        *,
+        merge_schema: bool = False,
+        moving_keys: bool = False,
+        probe_no_match: bool = False,
+        clauses: dict | None = None,
+    ) -> int:
+        """The one MERGE body behind :meth:`merge` (``clauses`` None:
+        the source row wins on every matched key) and
+        :meth:`merge_into` (``clauses``: its WHEN arguments). It owns,
+        once, every concern the two share:
+
+        - name translation: the source frame, the keys and every clause
+          string arrive in LOGICAL names and are translated under the
+          base entry's column mapping; everything below runs in
+          physical name space;
+        - generated columns, the txn check, the first commit (an
+          overwrite carrying the txn) and one persist of the source
+          (Delta's merge-source materialization: the touched-partition
+          discovery, the key probes and the staged write would each
+          re-run a possibly expensive upstream pipeline);
+        - touched partitions: the source's partition values, plus, with
+          ``moving_keys``, the partitions its keys live in now;
+        - the schema rules, against the FULL live snapshot rather than
+          the touched partitions' files (after an evolution those may
+          be narrower than the table, and judging by them would make
+          acceptance partition-dependent), and under column mapping
+          against its mapped columns only (a dropped column's bytes
+          still sit in old files but are not part of the schema);
+        - the touched partitions read at that full, widened schema;
+        - staging, and one commit through :meth:`_commit_delete`, which
+          drops a touched partition left with no rows.
+
+        The one branch is the plan: ``probe_no_match`` with no match
+        appends the staged source to the pointer lists, an upsert
+        unions the source with the left-anti survivors, and WHEN
+        clauses take one full outer join on the key."""
+        base, entry = self._head()
+        source, cm = self._prep_write(source, entry)
+        st = self._colmap_state(entry)
+        keys = self._cols_to_physical(keys, st)
+        pc = self.partition_col
+        if clauses is not None:
+            clauses = {
+                k: self._predicate_to_physical(v, st) if isinstance(v, str)
+                else v
+                for k, v in clauses.items()
+            }
+            if clauses["update"] is not None:
+                clauses["update"] = {
+                    self._cols_to_physical([c], st)[0]:
+                    self._predicate_to_physical(e, st)
+                    for c, e in clauses["update"].items()
+                }
+                if pc and pc in clauses["update"]:
+                    raise ValueError(
+                        f"cannot assign partition column '{pc}'"
+                        " (rows may not move partitions)"
+                    )
+        source = self._materialize_generated(source)
         if txn is not None:
             seen = self.txn_version(txn[0])
             if seen is not None and seen >= txn[1]:
                 return self.latest_version()
-        if self.latest_version() is None:
-            # First commit: an overwrite with the txn threaded into the
-            # entry itself (post-hoc stamping of a visible entry is a
-            # race — a concurrent writer could propagate the unstamped
-            # txn map first).
-            return self.overwrite(delta, txn=txn, _cm=_cm)
-        base_version = self.latest_version()
-        entry = self._read_entry(base_version)
-        # Materialize the delta ONCE (Delta Lake's merge-source
-        # materialization): it is otherwise re-evaluated for the
-        # touched-partition discovery, the broadcast key build AND the
-        # staged write — three full runs of a possibly expensive
-        # upstream pipeline. O(churn) blocks, released in the finally.
-        delta = delta.persist()
+        # SQL three-valued logic, null-safed once (the delete_where NULL
+        # lesson): a clause condition evaluating NULL is NOT satisfied.
+        _sat = lambda c: F.coalesce(c.cast("boolean"), F.lit(False))  # noqa: E731
+        ins_cond, inserts = None, source
+        if clauses is not None:
+            # an update-only MERGE drops unmatched source rows on EVERY
+            # plan, the full outer join included
+            ins_cond = (
+                F.lit(False) if not clauses["insert"]
+                else _sat(F.expr(clauses["insert_if"]))
+                if clauses["insert_if"] else F.lit(True)
+            )
+            inserts = source.alias("s").where(ins_cond).select(*source.columns)
+        if base is None:
+            if clauses is not None and not clauses["insert"]:
+                raise FileNotFoundError(
+                    f"no commits at {self.path} and insert_unmatched=False"
+                )
+            return self.overwrite(inserts, txn=txn)
+        source = source.persist()
         try:
-            return self._merge_staged(
-                spark, delta, keys, txn, merge_schema, moving_keys,
-                _cm, base_version, entry, probe_no_match,
+            full = self._apply_widen(
+                self._read_live(spark, entry["live"]), entry
             )
-        finally:
-            delta.unpersist()
-
-    def _merge_staged(
-        self,
-        spark: SparkSession,
-        delta: DataFrame,
-        keys: list[str],
-        txn: tuple[str, int] | None,
-        merge_schema: bool,
-        moving_keys: bool,
-        _cm: dict | None,
-        base_version: int,
-        entry: dict,
-        probe_no_match: bool = False,
-    ) -> int:
-        if self.partition_col:
-            touched = sorted(
-                str(r[0])
-                for r in delta.select(self.partition_col).distinct().collect()
-            )
-            if moving_keys:
-                # where do the delta's keys CURRENTLY live? One
-                # column-pruned scan (keys + partition col) semi-joined
-                # against the broadcast key set; its distinct partition
-                # values join the touched set so stale copies of moving
-                # rows are rewritten away rather than surviving as
-                # duplicates.
-                live_now = self._read_live(spark, entry["live"])
-                if live_now is not None:
-                    probe = (
-                        live_now.select(*keys, self.partition_col)
+            touched = [_UNPARTITIONED]
+            if pc:
+                found = {
+                    str(r[0])
+                    for r in source.select(pc).distinct().collect()
+                }
+                if moving_keys and full is not None:
+                    # where do the source's keys live NOW? One
+                    # column-pruned scan (keys + partition col)
+                    # semi-joined against the broadcast key set; stale
+                    # copies of moving rows are then rewritten away
+                    # rather than surviving as duplicates.
+                    found |= {
+                        str(r[0])
+                        for r in full.select(*keys, pc)
                         .join(
-                            F.broadcast(delta.select(*keys).distinct()),
+                            F.broadcast(source.select(*keys).distinct()),
                             keys,
                             "left_semi",
                         )
-                        .select(self.partition_col)
+                        .select(pc)
                         .distinct()
                         .collect()
-                    )
-                    touched = sorted(
-                        set(touched) | {str(r[0]) for r in probe}
-                    )
-        else:
-            touched = [_UNPARTITIONED]
-        # Schema checks compare against the FULL live snapshot's
-        # columns, not the touched partitions' files: after an earlier
-        # evolution, a pre-evolution partition's files are narrower
-        # than the table, and judging by them would make acceptance
-        # partition-dependent (the delete_where NULL lesson applied to
-        # schemas). The full-map frame is lazy — resolving .columns
-        # reads footers, runs no job.
-        full = self._read_live(spark, entry["live"])
-        table_cols = set(full.columns) if full is not None else set(delta.columns)
-        st = self._colmap_state(entry)
-        if st is not None:
-            # Under column mapping the table schema is the MAPPED
-            # physical columns; a dropped column's bytes still sit in
-            # old files but are not part of the schema — a delta must
-            # not be forced to carry (or allowed to name) them.
-            table_cols &= set(st[0].values())
-        new_cols = set(delta.columns) - table_cols
-        if new_cols and not merge_schema:
-            raise ValueError(
-                f"delta adds columns {sorted(new_cols)} not in the "
-                "table schema; pass merge_schema=True to widen "
-                "(additive evolution), or fix the producer"
-            )
-        dropped = table_cols - set(delta.columns)
-        if dropped:
-            # A narrow delta used to silently NARROW the table:
-            # survivors were projected to delta's columns, dropping the
-            # missing ones for every rewritten partition. That is data
-            # loss, not evolution — an upsert source missing table
-            # columns is ambiguous (null? keep old?), so the producer
-            # must say (select the columns, or run a real column-drop
-            # migration via overwrite).
-            raise ValueError(
-                f"delta is missing table columns {sorted(dropped)}; "
-                "an upsert source must carry the full row"
-            )
-        current = self._read_snapshot(
-            spark,
-            {p: e for p, e in entry["live"].items() if p in set(touched)},
-            entry,
-        )
-        pointer_append = False
-        if (
-            probe_no_match
-            and current is not None
-            and not moving_keys
-            and not new_cols
-        ):
-            # Insert-heavy hint: one key-pruned semi-join probe over the
-            # touched partitions. Zero matches -> the upsert IS an
-            # insert; commit the staged delta as a pointer-list append
-            # and never read (or rewrite) the stored rows at all.
-            has_match = (
-                current.select(*keys)
-                .join(
-                    F.broadcast(delta.select(*keys).distinct()),
-                    keys,
-                    "left_semi",
+                    }
+                touched = sorted(found)
+            types = dict((full if full is not None else source).dtypes)
+            if st is not None:
+                types = {
+                    c: t for c, t in types.items() if c in st[0].values()
+                }
+            new_cols = set(source.columns) - set(types)
+            missing = set(types) - set(source.columns)
+            if missing or (new_cols and not merge_schema):
+                # A narrow source used to silently NARROW the table for
+                # every rewritten partition: data loss, not evolution.
+                raise ValueError(
+                    "a MERGE source must carry exactly the table columns:"
+                    f" it adds {sorted(new_cols)} and is missing table "
+                    f"columns {sorted(missing)}. An upsert source carries "
+                    "the full row; to widen the table, merge with "
+                    "merge_schema=True (additive evolution)"
                 )
-                .limit(1)
-                .count()
-                > 0
+            current = self._apply_widen(
+                self._read_snapshot(
+                    spark,
+                    {p: e for p, e in entry["live"].items() if p in touched},
+                    entry,
+                ),
+                entry,
             )
-            if not has_match:
-                pointer_append = True
-                current = None
-        if current is not None:
-            delta_keys = F.broadcast(delta.select(*keys).distinct())
-            survivors = current.join(delta_keys, keys, "left_anti")
-            if set(current.columns) != set(delta.columns):
-                # pre-evolution files in touched partitions null-fill
+            if current is not None and set(current.columns) != set(types):
+                # pre-evolution files null-fill, dropped bytes drop
+                have = set(current.columns)
+                current = current.select(
+                    *[
+                        F.col(f"`{c}`") if c in have
+                        else F.lit(None).cast(t).alias(c)
+                        for c, t in types.items()
+                    ]
+                )
+            append = False
+            if (
+                probe_no_match
+                and current is not None
+                and not moving_keys
+                and not new_cols
+            ):
+                # Insert-heavy hint: one key-pruned semi-join probe over
+                # the touched partitions. Zero matches -> the upsert IS
+                # an insert; never read (or rewrite) the stored rows.
+                append = (
+                    current.select(*keys)
+                    .join(
+                        F.broadcast(source.select(*keys).distinct()),
+                        keys,
+                        "left_semi",
+                    )
+                    .limit(1)
+                    .count()
+                    == 0
+                )
+                if append:
+                    current = None
+            if current is None:
+                if clauses is not None and not clauses["insert"]:
+                    return base
+                merged = inserts
+            elif clauses is None:
+                survivors = current.join(
+                    F.broadcast(source.select(*keys).distinct()),
+                    keys,
+                    "left_anti",
+                )
                 merged = survivors.unionByName(
-                    delta, allowMissingColumns=True
-                ).select(*delta.columns)
+                    source, allowMissingColumns=True
+                ).select(*source.columns)
             else:
-                merged = survivors.select(*delta.columns).unionByName(delta)
-        else:
-            merged = delta
-        rel, parts, files = self._stage(merged)
-
-        def build(head: int, head_entry: dict):
-            live = dict(head_entry["live"])
-            # Every touched partition has delta rows by construction
-            # (touched came from delta's distinct), so _stage created
-            # its dir; a KeyError here would be a real invariant break.
-            for p in touched:
-                ptr = _ptr(rel, parts[p], head + 1, files.get(p))
-                if pointer_append:
-                    # no-match fast path: existing pointers stay live,
-                    # the staged delta joins their list (append's
-                    # O(new-data) commit shape)
-                    live[p] = _ptrs(live[p]) + [ptr] if p in live else ptr
+                t = current.withColumn("__t", F.lit(True)).alias("t")
+                s = source.withColumn("__s", F.lit(True)).alias("s")
+                joined = t.join(s, keys, "full_outer")
+                is_matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
+                src_only = F.col("__t").isNull()
+                assign = clauses["update"]
+                upd = (
+                    F.lit(False) if assign is None
+                    else is_matched & _sat(F.expr(clauses["update_if"]))
+                    if clauses["update_if"] else is_matched
+                )
+                del_if = clauses["delete_if"]
+                if del_if is None:
+                    dele = F.lit(False)
+                elif del_if is True:
+                    dele = is_matched & ~upd
                 else:
-                    live[p] = ptr
-            # tombstones carry forward: they still apply to the
-            # untouched pointers (older v); the rewritten pointers
-            # carry v = head+1 > every tombstone's v, and their rows
-            # were read THROUGH the tombstones, so nothing deleted can
-            # resurface. The no-match fast path committed a pure insert
-            # and says so, keeping window_ops insert-only proofs
-            # metadata-only through this commit; it still rebases as a
-            # merge (its no-match probe read the base).
-            extra = {**_cm, "op": "append"} if pointer_append else _cm
-            return live, None, extra
+                    dele = is_matched & ~upd & _sat(F.expr(del_if))
+                keep = ~dele & ~(src_only & ~ins_cond)
 
-        return self._commit(base_version, touched, "merge", build, txn=txn)
+                def out_col(c: str):
+                    if c in keys:
+                        return F.col(c)  # USING join already coalesced it
+                    v = F.when(src_only, F.col(f"s.{c}")).otherwise(
+                        F.col(f"t.{c}")
+                    )
+                    if assign is not None and c in assign:
+                        v = F.when(
+                            upd, F.expr(assign[c]).cast(types[c])
+                        ).otherwise(v)
+                    return v.alias(c)
+
+                merged = joined.where(keep).select(
+                    *[out_col(c) for c in current.columns]
+                )
+            rel, parts, files = self._stage(merged)
+        finally:
+            source.unpersist()
+        # Tombstones carry forward: they still apply to the untouched
+        # pointers (older v); the rewritten pointers carry v = head+1 >
+        # every tombstone's v, and their rows were read THROUGH the
+        # tombstones, so nothing deleted can resurface. The append plan
+        # commits a pure insert and says so (op 'append'), keeping
+        # window_ops insert-only proofs metadata-only through this
+        # commit; it still rebases as a merge (its probe read the base).
+        return self._commit_delete(
+            base, touched, rel, parts, op="merge", files=files, txn=txn,
+            extra={**cm, "op": "append"} if append else cm, append=append,
+        )
 
     def append(
         self, df: DataFrame, txn: tuple[str, int] | None = None
@@ -2277,33 +2387,29 @@ class VersionedTable:
         tombstone's stamp): inserting a previously deleted key is an
         insert, not a resurrection. ``txn`` is the merge idempotence
         contract unchanged."""
-        df, _cm = self._prep_write(df)
+        base, entry = self._head()
+        df, cm = self._prep_write(df, entry)
         df = self._materialize_generated(df)
         if txn is not None:
             seen = self.txn_version(txn[0])
             if seen is not None and seen >= txn[1]:
                 return self.latest_version()
-        base = self.latest_version()
         if base is None:
-            return self.overwrite(df, txn=txn, op="append", _cm=_cm)
-        full = self._read_live(
-            df.sparkSession, self._read_entry(base)["live"]
-        )
+            return self.overwrite(df, txn=txn, op="append")
+        full = self._read_live(df.sparkSession, entry["live"])
         if full is not None and set(full.columns) != set(df.columns):
             raise ValueError(
                 "append requires the exact table schema; table "
                 f"{sorted(full.columns)} vs append {sorted(df.columns)}"
             )
         rel, parts, files = self._stage(df)
-        if not self.partition_col:
-            parts = {_UNPARTITIONED: ""}
 
         def build(head: int, head_entry: dict):
             live = dict(head_entry["live"])
             for p, sub in parts.items():
                 ptr = _ptr(rel, sub, head + 1, files.get(p))
                 live[p] = _ptrs(live[p]) + [ptr] if p in live else ptr
-            return live, None, _cm
+            return live, None, cm
 
         return self._commit(base, sorted(parts), "append", build, txn=txn)
 
@@ -2323,27 +2429,25 @@ class VersionedTable:
         handle for audit/publish/discard."""
         if not wap_id or not wap_id.replace("-", "").replace("_", "").isalnum():
             raise ValueError(f"wap_id must be a slug, got {wap_id!r}")
-        df, _cm = self._prep_write(df)
-        df = self._materialize_generated(df)
-        base = self.latest_version()
+        base, entry = self._head()
         if base is None:
             raise FileNotFoundError(
                 f"no commits at {self.path}: WAP stages against an "
                 "existing table (overwrite first)"
             )
-        full = self._read_live(
-            df.sparkSession, self._read_entry(base)["live"]
-        )
+        df, cm = self._prep_write(df, entry)
+        st = self._colmap_state(entry)
+        df = self._materialize_generated(df)
+        full = self._read_live(df.sparkSession, entry["live"])
         if full is not None and set(full.columns) != set(df.columns):
             raise ValueError(
                 "stage_wap requires the exact table schema; table "
                 f"{sorted(full.columns)} vs staged {sorted(df.columns)}"
             )
         rel, parts, files = self._stage(df)
-        if not self.partition_col:
-            parts = {_UNPARTITIONED: ""}
 
         def build(head: int, head_entry: dict):
+            self._check_colmap(st, head_entry)
             staged = {
                 p: _ptr(rel, sub, head + 1, files.get(p))
                 for p, sub in parts.items()
@@ -2351,7 +2455,7 @@ class VersionedTable:
             wap = {"id": wap_id, "files": staged, "touched": sorted(parts)}
             # live byte-identical to head: invisible to readers,
             # zero-diff under the delta codec
-            return dict(head_entry["live"]), None, {"wap": wap, **_cm}
+            return dict(head_entry["live"]), None, {"wap": wap, **cm}
 
         return self._commit(None, [], "wap_stage", build)
 
@@ -2440,191 +2544,6 @@ class VersionedTable:
         return self._commit(None, [], "wap_discard", build)
 
     # --------------------------------------------------------- deletes
-    def merge_into(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        on: Sequence[str],
-        *,
-        matched_update: dict[str, str] | None = None,
-        matched_update_condition: str | None = None,
-        matched_delete_condition: str | bool | None = None,
-        insert_unmatched: bool = True,
-        insert_condition: str | None = None,
-        txn: tuple[str, int] | None = None,
-    ) -> int:
-        """The full MERGE INTO grammar (Delta's WHEN clauses) on top of
-        the same touched-partition commit machinery as :meth:`merge`:
-
-        - WHEN MATCHED [AND matched_update_condition] THEN UPDATE SET
-          ``matched_update`` ({col -> SQL expr over ``t.<col>`` target /
-          ``s.<col>`` source qualifiers});
-        - WHEN MATCHED [AND matched_delete_condition] THEN DELETE
-          (pass ``True`` for unconditional; evaluated AFTER the update
-          clause — first matching clause wins, Delta's in-order rule);
-        - WHEN NOT MATCHED [AND insert_condition] THEN INSERT * (source
-          row as-is; ``insert_unmatched=False`` drops unmatched source
-          rows, the update-only MERGE).
-
-        Matched rows satisfying neither clause keep their target values
-        byte-identical; target rows with no source match are never
-        touched, and live in partitions the commit does not rewrite at
-        all (the table invariant: the partition column is a pure
-        function of the key, so a key's target row lives in the same
-        partition its source row names). One full-outer join on the key
-        within touched partitions; assignments cast back to the target
-        column type; constraints/stats flow through staging like every
-        other write; it commits as op 'merge' (see _CONFLICTS), with
-        merge's ``txn`` idempotence. The plain :meth:`merge` stays the fast
-        path for unconditional upserts (left-anti survivors, no outer
-        join). Reference analog: none — this is the lakehouse DML
-        surface (VERDICT r7 item 2 family).
-
-        Under column mapping the source frame, the key list, the
-        assignment dict and every condition string arrive in LOGICAL
-        names and are translated here once; the join/commit machinery
-        below runs entirely in physical name space."""
-        keys = list(on)
-        source, _cm = self._prep_write(source)
-        cmst = self._head_colmap()
-        if cmst is not None:
-            keys = self._cols_to_physical(keys)
-            _p = lambda s: self._predicate_to_physical(s, cmst)  # noqa: E731
-            matched_update_condition = _p(matched_update_condition)
-            insert_condition = _p(insert_condition)
-            if isinstance(matched_delete_condition, str):
-                matched_delete_condition = _p(matched_delete_condition)
-            if matched_update:
-                matched_update = {
-                    self._cols_to_physical([c])[0]: _p(expr)
-                    for c, expr in matched_update.items()
-                }
-        source = self._materialize_generated(source)
-        if txn is not None:
-            seen = self.txn_version(txn[0])
-            if seen is not None and seen >= txn[1]:
-                return self.latest_version()
-        src = source.alias("s")
-        # SQL three-valued logic, null-safed once (the delete_where NULL
-        # lesson): a clause condition evaluating NULL is NOT satisfied.
-        _sat = lambda c: F.coalesce(c.cast("boolean"), F.lit(False))  # noqa: E731
-        ins_cond = (
-            _sat(F.expr(insert_condition))
-            if insert_condition
-            else F.lit(True)
-        )
-        if not insert_unmatched:
-            # Update-only MERGE: unmatched source rows drop on EVERY
-            # path — folding the flag into ins_cond covers the
-            # full-outer-join branch, not just the empty-table /
-            # empty-partition short circuits.
-            ins_cond = F.lit(False)
-        if self.latest_version() is None:
-            if not insert_unmatched:
-                raise FileNotFoundError(
-                    f"no commits at {self.path} and insert_unmatched=False"
-                )
-            return self.overwrite(
-                src.where(ins_cond).select(*source.columns),
-                txn=txn,
-                _cm=_cm,
-            )
-        base_version = self.latest_version()
-        entry = self._read_entry(base_version)
-        # Materialize the source ONCE (Delta's merge-source
-        # materialization): it is otherwise re-evaluated for the
-        # touched-partition discovery and again inside the staged
-        # full-outer join — two full runs of a possibly expensive
-        # change-feed pipeline. O(churn) blocks, released below.
-        source = source.persist()
-        src = source.alias("s")
-        try:
-            if self.partition_col:
-                touched = sorted(
-                    str(r[0])
-                    for r in source.select(self.partition_col)
-                    .distinct()
-                    .collect()
-                )
-            else:
-                touched = [_UNPARTITIONED]
-            current = self._read_snapshot(
-                spark,
-                {p: e for p, e in entry["live"].items() if p in set(touched)},
-                entry,
-            )
-            if current is None:
-                if not insert_unmatched:
-                    return base_version
-                merged = src.where(ins_cond).select(*source.columns)
-            else:
-                if set(current.columns) != set(source.columns):
-                    raise ValueError(
-                        "merge_into requires the source to carry exactly the "
-                        f"table columns; table {sorted(current.columns)} vs "
-                        f"source {sorted(source.columns)}"
-                    )
-                if matched_update and self.partition_col in matched_update:
-                    raise ValueError(
-                        f"cannot assign partition column '{self.partition_col}'"
-                        " (rows may not move partitions)"
-                    )
-                types = dict(current.dtypes)
-                t = current.withColumn("__t", F.lit(True)).alias("t")
-                s2 = src.withColumn("__s", F.lit(True)).alias("s")
-                joined = t.join(s2, keys, "full_outer")
-                is_matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
-                src_only = F.col("__t").isNull()
-                upd = (
-                    is_matched
-                    & (
-                        _sat(F.expr(matched_update_condition))
-                        if matched_update_condition
-                        else F.lit(True)
-                    )
-                    if matched_update is not None
-                    else F.lit(False)
-                )
-                if matched_delete_condition is None:
-                    dele = F.lit(False)
-                elif matched_delete_condition is True:
-                    dele = is_matched & ~upd
-                else:
-                    dele = (
-                        is_matched
-                        & ~upd
-                        & _sat(F.expr(matched_delete_condition))
-                    )
-                keep = ~dele & ~(src_only & ~ins_cond)
-
-                def out_col(c: str):
-                    if c in keys:
-                        return F.col(c)  # USING join already coalesced it
-                    tv, sv = F.col(f"t.{c}"), F.col(f"s.{c}")
-                    v = F.when(src_only, sv).otherwise(tv)
-                    if matched_update is not None and c in matched_update:
-                        v = F.when(
-                            upd, F.expr(matched_update[c]).cast(types[c])
-                        ).otherwise(v)
-                    return v.alias(c)
-
-                merged = joined.where(keep).select(
-                    *[out_col(c) for c in current.columns]
-                )
-            # Staging an empty partitioned result writes no partition
-            # dirs, so the commit below simply drops every touched
-            # pointer — the everything-deleted case needs no special
-            # probe.
-            rel, parts, files = self._stage(merged)
-        finally:
-            source.unpersist()
-        if not self.partition_col:
-            parts = {_UNPARTITIONED: ""}
-        return self._commit_delete(
-            base_version, touched, rel, parts, op="merge", files=files,
-            txn=txn,
-        )
-
     def _commit_delete(
         self,
         base_version: int,
@@ -2634,22 +2553,27 @@ class VersionedTable:
         op: str = "delete",
         files: dict[str, list[dict]] | None = None,
         txn: tuple[str, int] | None = None,
+        extra: dict | None = None,
+        append: bool = False,
     ) -> int:
         """Commit for the copy-on-write DML forms (delete, partition
-        drop, update, conditional merge, partition compaction): rewrite
-        pointers for touched partitions that still have data
-        (``parts``), drop the rest from live."""
+        drop, update, MERGE, partition compaction): point each touched
+        partition that still has data (``parts``) at the staged files —
+        appended to its pointer list when ``append`` (MERGE's no-match
+        plan), else replacing it — and drop the rest from live.
+        ``extra`` fields ride into the entry."""
 
         def build(head: int, head_entry: dict):
             live = dict(head_entry["live"])
             for p in touched:
-                if rel is not None and p in parts:
-                    live[p] = _ptr(
-                        rel, parts[p], head + 1, (files or {}).get(p)
-                    )
-                else:
+                if rel is None or p not in parts:
                     live.pop(p, None)  # every row of p deleted
-            return live, None, {}
+                    continue
+                ptr = _ptr(rel, parts[p], head + 1, (files or {}).get(p))
+                if append and p in live:
+                    ptr = _ptrs(live[p]) + [ptr]
+                live[p] = ptr
+            return live, None, extra or {}
 
         return self._commit(base_version, touched, op, build, txn=txn)
 
@@ -2805,8 +2729,6 @@ class VersionedTable:
             # nothing survives in the touched partitions: pure drop
             return self._commit_delete(base, touched, None, {})
         rel, parts, files = self._stage(remaining)
-        if not self.partition_col:
-            parts = {_UNPARTITIONED: ""}
         return self._commit_delete(base, touched, rel, parts, files=files)
 
     def update_where(
@@ -2853,7 +2775,7 @@ class VersionedTable:
             if isinstance(predicate, str):
                 predicate = self._predicate_to_physical(predicate, cmst)
             assignments = {
-                self._cols_to_physical([c])[0]: (
+                self._cols_to_physical([c], cmst)[0]: (
                     self._predicate_to_physical(v, cmst)
                     if isinstance(v, str)
                     else v
@@ -2922,8 +2844,6 @@ class VersionedTable:
                 os.path.join(self.path, dv_rel)
             )
             add_rel, parts, files = self._stage(updated)
-            if not self.partition_col:
-                parts = {_UNPARTITIONED: ""}
             return self._commit_rdv(
                 base,
                 touched,
@@ -2976,8 +2896,6 @@ class VersionedTable:
             ]
         )
         rel, parts, files = self._stage(updated)
-        if not self.partition_col:
-            parts = {_UNPARTITIONED: ""}
         return self._commit_delete(
             base, touched, rel, parts, op="update", files=files
         )
@@ -3007,7 +2925,7 @@ class VersionedTable:
             raise FileNotFoundError(f"no commits at {self.path}")
         cmst = self._head_colmap()
         if cmst is not None:
-            phys = self._cols_to_physical(keys_df.columns)
+            phys = self._cols_to_physical(keys_df.columns, cmst)
             keys_df = keys_df.select(
                 *[
                     F.col(f"`{c}`").alias(p)
@@ -4387,14 +4305,24 @@ class ChangeFeedConsumer:
         return delivered
 
 
-def versioned_user_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checkable end-to-end exercise of VersionedTable: base
-    snapshot commit (v1) + keyed MERGE of the delta half (v2), read back
-    at the LATEST version through the log's grouped-scan reader. Same
-    relational post-state as merged_user_snapshot_partitioned — the
-    oracle restates it — but the write path is the immutable-file commit
-    log, so what's checked includes staging, log commit, live-pointer
-    update, and the basePath partition-recovery scan."""
+def _user_snapshot(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    *,
+    flag: bool = True,
+    part: tuple[str, str] | None = ("pbucket", "user_id % 4"),
+    write=None,
+) -> VersionedTable:
+    """The two-commit user snapshot the snapshot drivers build on. The
+    events are cut at the event-id midpoint and each half is reduced to
+    its latest event per user (keep_latest over ts, event_id). v1
+    overwrites with the first half's snapshot; v2 is
+    ``write(table, base, delta)`` over the two halves' frames, by default
+    a keyed merge of the second half, so its row wins for every user it
+    has. ``flag`` adds ``from_delta``, the half each row came from;
+    ``part`` is the (partition column, SQL expression) pair, or None for
+    an unpartitioned table."""
     from de_final_project_spark.operators.dedup import keep_latest
     from de_final_project_spark.session import scratch_dir
     from de_final_project_spark.sources.readers import read_testdata
@@ -4403,26 +4331,123 @@ def versioned_user_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "ts", "value"
     )
     lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    cut = (lo + hi) // 2
-    snap = lambda df, flag: keep_latest(  # noqa: E731
-        df, "user_id", ["ts", "event_id"]
-    ).select(
-        "user_id",
-        "event_id",
-        "event_type",
-        "ts",
-        "value",
-        F.lit(flag).alias("from_delta"),
-        (F.col("user_id") % 4).alias("pbucket"),
-    )
+    cut = (lo + hi) // 2  # control-plane scalar: deterministic id midpoint
+
+    def snap(df: DataFrame, from_delta: bool) -> DataFrame:
+        cols = ["user_id", "event_id", "event_type", "ts", "value"]
+        if flag:
+            cols.append(F.lit(from_delta).alias("from_delta"))
+        if part is not None:
+            cols.append(F.expr(part[1]).alias(part[0]))
+        return keep_latest(df, "user_id", ["ts", "event_id"]).select(*cols)
+
+    base = snap(ev.where(F.col("event_id") <= cut), False)
+    delta = snap(ev.where(F.col("event_id") > cut), True)
     table = VersionedTable(
-        os.path.join(scratch_dir("versioned_snapshot"), "user_snapshot"),
-        partition_col="pbucket",
+        os.path.join(scratch_dir(name), "user_snapshot"),
+        partition_col=part[0] if part is not None else None,
     )
-    table.overwrite(snap(ev.where(F.col("event_id") <= cut), False))
-    table.merge(spark, snap(ev.where(F.col("event_id") > cut), True), ["user_id"])
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
+    table.overwrite(base)
+    if write is None:
+        table.merge(spark, delta, ["user_id"])
+    else:
+        write(table, base, delta)
+    return table
+
+
+def _head_read(spark: SparkSession, table: VersionedTable) -> DataFrame:
+    """The head read, its partition column cast to the oracle's BIGINT
+    (partition discovery types the column by its values)."""
+    df = table.read(spark)
+    pc = table.partition_col
+    return df.withColumn(pc, F.col(pc).cast("long")) if pc else df
+
+
+def merged_user_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-checkable keyed upsert into an UNPARTITIONED table: v1
+    commits the first event-id half's per-user snapshot, v2 merges the
+    second half's, so delta rows replace matched users and unmatched
+    users survive. The table is read back through the log, so staging,
+    the left-anti + union plan and the commit are in the checked path.
+    ``from_delta`` records which side won each key, pinning the merge
+    decision row by row. The oracle restates the post-state
+    relationally: per user, the latest event of the delta half if one
+    exists, else the latest of the base half (ties broken by event_id,
+    the same total order as keep_latest)."""
+    return _head_read(
+        spark, _user_snapshot(spark, sf_dir, "merge_snapshot", part=None)
+    )
+
+
+def merged_user_snapshot_partitioned(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Partitioned twin of merged_user_snapshot: the table is
+    partitioned by ``pbucket = user_id % 4`` (a pure function of the
+    merge key, so keys cannot migrate partitions) and the merge
+    rewrites only the partitions the delta touches. Same relational
+    post-state plus the bucket column; the oracle restates both."""
+    return _head_read(
+        spark, _user_snapshot(spark, sf_dir, "merge_snapshot_part")
+    )
+
+
+MERGED_USER_SNAPSHOT_SQL = """
+WITH c AS (
+  SELECT (min(event_id) + max(event_id)) // 2 AS cut FROM events
+), halves AS (
+  SELECT e.event_id, e.user_id, e.event_type, e.ts, e.value,
+         (e.event_id > c.cut) AS from_delta
+  FROM events e, c
+), latest AS (
+  SELECT *, row_number() OVER (
+           PARTITION BY user_id, from_delta
+           ORDER BY ts DESC, event_id DESC) AS rk
+  FROM halves
+), pick AS (
+  SELECT *, row_number() OVER (
+           PARTITION BY user_id ORDER BY from_delta DESC) AS mrk
+  FROM latest WHERE rk = 1
+)
+SELECT user_id, event_id, event_type, ts, value, from_delta
+FROM pick WHERE mrk = 1
+"""
+
+MERGED_USER_SNAPSHOT_PARTITIONED_SQL = """
+WITH c AS (
+  SELECT (min(event_id) + max(event_id)) // 2 AS cut FROM events
+), halves AS (
+  SELECT e.event_id, e.user_id, e.event_type, e.ts, e.value,
+         (e.event_id > c.cut) AS from_delta
+  FROM events e, c
+), latest AS (
+  SELECT *, row_number() OVER (
+           PARTITION BY user_id, from_delta
+           ORDER BY ts DESC, event_id DESC) AS rk
+  FROM halves
+), pick AS (
+  SELECT *, row_number() OVER (
+           PARTITION BY user_id ORDER BY from_delta DESC) AS mrk
+  FROM latest WHERE rk = 1
+)
+SELECT user_id, event_id, event_type, ts, value, from_delta,
+       (user_id % 4)::BIGINT AS pbucket
+FROM pick WHERE mrk = 1
+"""
+
+VERSIONED_USER_SNAPSHOT_SQL = MERGED_USER_SNAPSHOT_PARTITIONED_SQL
+
+
+def versioned_user_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-checkable end-to-end exercise of VersionedTable: base
+    snapshot commit (v1) + keyed MERGE of the delta half (v2), read back
+    at the LATEST version through the log's grouped-scan reader. Same
+    relational post-state as merged_user_snapshot_partitioned — the
+    oracle restates it — so what's checked includes staging, log
+    commit, live-pointer update, and the basePath partition-recovery
+    scan."""
+    return _head_read(
+        spark, _user_snapshot(spark, sf_dir, "versioned_snapshot")
     )
 
 
@@ -4442,47 +4467,15 @@ def versioned_renamed_column_read(
     travel across the rename (v1 still reads as ``value``) and
     rejected writes to dropped columns are pinned in
     tests/test_txlog.py."""
-    from de_final_project_spark.operators.dedup import keep_latest
-    from de_final_project_spark.session import scratch_dir
-    from de_final_project_spark.sources.readers import read_testdata
+    renames = {"value": "lifetime_value", "event_type": "last_event_type"}
 
-    ev = read_testdata(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    cut = (lo + hi) // 2
-    table = VersionedTable(
-        os.path.join(scratch_dir("renamed_read"), "user_snapshot"),
-        partition_col="pbucket",
-    )
-    base = keep_latest(
-        ev.where(F.col("event_id") <= cut), "user_id", ["ts", "event_id"]
-    ).select(
-        "user_id",
-        "event_id",
-        "event_type",
-        "ts",
-        "value",
-        F.lit(False).alias("from_delta"),
-        (F.col("user_id") % 4).alias("pbucket"),
-    )
-    table.overwrite(base)
-    table.rename_column(spark, "value", "lifetime_value")
-    table.rename_column(spark, "event_type", "last_event_type")
-    delta = keep_latest(
-        ev.where(F.col("event_id") > cut), "user_id", ["ts", "event_id"]
-    ).select(
-        "user_id",
-        "event_id",
-        F.col("event_type").alias("last_event_type"),
-        "ts",
-        F.col("value").alias("lifetime_value"),
-        F.lit(True).alias("from_delta"),
-        (F.col("user_id") % 4).alias("pbucket"),
-    )
-    table.merge(spark, delta, ["user_id"])
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
+    def write(table, base, delta):
+        for old, new in renames.items():
+            table.rename_column(spark, old, new)
+        table.merge(spark, delta.withColumnsRenamed(renames), ["user_id"])
+
+    return _head_read(
+        spark, _user_snapshot(spark, sf_dir, "renamed_read", write=write)
     )
 
 
@@ -4550,9 +4543,7 @@ def versioned_widened_column_read(
         (F.col("user_id") % 4).alias("pbucket"),
     )
     table.append(delta)
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
-    )
+    return _head_read(spark, table)
 
 
 VERSIONED_WIDENED_COLUMN_READ_SQL = """
@@ -4579,32 +4570,7 @@ def snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct compare keeps them OUT of the feed — which is exactly the
     property that makes a CDC feed consumable without dedup. The oracle
     restates the feed relationally from the halves."""
-    from de_final_project_spark.operators.dedup import keep_latest
-    from de_final_project_spark.session import scratch_dir
-    from de_final_project_spark.sources.readers import read_testdata
-
-    ev = read_testdata(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    cut = (lo + hi) // 2
-    snap = lambda df, flag: keep_latest(  # noqa: E731
-        df, "user_id", ["ts", "event_id"]
-    ).select(
-        "user_id",
-        "event_id",
-        "event_type",
-        "ts",
-        "value",
-        F.lit(flag).alias("from_delta"),
-        (F.col("user_id") % 4).alias("pbucket"),
-    )
-    table = VersionedTable(
-        os.path.join(scratch_dir("change_feed"), "user_snapshot"),
-        partition_col="pbucket",
-    )
-    table.overwrite(snap(ev.where(F.col("event_id") <= cut), False))
-    table.merge(spark, snap(ev.where(F.col("event_id") > cut), True), ["user_id"])
+    table = _user_snapshot(spark, sf_dir, "change_feed")
     return table.read_changes(spark, ["user_id"], 1, 2).withColumn(
         "pbucket", F.col("pbucket").cast("long")
     )
@@ -4631,12 +4597,6 @@ WHERE l.rk = 1
 """
 
 
-# Same post-state as the partitioned rename-MERGE demo.
-from de_final_project_spark.operators.merge import (  # noqa: E402
-    MERGED_USER_SNAPSHOT_PARTITIONED_SQL as VERSIONED_USER_SNAPSHOT_SQL,  # noqa: F401
-)
-
-
 def versioned_snapshot_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable row-level DELETE on the transaction log: rebuild
     the two-commit versioned user snapshot (v1 overwrite + v2 merge),
@@ -4648,36 +4608,9 @@ def versioned_snapshot_row_delete(spark: SparkSession, sf_dir: str) -> DataFrame
     version. The oracle restates the snapshot post-state with the
     deleted rows filtered out — an integer-modulus predicate, so there
     is no float/null boundary to diverge on."""
-    from de_final_project_spark.operators.dedup import keep_latest
-    from de_final_project_spark.session import scratch_dir
-    from de_final_project_spark.sources.readers import read_testdata
-
-    ev = read_testdata(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    cut = (lo + hi) // 2
-    snap = lambda df, flag: (  # noqa: E731
-        keep_latest(df, "user_id", ["ts", "event_id"]).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            "value",
-            F.lit(flag).alias("from_delta"),
-            (F.col("user_id") % 4).alias("pbucket"),
-        )
-    )
-    table = VersionedTable(
-        os.path.join(scratch_dir("versioned_delete"), "user_snapshot"),
-        partition_col="pbucket",
-    )
-    table.overwrite(snap(ev.where(F.col("event_id") <= cut), False))
-    table.merge(spark, snap(ev.where(F.col("event_id") > cut), True), ["user_id"])
+    table = _user_snapshot(spark, sf_dir, "versioned_delete")
     table.delete_where(spark, "event_id % 3 = 0")
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
-    )
+    return _head_read(spark, table)
 
 
 VERSIONED_SNAPSHOT_ROW_DELETE_SQL = (
@@ -4698,40 +4631,13 @@ def versioned_snapshot_row_update(spark: SparkSession, sf_dir: str) -> DataFrame
     the latest version. The oracle restates full-rebuild semantics with
     a CASE on the same predicate; ``value * 2`` is a power-of-two scale,
     so the double arithmetic is bit-exact across engines."""
-    from de_final_project_spark.operators.dedup import keep_latest
-    from de_final_project_spark.session import scratch_dir
-    from de_final_project_spark.sources.readers import read_testdata
-
-    ev = read_testdata(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    cut = (lo + hi) // 2
-    snap = lambda df, flag: (  # noqa: E731
-        keep_latest(df, "user_id", ["ts", "event_id"]).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            "value",
-            F.lit(flag).alias("from_delta"),
-            (F.col("user_id") % 4).alias("pbucket"),
-        )
-    )
-    table = VersionedTable(
-        os.path.join(scratch_dir("versioned_update"), "user_snapshot"),
-        partition_col="pbucket",
-    )
-    table.overwrite(snap(ev.where(F.col("event_id") <= cut), False))
-    table.merge(spark, snap(ev.where(F.col("event_id") > cut), True), ["user_id"])
+    table = _user_snapshot(spark, sf_dir, "versioned_update")
     table.update_where(
         spark,
         "event_id % 3 = 0",
         {"event_type": "'redacted'", "value": F.col("value") * 2},
     )
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
-    )
+    return _head_read(spark, table)
 
 
 def versioned_quarantined_load(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4858,46 +4764,28 @@ def versioned_merge_into_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame
     doubles the testdata generates exactly, and every branch feeds the
     hash, so a wrong clause precedence or a NULL-condition leak flips
     the verdict."""
-    from de_final_project_spark.operators.dedup import keep_latest
-    from de_final_project_spark.session import scratch_dir
-    from de_final_project_spark.sources.readers import read_testdata
 
-    ev = read_testdata(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    cut = (int(lo) + int(hi)) // 2
-    snap = lambda df: (  # noqa: E731
-        keep_latest(df, "user_id", ["ts", "event_id"]).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            "value",
-            (F.col("user_id") % 4).alias("pbucket"),
+    def write(table, base, delta):
+        table.merge_into(
+            spark,
+            delta,
+            ["user_id"],
+            matched_update={
+                "event_id": "s.event_id",
+                "event_type": "s.event_type",
+                "ts": "s.ts",
+                "value": "s.value",
+            },
+            matched_update_condition="s.value > t.value",
+            matched_delete_condition="s.event_type = 'error'",
+            insert_condition="s.event_type <> 'error'",
         )
-    )
-    table = VersionedTable(
-        os.path.join(scratch_dir("versioned_merge_into"), "user_snapshot"),
-        partition_col="pbucket",
-    )
-    table.overwrite(snap(ev.where(F.col("event_id") <= cut)))
-    table.merge_into(
+
+    return _head_read(
         spark,
-        snap(ev.where(F.col("event_id") > cut)),
-        ["user_id"],
-        matched_update={
-            "event_id": "s.event_id",
-            "event_type": "s.event_type",
-            "ts": "s.ts",
-            "value": "s.value",
-        },
-        matched_update_condition="s.value > t.value",
-        matched_delete_condition="s.event_type = 'error'",
-        insert_condition="s.event_type <> 'error'",
-    )
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
+        _user_snapshot(
+            spark, sf_dir, "versioned_merge_into", flag=False, write=write
+        ),
     )
 
 
@@ -4954,35 +4842,9 @@ def versioned_restore_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     second-half row or lost first-half row flips the hash. The polluted
     version stays time-travelable (asserted in tests/test_txlog.py);
     this query checks the restored head state end-to-end."""
-    from de_final_project_spark.operators.dedup import keep_latest
-    from de_final_project_spark.session import scratch_dir
-    from de_final_project_spark.sources.readers import read_testdata
-
-    ev = read_testdata(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    cut = (int(lo) + int(hi)) // 2
-    snap = lambda df: (  # noqa: E731
-        keep_latest(df, "user_id", ["ts", "event_id"]).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            "value",
-            (F.col("user_id") % 4).alias("pbucket"),
-        )
-    )
-    table = VersionedTable(
-        os.path.join(scratch_dir("versioned_restore"), "user_snapshot"),
-        partition_col="pbucket",
-    )
-    table.overwrite(snap(ev.where(F.col("event_id") <= cut)))
-    table.merge(spark, snap(ev.where(F.col("event_id") > cut)), ["user_id"])
+    table = _user_snapshot(spark, sf_dir, "versioned_restore", flag=False)
     table.restore(1)
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
-    )
+    return _head_read(spark, table)
 
 
 VERSIONED_RESTORE_SNAPSHOT_SQL = """
@@ -5104,41 +4966,12 @@ def versioned_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-equivalent to copy-on-write. Reference analog: none — this is
     the Delta-DV / Iceberg-positional-delete surface a 100 TB
     deployment needs so erasure trickles stop rewriting terabytes."""
-    from de_final_project_spark.operators.dedup import keep_latest
-    from de_final_project_spark.session import scratch_dir
-    from de_final_project_spark.sources.readers import read_testdata
-
-    ev = read_testdata(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    cut = (lo + hi) // 2
-    snap = lambda df, flag: (  # noqa: E731
-        keep_latest(df, "user_id", ["ts", "event_id"]).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            "value",
-            F.lit(flag).alias("from_delta"),
-            (F.col("user_id") % 4).alias("pbucket"),
-        )
-    )
-    table = VersionedTable(
-        os.path.join(scratch_dir("versioned_dv_delete"), "user_snapshot"),
-        partition_col="pbucket",
-    )
-    table.overwrite(snap(ev.where(F.col("event_id") <= cut), False))
-    table.merge(
-        spark, snap(ev.where(F.col("event_id") > cut), True), ["user_id"]
-    )
+    table = _user_snapshot(spark, sf_dir, "versioned_dv_delete")
     v = table.delete_where(spark, "event_id % 5 = 0", mode="mor")
     entry = table._read_entry(v)
     # the MOR contract, asserted in-line: zero pointers rewritten
     assert entry["live"] == table._read_entry(v - 1)["live"]
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
-    )
+    return _head_read(spark, table)
 
 
 VERSIONED_DV_DELETE_SQL = (
@@ -5155,43 +4988,14 @@ def versioned_dv_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     sidecar, updated images landed as an appended pointer, no partition
     rewritten. Shares the COW update's oracle verbatim: the two modes
     are defined to be read-equivalent, and the driver hash proves it."""
-    from de_final_project_spark.operators.dedup import keep_latest
-    from de_final_project_spark.session import scratch_dir
-    from de_final_project_spark.sources.readers import read_testdata
-
-    ev = read_testdata(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    cut = (lo + hi) // 2
-    snap = lambda df, flag: (  # noqa: E731
-        keep_latest(df, "user_id", ["ts", "event_id"]).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            "value",
-            F.lit(flag).alias("from_delta"),
-            (F.col("user_id") % 4).alias("pbucket"),
-        )
-    )
-    table = VersionedTable(
-        os.path.join(scratch_dir("versioned_dv_update"), "user_snapshot"),
-        partition_col="pbucket",
-    )
-    table.overwrite(snap(ev.where(F.col("event_id") <= cut), False))
-    table.merge(
-        spark, snap(ev.where(F.col("event_id") > cut), True), ["user_id"]
-    )
+    table = _user_snapshot(spark, sf_dir, "versioned_dv_update")
     table.update_where(
         spark,
         "event_id % 3 = 0",
         {"event_type": "'redacted'", "value": F.col("value") * 2},
         mode="mor",
     )
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
-    )
+    return _head_read(spark, table)
 
 
 VERSIONED_DV_UPDATE_SQL = VERSIONED_SNAPSHOT_ROW_UPDATE_SQL
@@ -5227,9 +5031,7 @@ def versioned_append_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert all(
         _ptrs(after[p])[0] == _ptrs(before[p])[0] for p in before
     )  # original pointers untouched — append added, never rewrote
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
-    )
+    return _head_read(spark, table)
 
 
 VERSIONED_APPEND_LOAD_SQL = """
@@ -5297,9 +5099,7 @@ def versioned_compacted_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         gone = True
     assert gone
     assert table.read(spark).count() == n_total
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
-    )
+    return _head_read(spark, table)
 
 
 VERSIONED_COMPACTED_READ_SQL = VERSIONED_APPEND_LOAD_SQL
@@ -5350,9 +5150,7 @@ def versioned_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # idempotent retry (crash-after-commit replay) publishes nothing new
     v_final = table.publish_wap(spark, v_good, "batch-2026-06-01-fix")
     assert v_final == table.latest_version()
-    return table.read(spark).withColumn(
-        "pbucket", F.col("pbucket").cast("long")
-    )
+    return _head_read(spark, table)
 
 
 VERSIONED_WAP_PUBLISH_SQL = VERSIONED_APPEND_LOAD_SQL
@@ -5372,48 +5170,26 @@ def versioned_moving_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     restates the relational post-state: delta-half winner per user
     where one exists, base-half winner otherwise, tier from the WINNING
     row's value."""
-    from de_final_project_spark.operators.dedup import keep_latest
-    from de_final_project_spark.session import scratch_dir
-    from de_final_project_spark.sources.readers import read_testdata
 
-    ev = read_testdata(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-    cut = (lo + hi) // 2
-
-    def snap(df, flag):
-        return keep_latest(df, "user_id", ["ts", "event_id"]).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            "value",
-            F.lit(flag).alias("from_delta"),
-            F.pmod(F.floor(F.col("value")).cast("long"), F.lit(3)).alias(
-                "vtier"
-            ),
+    def write(table, base, delta):
+        movers = (
+            base.select("user_id", F.col("vtier").alias("t0"))
+            .join(delta.select("user_id", "vtier"), "user_id")
+            .where(F.col("t0") != F.col("vtier"))
+            .count()
         )
+        assert movers > 0, "scenario must exercise a cross-partition move"
+        table.merge(spark, delta, ["user_id"], moving_keys=True)
 
-    base = snap(ev.where(F.col("event_id") <= cut), False)
-    delta = snap(ev.where(F.col("event_id") > cut), True)
-    movers = (
-        base.select("user_id", F.col("vtier").alias("t0"))
-        .join(delta.select("user_id", "vtier"), "user_id")
-        .where(F.col("t0") != F.col("vtier"))
-        .count()
+    table = _user_snapshot(
+        spark, sf_dir, "moving_merge",
+        part=("vtier", "pmod(cast(floor(value) as bigint), 3)"),
+        write=write,
     )
-    assert movers > 0, "scenario must exercise a cross-partition move"
-    table = VersionedTable(
-        os.path.join(scratch_dir("moving_merge"), "user_snapshot"),
-        partition_col="vtier",
-    )
-    table.overwrite(base)
-    table.merge(spark, delta, ["user_id"], moving_keys=True)
-    out = table.read(spark)
+    out = _head_read(spark, table)
     dup = out.groupBy("user_id").count().where("count > 1").limit(1).count()
     assert dup == 0, "moving merge must not duplicate keys"
-    return out.withColumn("vtier", F.col("vtier").cast("long"))
+    return out
 
 
 VERSIONED_MOVING_MERGE_SQL = """

@@ -2,10 +2,7 @@
 (tie-breaking, null ordering) and sequence keys — the semantic traps
 called out in SURVEY.md §5/§7.4."""
 
-import os
-
 import pyspark.sql.functions as F
-import pytest
 
 from de_final_project_spark.operators.dedup import keep_latest
 from de_final_project_spark.operators.surrogate import (
@@ -99,126 +96,6 @@ def test_keep_latest_is_distributed(spark):
     assert out == {k: 990 + k for k in range(10)}
 
 
-def test_merge_upsert_updates_and_inserts(spark, tmp_path):
-    from de_final_project_spark.operators.merge import merge_upsert
-
-    path = str(tmp_path / "gold_t")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "id long, s string, v double"
-    )
-    merge_upsert(spark, path, base, ["id"])
-    delta = spark.createDataFrame(
-        [(2, "B", 22.0), (4, "d", 40.0)], "id long, s string, v double"
-    )
-    merge_upsert(spark, path, delta, ["id"])
-    got = {r["id"]: (r["s"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert got == {1: ("a", 10.0), 2: ("B", 22.0), 3: ("c", 30.0), 4: ("d", 40.0)}
-
-
-def test_merge_partitioned_updates_inserts_and_prunes(spark, tmp_path):
-    """Partitioned merge: same upsert semantics as merge_upsert, and the
-    untouched partition's files are not rewritten (pruning is physical,
-    not just logical)."""
-    from de_final_project_spark.operators.merge import merge_upsert_partitioned
-
-    path = str(tmp_path / "gold_p")
-    base = spark.createDataFrame(
-        [(1, "a", 0), (2, "b", 0), (3, "c", 1), (4, "d", 1)],
-        "id long, s string, pb int",
-    )
-    merge_upsert_partitioned(spark, path, base, ["id"], "pb")
-    before = set(os.listdir(os.path.join(path, "pb=1")))
-    delta = spark.createDataFrame(
-        [(2, "B", 0), (5, "e", 0)], "id long, s string, pb int"
-    )
-    merge_upsert_partitioned(spark, path, delta, ["id"], "pb")
-    got = {r["id"]: r["s"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "B", 3: "c", 4: "d", 5: "e"}
-    # pb=1 was untouched by the delta: identical file listing.
-    assert set(os.listdir(os.path.join(path, "pb=1"))) == before
-    assert not [
-        d for d in os.listdir(str(tmp_path)) if "__staging" in d or "__old" in d
-    ]
-
-
-def test_merge_partitioned_crash_before_swap_preserves_table(spark, tmp_path):
-    """Kill between staging write and swap: the live table must still
-    read the OLD snapshot byte-for-byte; recover_merge then just
-    garbage-collects the staging dir (VERDICT r5 item 5)."""
-    from de_final_project_spark.operators.merge import (
-        merge_upsert_partitioned,
-        recover_merge,
-    )
-
-    path = str(tmp_path / "gold_c1")
-    base = spark.createDataFrame(
-        [(1, "a", 0), (2, "b", 1)], "id long, s string, pb int"
-    )
-    merge_upsert_partitioned(spark, path, base, ["id"], "pb")
-
-    class Crash(RuntimeError):
-        pass
-
-    def boom():
-        raise Crash
-
-    delta = spark.createDataFrame([(1, "A", 0)], "id long, s string, pb int")
-    with pytest.raises(Crash):
-        merge_upsert_partitioned(
-            spark, path, delta, ["id"], "pb", _crash_after_stage=boom
-        )
-    got = {r["id"]: r["s"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "b"}  # old snapshot intact
-    recover_merge(path)
-    assert {r["id"]: r["s"] for r in spark.read.parquet(path).collect()} == got
-    assert not [
-        d for d in os.listdir(str(tmp_path)) if "__staging" in d or "__old" in d
-    ]
-    # Re-running the merge after recovery completes normally.
-    merge_upsert_partitioned(spark, path, delta, ["id"], "pb")
-    assert {r["id"]: r["s"] for r in spark.read.parquet(path).collect()} == {
-        1: "A",
-        2: "b",
-    }
-
-
-def test_merge_partitioned_crash_mid_swap_recovers(spark, tmp_path):
-    """Kill after the first partition swapped: every partition must read
-    as fully-old or fully-new, and recover_merge restores any partition
-    caught between its two renames."""
-    from de_final_project_spark.operators.merge import (
-        merge_upsert_partitioned,
-        recover_merge,
-    )
-
-    path = str(tmp_path / "gold_c2")
-    base = spark.createDataFrame(
-        [(1, "a", 0), (2, "b", 1), (3, "c", 2)], "id long, s string, pb int"
-    )
-    merge_upsert_partitioned(spark, path, base, ["id"], "pb")
-
-    class Crash(RuntimeError):
-        pass
-
-    def boom():
-        raise Crash
-
-    delta = spark.createDataFrame(
-        [(1, "A", 0), (2, "B", 1)], "id long, s string, pb int"
-    )
-    with pytest.raises(Crash):
-        merge_upsert_partitioned(
-            spark, path, delta, ["id"], "pb", _crash_mid_swap=boom
-        )
-    recover_merge(path)
-    got = {r["id"]: r["s"] for r in spark.read.parquet(path).collect()}
-    # pb=0 swapped (new), pb=1 rolled back by recovery (old), pb=2 untouched.
-    assert got == {1: "A", 2: "b", 3: "c"}
-    assert not [
-        d for d in os.listdir(str(tmp_path)) if "__staging" in d or "__old" in d
-    ]
-
-
 def test_read_csv_robust_quarantines_bad_rows(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructType
 
@@ -242,7 +119,7 @@ def test_merged_user_snapshot_delta_wins(spark):
     """One row per user; from_delta true exactly for users with any
     event in the delta half; every from_delta row's event_id is past
     the cut."""
-    from de_final_project_spark.operators.merge import merged_user_snapshot
+    from de_final_project_spark.operators.txlog import merged_user_snapshot
     from de_final_project_spark.sources.readers import read_testdata
 
     sf = "/root/testdata/sf0.001"

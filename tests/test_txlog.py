@@ -414,20 +414,6 @@ def test_scd2_apply_split_point_invariance(spark):
         assert got == full, f"diverged at split day {day}"
 
 
-def test_versioned_snapshot_matches_rename_merge(spark):
-    """The txlog write path and the rename-based partitioned MERGE must
-    land the identical relational post-state."""
-    from de_final_project_spark.operators.merge import (
-        merged_user_snapshot_partitioned,
-    )
-    from de_final_project_spark.operators.txlog import versioned_user_snapshot
-
-    sf = "/root/testdata/sf0.001"
-    a = {tuple(r) for r in versioned_user_snapshot(spark, sf).collect()}
-    b = {tuple(r) for r in merged_user_snapshot_partitioned(spark, sf).collect()}
-    assert a == b
-
-
 def test_first_commit_txn_is_idempotent(spark, table_factory):
     """The txn stamp must land IN the first commit's entry (not be
     stamped post-hoc onto a visible entry — ADVICE r6): a replay of
@@ -1840,6 +1826,77 @@ def test_merge_into_update_only_ignores_unmatched_in_live_partition(
     assert _rows(t.read(spark)) == {1: "a", 2: "B"}
 
 
+def test_merge_into_after_drop_column_accepts_the_live_schema(
+    spark, table_factory
+):
+    """A dropped column's bytes stay in the old files, but it is not
+    part of the table schema: merge_into accepts a source without it
+    and lands the rows merge lands for the same source."""
+    t = table_factory("t")
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, "a", 10), (2, "b", 20)], "id long, s string, x int"
+        )
+    )
+    t.drop_column(spark, "x")
+    t.merge_into(
+        spark,
+        spark.createDataFrame([(2, "B"), (3, "c")], "id long, s string"),
+        ["id"],
+        matched_update={"s": "s.s"},
+    )
+    assert t.read(spark).columns == ["id", "s"]
+    assert _rows(t.read(spark)) == {1: "a", 2: "B", 3: "c"}
+
+
+def test_merge_into_touching_a_partition_older_than_a_widening(
+    spark, table_factory
+):
+    """After a merge_schema=True widening, partition 0 still holds the
+    narrow files. A full-width source that touches only that partition
+    is the table's schema, so merge_into accepts it, as merge does, and
+    the untouched survivor null-fills."""
+    t = table_factory("t", partition_col="pb")
+    t.overwrite(_mk(spark, [(1, "a", 0), (4, "d", 0), (2, "b", 1)]))
+    wide = "id long, s string, pb int, score double"
+    t.merge(
+        spark, spark.createDataFrame([(2, "B", 1, 9.5)], wide), ["id"],
+        merge_schema=True,
+    )
+    t.merge_into(
+        spark,
+        spark.createDataFrame([(1, "A", 0, 1.5), (3, "c", 0, None)], wide),
+        ["id"],
+        matched_update={"s": "s.s", "score": "s.score"},
+    )
+    got = {r["id"]: (r["s"], r["score"]) for r in t.read(spark).collect()}
+    assert got == {
+        1: ("A", 1.5), 2: ("B", 9.5), 3: ("c", None), 4: ("d", None),
+    }
+
+
+def test_merge_into_after_widen_column_stores_wide_values(
+    spark, table_factory
+):
+    """Assignments cast to the table's widened type, not to the narrow
+    type of the files written before widen_column: a value past the
+    int range is stored, as merge stores it."""
+    t = table_factory("t")
+    t.overwrite(spark.createDataFrame([(1, 1), (2, 2)], "id long, v int"))
+    t.widen_column(spark, "v", "bigint")
+    t.merge_into(
+        spark,
+        spark.createDataFrame([(1, 5_000_000_000)], "id long, v long"),
+        ["id"],
+        matched_update={"v": "s.v"},
+    )
+    out = t.read(spark)
+    assert dict(out.dtypes)["v"] == "bigint"
+    assert {r["id"]: r["v"] for r in out.collect()} == {
+        1: 5_000_000_000, 2: 2,
+    }
+
+
 def test_range_excludes_timestamp_fraction_boundary():
     """'2024-01-05 00:00:00' and '2024-01-05 00:00:00.000000' are the
     same instant: no boundary comparison may exclude the file holding
@@ -2792,6 +2849,21 @@ class TestMovingKeysMerge:
             (r["id"], r["s"], r["pb"]) for r in t.read(spark).collect()
         )
         assert got == [(1, "a", 3), (2, "B", 3), (3, "c", 5)]
+
+    def test_moving_keys_drops_the_emptied_old_partition(
+        self, spark, table_factory
+    ):
+        # key 3 was the only row of partition 5: its move leaves the
+        # partition empty, so the commit drops the pointer
+        t = self._seed(spark, table_factory)
+        t.merge(spark, _mk(spark, [(3, "c2", 7)]), ["id"], moving_keys=True)
+        got = sorted(
+            (r["id"], r["s"], r["pb"]) for r in t.read(spark).collect()
+        )
+        assert got == [(1, "a", 3), (2, "b", 3), (3, "c2", 7)]
+        assert sorted(t._read_entry(t.latest_version())["live"]) == [
+            "3", "7",
+        ]
 
 
 def test_merge_probe_no_match_appends_pointers(spark, table_factory):

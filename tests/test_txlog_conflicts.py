@@ -333,3 +333,45 @@ def test_list_txn_stamp_commits_replays_and_advances():
     assert merge("O", [3, 5]) == 2 == t.latest_version()
     assert merge("U", [3, 6]) == 3
     assert t.txn_version("mv") == [3, 6]
+
+
+class _Frame:
+    """The part of a DataFrame a blind writer touches before staging
+    when no column needs a rename: its column names."""
+
+    def __init__(self, columns):
+        self.columns = list(columns)
+        self.sparkSession = None
+
+
+@pytest.mark.parametrize("schema_op", ["rename_column", "drop_column"])
+@pytest.mark.parametrize("writer", ["overwrite", "stage_wap"])
+def test_blind_writer_conflicts_with_a_schema_change_after_staging(
+    monkeypatch, writer, schema_op
+):
+    """A blind writer's files carry the physical names of the column
+    mapping it was translated under. A rename or drop that lands between
+    its staging and its commit must not be reverted by its entry, so
+    the commit is a ConcurrentWriteError and the mapping stays the
+    schema change's."""
+    t = _seeded(ConditionalPutLogStore())
+
+    def stage(df):
+        # another writer's schema change lands while ours stages
+        if schema_op == "rename_column":
+            t.rename_column(None, "x", "y")
+        else:
+            t.drop_column(None, "x")
+        return "data/ours", {"a": "a"}, {}
+
+    monkeypatch.setattr(t, "_stage", stage)
+    monkeypatch.setattr(t, "_read_live", lambda *a, **k: _Frame(["x"]))
+    with pytest.raises(ConcurrentWriteError, match="column mapping"):
+        if writer == "overwrite":
+            t.overwrite(_Frame(["x"]))
+        else:
+            t.stage_wap(_Frame(["x"]), "w1")
+    head = t._read_entry(t.latest_version())
+    assert head["op"] == schema_op
+    assert head["colmap"] == ({"y": "x"} if schema_op == "rename_column"
+                              else {})
