@@ -1310,6 +1310,23 @@ class VersionedTable:
             masked = masked.replace(f"\x00L{i}\x00", lit)
         return masked
 
+    def _assignments_to_physical(self, assign: dict, st) -> dict:
+        """Translate UPDATE assignments ({column -> Column | SQL string})
+        to physical names under the mapping state ``st``. The partition
+        column cannot be assigned: a row may not move partitions."""
+        out = {
+            self._cols_to_physical([c], st)[0]:
+            self._predicate_to_physical(v, st) if isinstance(v, str) else v
+            for c, v in assign.items()
+        }
+        pc = self.partition_col
+        if pc and pc in out:
+            raise ValueError(
+                f"cannot assign partition column '{pc}' (rows may not "
+                "move partitions); DELETE + MERGE instead"
+            )
+        return out
+
     def _from_physical(
         self, df: DataFrame, entry: dict, keep: Sequence[str] = ()
     ) -> DataFrame:
@@ -1991,7 +2008,18 @@ class VersionedTable:
         entry after the fact, because a concurrent writer could read
         the unstamped entry and propagate a txn map without our
         watermark, losing the idempotence guarantee (ADVICE r6)."""
-        entry = self._head()[1]
+        return self._overwrite(df, self._head()[1], txn, op)
+
+    def _overwrite(
+        self,
+        df: DataFrame,
+        entry: dict | None,
+        txn: tuple[str, int] | None = None,
+        op: str = "overwrite",
+    ) -> int:
+        """:meth:`overwrite` of a LOGICAL frame read under ``entry``: it
+        is translated under that entry's column mapping, and a rename or
+        drop landing before the commit is a ConcurrentWriteError."""
         df, cm = self._prep_write(df, entry)
         st = self._colmap_state(entry)
         df = self._materialize_generated(df)
@@ -2159,13 +2187,9 @@ class VersionedTable:
           re-run a possibly expensive upstream pipeline);
         - touched partitions: the source's partition values, plus, with
           ``moving_keys``, the partitions its keys live in now;
-        - the schema rules, against the FULL live snapshot rather than
-          the touched partitions' files (after an evolution those may
-          be narrower than the table, and judging by them would make
-          acceptance partition-dependent), and under column mapping
-          against its mapped columns only (a dropped column's bytes
-          still sit in old files but are not part of the schema);
-        - the touched partitions read at that full, widened schema;
+        - the schema rules of :meth:`_read_at_schema`, shared with the
+          row-level DML body: the source must carry the table's columns,
+          and the touched partitions are read at the table's types;
         - staging, and one commit through :meth:`_commit_delete`, which
           drops a touched partition left with no rows.
 
@@ -2185,16 +2209,9 @@ class VersionedTable:
                 for k, v in clauses.items()
             }
             if clauses["update"] is not None:
-                clauses["update"] = {
-                    self._cols_to_physical([c], st)[0]:
-                    self._predicate_to_physical(e, st)
-                    for c, e in clauses["update"].items()
-                }
-                if pc and pc in clauses["update"]:
-                    raise ValueError(
-                        f"cannot assign partition column '{pc}'"
-                        " (rows may not move partitions)"
-                    )
+                clauses["update"] = self._assignments_to_physical(
+                    clauses["update"], st
+                )
         source = self._materialize_generated(source)
         if txn is not None:
             seen = self.txn_version(txn[0])
@@ -2221,16 +2238,13 @@ class VersionedTable:
             return self.overwrite(inserts, txn=txn)
         source = source.persist()
         try:
-            full = self._apply_widen(
-                self._read_live(spark, entry["live"]), entry
-            )
             touched = [_UNPARTITIONED]
             if pc:
                 found = {
                     str(r[0])
                     for r in source.select(pc).distinct().collect()
                 }
-                if moving_keys and full is not None:
+                if moving_keys and entry["live"]:
                     # where do the source's keys live NOW? One
                     # column-pruned scan (keys + partition col)
                     # semi-joined against the broadcast key set; stale
@@ -2238,7 +2252,8 @@ class VersionedTable:
                     # rather than surviving as duplicates.
                     found |= {
                         str(r[0])
-                        for r in full.select(*keys, pc)
+                        for r in self._read_live(spark, entry["live"])
+                        .select(*keys, pc)
                         .join(
                             F.broadcast(source.select(*keys).distinct()),
                             keys,
@@ -2249,11 +2264,9 @@ class VersionedTable:
                         .collect()
                     }
                 touched = sorted(found)
-            types = dict((full if full is not None else source).dtypes)
-            if st is not None:
-                types = {
-                    c: t for c, t in types.items() if c in st[0].values()
-                }
+            types, current = self._read_at_schema(
+                spark, entry, touched, like=source
+            )
             new_cols = set(source.columns) - set(types)
             missing = set(types) - set(source.columns)
             if missing or (new_cols and not merge_schema):
@@ -2265,24 +2278,6 @@ class VersionedTable:
                     f"columns {sorted(missing)}. An upsert source carries "
                     "the full row; to widen the table, merge with "
                     "merge_schema=True (additive evolution)"
-                )
-            current = self._apply_widen(
-                self._read_snapshot(
-                    spark,
-                    {p: e for p, e in entry["live"].items() if p in touched},
-                    entry,
-                ),
-                entry,
-            )
-            if current is not None and set(current.columns) != set(types):
-                # pre-evolution files null-fill, dropped bytes drop
-                have = set(current.columns)
-                current = current.select(
-                    *[
-                        F.col(f"`{c}`") if c in have
-                        else F.lit(None).cast(t).alias(c)
-                        for c, t in types.items()
-                    ]
                 )
             append = False
             if (
@@ -2370,6 +2365,56 @@ class VersionedTable:
             base, touched, rel, parts, op="merge", files=files, txn=txn,
             extra={**cm, "op": "append"} if append else cm, append=append,
         )
+
+    def _read_at_schema(
+        self,
+        spark: SparkSession,
+        entry: dict,
+        parts,
+        with_pos: bool = False,
+        like: DataFrame | None = None,
+    ) -> tuple[dict[str, str], DataFrame | None]:
+        """The schema rules of the MERGE and row-level DML bodies:
+        returns (table types, the partitions ``parts`` of ``entry`` read
+        at those types; None when none of them is live).
+
+        The types are judged against the FULL live snapshot, widened,
+        rather than against the read partitions' files: after an
+        evolution those may be narrower than the table, and judging by
+        them would make acceptance partition-dependent. Under column
+        mapping only mapped columns count (a dropped column's bytes
+        still sit in old files but are not part of the schema). So
+        older files null-fill the columns added since, and dropped bytes
+        drop. ``like``'s types stand in when nothing is live;
+        ``with_pos`` keeps the (__file, __pos) row identity."""
+        full = self._apply_widen(self._read_live(spark, entry["live"]), entry)
+        src = full if full is not None else like
+        st = self._colmap_state(entry)
+        types = {
+            c: t for c, t in (src.dtypes if src is not None else [])
+            if st is None or c in st[0].values()
+        }
+        df = self._apply_widen(
+            self._read_snapshot(
+                spark,
+                {p: e for p, e in entry["live"].items() if p in parts},
+                entry,
+                with_pos=with_pos,
+            ),
+            entry,
+        )
+        pos = ["__file", "__pos"] if with_pos else []
+        if df is not None and set(df.columns) != set(types) | set(pos):
+            have = set(df.columns)
+            df = df.select(
+                *[
+                    F.col(f"`{c}`") if c in have
+                    else F.lit(None).cast(t).alias(c)
+                    for c, t in types.items()
+                ],
+                *pos,
+            )
+        return types, df
 
     def append(
         self, df: DataFrame, txn: tuple[str, int] | None = None
@@ -2630,106 +2675,36 @@ class VersionedTable:
         candidate_partitions: Sequence[str] | None = None,
         mode: str = "cow",
     ) -> int:
-        """Row-level DELETE: rewrite only the partitions that contain
-        matching rows, keeping the non-matching rows; a partition whose
-        every row matches is dropped from live with no rewrite at all.
-        Untouched partitions keep their existing file pointers, so the
-        REWRITE cost tracks the data actually deleted. Touched-partition
-        DISCOVERY, however, is one probe scan over the live snapshot —
-        O(table), not O(deleted) — unless ``candidate_partitions``
-        bounds it: when the caller can prove every matching row lives in
-        those partitions (e.g. the predicate constrains the partition
-        column), both the probe and the rewrite read only them, the
-        Delta partition-predicate fast path. ``predicate`` is a Column
-        or SQL string; SQL DELETE semantics — only rows where it
-        evaluates TRUE are deleted, NULL (unknown) keeps the row.
-        Returns the new version (or the current one when nothing
-        matches).
+        """Row-level DELETE of the rows where ``predicate`` evaluates
+        TRUE (SQL semantics: NULL, unknown, keeps the row). Returns the
+        new version, or the current one when nothing matches. One DML
+        body (:meth:`_dml`) serves this method and :meth:`update_where`;
+        see it for the shared rules and ``candidate_partitions``.
+
+        ``predicate`` is a SQL string in the table's LOGICAL column
+        names, or a Column. A Column resolves against the PHYSICAL file
+        names, so under a non-identity column mapping (after a rename)
+        pass a SQL string; a Column naming a renamed column fails
+        loudly with UNRESOLVED_COLUMN.
+
+        ``mode="cow"`` (copy-on-write) rewrites the partitions holding
+        matches with their surviving rows; a partition left with no row
+        is dropped from live with no rewrite at all. Untouched
+        partitions keep their file pointers, so the rewrite cost tracks
+        the data actually deleted.
 
         ``mode="mor"`` is the deletion-vector path (Delta DVs / Iceberg
-        positional deletes): instead of rewriting touched partitions it
-        commits a POSITIONAL sidecar of (file, row_index) pairs for the
-        matched rows — write cost O(deleted rows), zero data rewrite,
-        so a GDPR-erasure trickle against 100 TB stops rewriting
-        terabytes. Readers anti-join the sidecar on exact file identity
-        (no version gating needed — rewritten files have new names);
-        compact/compact_partitions folds DVs into real file rewrites;
-        time travel, CDF and vacuum stay exact because the sidecar is a
-        normal dv log entry. The trade vs COW is the standard one:
-        write-optimal now, a small per-read anti-join tax until the
-        next OPTIMIZE."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.path}")
-        if isinstance(predicate, str):
-            predicate = self._predicate_to_physical(
-                predicate, self._head_colmap()
-            )
-        cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        # Null-safe once: without this, `where(~cond)` silently drops
-        # NULL-evaluating rows from rewritten partitions while identical
-        # rows in untouched partitions survive — partition-dependent
-        # data loss diverging from SQL/Delta DELETE (ADVICE r7).
-        cond = F.coalesce(cond.cast("boolean"), F.lit(False))
-        entry = self._read_entry(base)
-        live = entry["live"]
-        if candidate_partitions is not None:
-            cand = {str(v) for v in candidate_partitions}
-            live = {p: e for p, e in live.items() if p in cand}
-            if not live:
-                return base
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"unknown delete mode '{mode}'")
-        if mode == "mor":
-            snap = self._read_snapshot(spark, live, entry, with_pos=True)
-            assert snap is not None
-            matches = snap.where(cond)
-            if self.partition_col:
-                touched = sorted(
-                    str(r[0])
-                    for r in matches.select(self.partition_col)
-                    .distinct()
-                    .collect()
-                )
-            else:
-                touched = (
-                    [_UNPARTITIONED] if matches.limit(1).count() else []
-                )
-            if not touched:
-                return base
-            dv_rel = os.path.join("data", uuid.uuid4().hex[:12])
-            matches.select("__file", "__pos").write.parquet(
-                os.path.join(self.path, dv_rel)
-            )
-            return self._commit_rdv(base, touched, dv_rel, "delete_rows")
-        snapshot = self._read_snapshot(spark, live, entry)
-        assert snapshot is not None
-        if self.partition_col:
-            touched = sorted(
-                str(r[0])
-                for r in snapshot.where(cond)
-                .select(self.partition_col)
-                .distinct()
-                .collect()
-            )
-        else:
-            touched = (
-                [_UNPARTITIONED]
-                if snapshot.where(cond).limit(1).count()
-                else []
-            )
-        if not touched:
-            return base
-        current = self._read_snapshot(
-            spark, {p: live[p] for p in touched if p in live}, entry
-        )
-        assert current is not None
-        remaining = current.where(~cond)
-        if remaining.limit(1).count() == 0:
-            # nothing survives in the touched partitions: pure drop
-            return self._commit_delete(base, touched, None, {})
-        rel, parts, files = self._stage(remaining)
-        return self._commit_delete(base, touched, rel, parts, files=files)
+        positional deletes): it commits a POSITIONAL sidecar of (file,
+        row_index) pairs for the matched rows and rewrites nothing —
+        write cost O(deleted rows), so a GDPR-erasure trickle against
+        100 TB stops rewriting terabytes. Readers anti-join the sidecar
+        on exact file identity (rewritten files have new names, so no
+        version gating is needed); compact/compact_partitions fold DVs
+        into real file rewrites; time travel, CDF and vacuum stay exact
+        because the sidecar is a normal dv log entry. The trade vs COW
+        is the standard one: write-optimal now, a small per-read
+        anti-join tax until the next OPTIMIZE."""
+        return self._dml(spark, predicate, None, candidate_partitions, mode)
 
     def update_where(
         self,
@@ -2739,165 +2714,158 @@ class VersionedTable:
         candidate_partitions: Sequence[str] | None = None,
         mode: str = "cow",
     ) -> int:
-        """Row-level UPDATE (the DML twin of :meth:`delete_where`):
-        rewrite only the partitions that contain matched rows, applying
-        ``assignments`` ({column -> Column | SQL string}) to the matched
-        rows and keeping every other row byte-identical; untouched
-        partitions keep their existing file pointers. Assigned values
-        are cast back to the column's declared type, so the table schema
-        is stable across updates. The partition column cannot be
-        assigned — rows may not move between partitions (that is a
-        DELETE + MERGE, as in Delta). SQL UPDATE semantics: only rows
-        where the predicate evaluates TRUE change; NULL (unknown) keeps
-        the row as-is. ``candidate_partitions`` bounds the probe scan
-        exactly as in delete_where. Returns the new version (or the
-        current one when nothing matches).
+        """Row-level UPDATE: apply ``assignments`` ({column -> Column |
+        SQL string}) to the rows where ``predicate`` evaluates TRUE
+        (NULL keeps the row as-is), keeping every other row
+        byte-identical. Assigned values are cast to the column's type in
+        the table's schema (its widened type after widen_column; a
+        column added by merge_schema is assignable in every partition),
+        so the schema is stable across updates. The partition column
+        cannot be assigned — rows may not move between partitions (that
+        is a DELETE + MERGE, as in Delta). Returns the new version, or
+        the current one when nothing matches. One DML body
+        (:meth:`_dml`) serves this method and :meth:`delete_where`.
+        ``predicate`` and string assignments are SQL in the table's
+        LOGICAL column names; a Column predicate or assignment resolves
+        against the PHYSICAL file names, so under a non-identity column
+        mapping pass SQL strings (a Column naming a renamed column
+        fails loudly with UNRESOLVED_COLUMN).
+
+        ``mode="cow"`` rewrites the partitions holding matches, with
+        the assignments applied to the matched rows; untouched
+        partitions keep their file pointers.
 
         ``mode="mor"`` is the deletion-vector UPDATE (Delta DV update /
-        Iceberg positional delete + data file): the OLD images of
-        matched rows are suppressed by a positional (file, row_index)
-        sidecar and the UPDATED images are staged as an appended
-        pointer — write cost O(updated rows), zero rewrite of the
-        unmatched rows sharing their partitions. Constraints, generated
-        columns and file stats apply to the appended images exactly as
-        to any staged write; OPTIMIZE folds both halves back into plain
-        files. Read model: see delete_where(mode="mor"); conflicts:
-        see _CONFLICTS.
+        Iceberg positional delete + data file): a positional sidecar
+        suppresses the OLD images of matched rows and the UPDATED images
+        are staged as an appended pointer — write cost O(updated rows),
+        zero rewrite of the unmatched rows sharing their partitions.
+        Constraints, generated columns and file stats apply to the
+        appended images as to any staged write; OPTIMIZE folds both
+        halves back into plain files. Read model: see
+        delete_where(mode="mor"); conflicts: see _CONFLICTS."""
+        return self._dml(
+            spark, predicate, assignments, candidate_partitions, mode
+        )
 
-        Reference analog: none — the reference rebuilds whole tables
-        (src/warehousing_lambda.py:64-71); this is the in-place DML a
-        lakehouse deployment needs (VERDICT r7 item 2)."""
-        base = self.latest_version()
+    def _dml(
+        self,
+        spark: SparkSession,
+        predicate,
+        assign: dict | None,
+        candidate_partitions: Sequence[str] | None,
+        mode: str,
+    ) -> int:
+        """The one row-level DML body behind :meth:`delete_where`
+        (``assign`` None) and :meth:`update_where`. It owns, once:
+
+        - validation before any data IO: ``mode``, and the assignments'
+          partition-column rule;
+        - name translation of the SQL strings, from LOGICAL to
+          physical names, under the head entry it read first (Columns
+          pass through: they already name physical columns);
+        - the null-safe condition: SQL three-valued logic, so a row
+          whose predicate is NULL is neither deleted nor updated;
+        - the schema rules of :meth:`_read_at_schema`, shared with the
+          MERGE body: assignments must name table columns and cast to
+          the table's types, and every read null-fills older files;
+        - candidate pruning: ``candidate_partitions`` is the caller's
+          proof that every matching row lives in those partitions (e.g.
+          the predicate constrains the partition column), so the probe
+          and the rewrite read only them — Delta's partition-predicate
+          fast path. Without it, touched-partition DISCOVERY is one
+          probe scan over the live snapshot, O(table);
+        - one touched-partition discovery over the matched rows.
+
+        The one branch is the plan: copy-on-write DELETE stages the
+        survivors of the touched partitions (dropping them when none
+        survives), copy-on-write UPDATE stages them with the
+        assignments applied under the condition, and merge-on-read
+        writes the matches' positional sidecar, plus the staged
+        postimages for an UPDATE. Commits go through
+        :meth:`_commit_delete` (copy-on-write) or :meth:`_commit_rdv`
+        (merge-on-read)."""
+        op = "delete" if assign is None else "update"
+        if mode not in ("cow", "mor"):
+            raise ValueError(f"unknown {op} mode '{mode}'")
+        base, entry = self._head()
         if base is None:
             raise FileNotFoundError(f"no commits at {self.path}")
-        cmst = self._head_colmap()
-        if cmst is not None:
-            if isinstance(predicate, str):
-                predicate = self._predicate_to_physical(predicate, cmst)
-            assignments = {
-                self._cols_to_physical([c], cmst)[0]: (
-                    self._predicate_to_physical(v, cmst)
-                    if isinstance(v, str)
-                    else v
-                )
-                for c, v in assignments.items()
-            }
-        if self.partition_col and self.partition_col in assignments:
-            raise ValueError(
-                f"cannot assign partition column '{self.partition_col}' "
-                "(rows may not move partitions); DELETE + MERGE instead"
-            )
-        cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        cond = F.coalesce(cond.cast("boolean"), F.lit(False))
-        entry = self._read_entry(base)
-        live = entry["live"]
+        st = self._colmap_state(entry)
+        if assign is not None:
+            assign = self._assignments_to_physical(assign, st)
+        if isinstance(predicate, str):
+            predicate = F.expr(self._predicate_to_physical(predicate, st))
+        # Null-safe once: without this, `where(~cond)` silently drops
+        # NULL-evaluating rows from rewritten partitions while identical
+        # rows in untouched partitions survive — partition-dependent
+        # data loss diverging from SQL/Delta DELETE (ADVICE r7).
+        cond = F.coalesce(predicate.cast("boolean"), F.lit(False))
+        if not entry["live"]:
+            return base  # every partition deleted: no row, no schema
+        parts = entry["live"].keys()
         if candidate_partitions is not None:
-            cand = {str(v) for v in candidate_partitions}
-            live = {p: e for p, e in live.items() if p in cand}
-            if not live:
-                return base
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"unknown update mode '{mode}'")
+            parts = {str(v) for v in candidate_partitions}
+        types, snap = self._read_at_schema(
+            spark, entry, parts, with_pos=mode == "mor"
+        )
+        unknown = set(assign or ()) - set(types)
+        if unknown:
+            raise ValueError(
+                f"assignments reference unknown columns: {sorted(unknown)}"
+            )
+        if snap is None:
+            return base
+        matched = snap.where(cond)
+        pc = self.partition_col
+        if pc:
+            touched = sorted(
+                str(r[0]) for r in matched.select(pc).distinct().collect()
+            )
+        else:
+            touched = [_UNPARTITIONED] if matched.limit(1).count() else []
+        if not touched:
+            return base
+
+        def assigned(df: DataFrame, guard) -> DataFrame:
+            """``df``'s data columns with the assignments applied where
+            ``guard`` holds (everywhere when None)."""
+            def col(c: str):
+                if c not in assign:
+                    return F.col(c)
+                v = assign[c]
+                v = (F.expr(v) if isinstance(v, str) else v).cast(types[c])
+                if guard is not None:
+                    v = F.when(guard, v).otherwise(F.col(c))
+                return v.alias(c)
+
+            return df.select(
+                *[col(c) for c in df.columns if c not in ("__file", "__pos")]
+            )
+
         if mode == "mor":
-            snap = self._read_snapshot(spark, live, entry, with_pos=True)
-            assert snap is not None
-            matched = snap.where(cond)
-            if self.partition_col:
-                touched = sorted(
-                    str(r[0])
-                    for r in matched.select(self.partition_col)
-                    .distinct()
-                    .collect()
-                )
-            else:
-                touched = (
-                    [_UNPARTITIONED] if matched.limit(1).count() else []
-                )
-            if not touched:
-                return base
-            data_cols = [
-                c for c in snap.columns if c not in ("__file", "__pos")
-            ]
-            types = dict(
-                (c, t) for c, t in snap.dtypes if c in set(data_cols)
-            )
-            unknown = set(assignments) - set(types)
-            if unknown:
-                raise ValueError(
-                    "assignments reference unknown columns: "
-                    f"{sorted(unknown)}"
-                )
-            updated = matched.select(
-                *[
-                    (F.expr(v) if isinstance(v, str) else v)
-                    .cast(types[c])
-                    .alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c, v in (
-                        (c, assignments.get(c)) for c in data_cols
-                    )
-                ]
-            )
             dv_rel = os.path.join("data", uuid.uuid4().hex[:12])
             matched.select("__file", "__pos").write.parquet(
                 os.path.join(self.path, dv_rel)
             )
-            add_rel, parts, files = self._stage(updated)
+            if assign is None:
+                return self._commit_rdv(base, touched, dv_rel, "delete_rows")
+            rel, staged, files = self._stage(assigned(matched, None))
             return self._commit_rdv(
-                base,
-                touched,
-                dv_rel,
-                "update_rows",
-                add_rel=add_rel,
-                add_parts=parts,
-                add_files=files,
-                update_cols=list(assignments),
+                base, touched, dv_rel, "update_rows", add_rel=rel,
+                add_parts=staged, add_files=files, update_cols=list(assign),
             )
-        snapshot = self._read_snapshot(spark, live, entry)
-        assert snapshot is not None
-        if self.partition_col:
-            touched = sorted(
-                str(r[0])
-                for r in snapshot.where(cond)
-                .select(self.partition_col)
-                .distinct()
-                .collect()
-            )
+        current = self._read_at_schema(spark, entry, touched)[1]
+        if assign is not None:
+            out = assigned(current, cond)
         else:
-            touched = (
-                [_UNPARTITIONED]
-                if snapshot.where(cond).limit(1).count()
-                else []
-            )
-        if not touched:
-            return base
-        current = self._read_snapshot(
-            spark, {p: live[p] for p in touched if p in live}, entry
-        )
-        assert current is not None
-        types = dict(current.dtypes)
-        unknown = set(assignments) - set(types)
-        if unknown:
-            raise ValueError(f"assignments reference unknown columns: {sorted(unknown)}")
-        updated = current.select(
-            *[
-                F.when(
-                    cond,
-                    (
-                        F.expr(v) if isinstance(v, str) else v
-                    ).cast(types[c]),
-                )
-                .otherwise(F.col(c))
-                .alias(c)
-                if c in assignments
-                else F.col(c)
-                for c, v in ((c, assignments.get(c)) for c in current.columns)
-            ]
-        )
-        rel, parts, files = self._stage(updated)
+            out = current.where(~cond)
+            if out.limit(1).count() == 0:
+                # nothing survives in the touched partitions: pure drop
+                return self._commit_delete(base, touched, None, {})
+        rel, staged, files = self._stage(out)
         return self._commit_delete(
-            base, touched, rel, parts, op="update", files=files
+            base, touched, rel, staged, op=op, files=files
         )
 
     def delete_keys(self, spark: SparkSession, keys_df: DataFrame) -> int:
@@ -3801,8 +3769,13 @@ class VersionedTable:
         on the z-value — EVERY named dimension stays bounded per file,
         so a predicate on ANY of them prunes most files through the
         stats-skipping read path. The min/max scan is one control-plane
-        aggregate (2 scalars per column)."""
-        df = self.read(spark)
+        aggregate (2 scalars per column).
+
+        The snapshot is read and translated under one entry, so a
+        rename or drop landing before the commit is a conflict, never a
+        silent revert of the new name."""
+        base, entry = self._head()
+        df = self.read(spark, version=base)
         if cluster_by and zorder_by:
             raise ValueError("pass cluster_by or zorder_by, not both")
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -3869,7 +3842,7 @@ class VersionedTable:
             df = df.coalesce(n_out)
         # op is part of the entry from the start (no post-hoc relabel of
         # a visible entry): writers rebasing across it read 'compact'
-        return self.overwrite(df, op="compact")
+        return self._overwrite(df, entry, op="compact")
 
     def _live_bytes(self) -> int:
         """Total bytes of the head's live files — pointer ``sz`` stats

@@ -16,11 +16,10 @@ def test_every_oracle_has_a_query():
 
 
 def test_queries_md_is_fresh():
-    qs = entry_mod.queries()
-    text = open("QUERIES.md").read()
-    for name in qs:
-        assert f"`{name}`" in text, f"{name} missing from QUERIES.md — rerun tools/inventory.py"
-    assert f"Totals: {len(qs)} queries" in text
+    from tools.inventory import render
+
+    with open("QUERIES.md") as f:
+        assert f.read() == render(), "QUERIES.md is stale — rerun tools/inventory.py"
 
 
 def test_query_signatures():

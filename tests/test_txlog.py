@@ -576,6 +576,9 @@ def test_delete_where_unpartitioned_and_empty_table_read(spark, table_factory):
     v = t.delete_where(spark, "id = 2")  # last row gone -> live empty
     with pytest.raises(ValueError, match="no live data"):
         t.read(spark)
+    # no row left to match: DML on the emptied head is a no-op
+    assert t.delete_where(spark, "id = 1") == v
+    assert t.update_where(spark, "id = 1", {"s": "'x'"}, mode="mor") == v
     assert _rows(t.read(spark, version=1)) == {1: "a", 2: "b"}  # time travel
 
 
@@ -670,6 +673,70 @@ def test_update_where_unpartitioned_and_time_travel(spark, table_factory):
     t.update_where(spark, "id = 1", {"s": "'A'"})
     assert _rows(t.read(spark)) == {1: "A", 2: "b"}
     assert _rows(t.read(spark, version=1)) == {1: "a", 2: "b"}
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_update_where_after_widen_column_stores_wide_values(
+    spark, table_factory, mode
+):
+    """Assignments cast to the table's widened type, not to the narrow
+    type of the files written before widen_column."""
+    t = table_factory("t")
+    t.overwrite(spark.createDataFrame([(1, 1), (2, 2)], "id long, v int"))
+    t.widen_column(spark, "v", "bigint")
+    t.update_where(spark, "id = 1", {"v": "5000000000"}, mode=mode)
+    out = t.read(spark)
+    assert dict(out.dtypes)["v"] == "bigint"
+    assert {r["id"]: r["v"] for r in out.collect()} == {
+        1: 5_000_000_000, 2: 2,
+    }
+
+
+def test_update_where_older_than_a_widening_matches_mor(spark, table_factory):
+    """After a merge_schema=True widening, partition 0 still holds the
+    narrow files. Assigning the added column to rows that live only
+    there is an update of the table's schema: copy-on-write accepts it
+    and lands the rows merge-on-read lands."""
+    wide = "id long, s string, pb int, score double"
+    got = {}
+    for mode in ("cow", "mor"):
+        t = table_factory(f"t_{mode}", partition_col="pb")
+        t.overwrite(_mk(spark, [(1, "a", 0), (4, "d", 0), (2, "b", 1)]))
+        t.merge(
+            spark, spark.createDataFrame([(2, "B", 1, 9.5)], wide), ["id"],
+            merge_schema=True,
+        )
+        t.update_where(spark, "id = 1", {"score": "1.5"}, mode=mode)
+        got[mode] = {
+            r["id"]: (r["s"], r["score"]) for r in t.read(spark).collect()
+        }
+    assert got["cow"] == got["mor"] == {
+        1: ("a", 1.5), 2: ("B", 9.5), 4: ("d", None),
+    }
+
+
+def test_dml_rejects_an_unknown_mode_with_no_candidates(spark, table_factory):
+    t = table_factory("t", partition_col="pb")
+    t.overwrite(_mk(spark, [(1, "a", 0)]))
+    with pytest.raises(ValueError, match="mode 'bogus'"):
+        t.delete_where(spark, "id = 1", candidate_partitions=[], mode="bogus")
+    with pytest.raises(ValueError, match="mode 'bogus'"):
+        t.update_where(
+            spark, "id = 1", {"s": "'x'"}, candidate_partitions=[],
+            mode="bogus",
+        )
+    assert t.latest_version() == 1
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_update_where_unknown_column_when_no_row_matches(
+    spark, table_factory, mode
+):
+    t = table_factory("t", partition_col="pb")
+    t.overwrite(_mk(spark, [(1, "a", 0)]))
+    with pytest.raises(ValueError, match="unknown columns"):
+        t.update_where(spark, "id = 99", {"nope": "'x'"}, mode=mode)
+    assert t.latest_version() == 1
 
 
 def test_merge_rebases_over_disjoint_update(spark, table_factory):
@@ -2143,6 +2210,30 @@ class TestColumnMapping:
         head = t._read_entry(t.latest_version())
         cmap = head["colmap"]
         assert cmap["s_old"] == "s" and cmap["s"] != "s"
+
+    def test_compact_conflicts_with_a_rename_landing_during_its_read(
+        self, spark, table_factory
+    ):
+        """A rename that lands between compact's snapshot read and its
+        commit is a conflict: compact translates its frame under the
+        entry it read, so it can never bind the old name as a new column
+        and revert the rename."""
+        t = table_factory("cm_compact")
+        t.overwrite(
+            spark.createDataFrame([(1, "a", 10)], "id long, s string, x int")
+        )
+        t.rename_column(spark, "s", "s0")
+        read = t.read
+
+        def read_then_rename(*a, **kw):
+            df = read(*a, **kw)
+            table_factory(t.path).rename_column(spark, "x", "y")
+            return df
+
+        t.read = read_then_rename
+        with pytest.raises(ConcurrentWriteError):
+            t.compact(spark)
+        assert read(spark).columns == ["id", "s0", "y"]
 
 
 # ---------------------------------------------------------- protocol

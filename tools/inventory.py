@@ -1,13 +1,15 @@
 """Generate QUERIES.md — the live inventory of the driver-contract
 surface: every queries() entry, its implementing function, and whether it
-has a DuckDB oracle. Run after adding queries; CI-style freshness is
-enforced by tests/test_entry_contract.py checking counts match."""
+has a DuckDB oracle. Run after adding queries; tests/test_entry_contract.py
+requires QUERIES.md to equal render() byte for byte."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
@@ -24,7 +26,7 @@ outputs non-portable, as noted inline in `__spark_entry__.py`).
 """
 
 
-def main() -> None:
+def render() -> str:
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     lines = [HEADER]
@@ -37,9 +39,14 @@ def main() -> None:
         f"\nTotals: {len(qs)} queries, {len(oracles)} oracle-checked, "
         f"{len(qs) - len(oracles)} rows-only.\n"
     )
-    with open("/root/repo/QUERIES.md", "w") as f:
-        f.writelines(lines)
-    print(f"QUERIES.md: {len(qs)} queries, {len(oracles)} oracles")
+    return "".join(lines)
+
+
+def main() -> None:
+    text = render()
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
+        f.write(text)
+    print(text.splitlines()[-1])
 
 
 if __name__ == "__main__":
