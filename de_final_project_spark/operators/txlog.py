@@ -390,12 +390,12 @@ _O = "conflict-if-touched-overlaps"
 # Column groups of _CONFLICTS: the op an intervening commit recorded.
 # An op in no group (a future op, or "clone") conflicts.
 _COLUMNS = (
-    ("overwrite", "compact", "restore",
+    ("overwrite", "restore",
      "rename_column", "drop_column", "widen_column"),
     ("analyze",),
     ("delete_keys",),
     ("wap_stage", "wap_discard", "wap_publish"),
-    ("merge", "delete", "update", "compact_parts"),
+    ("merge", "delete", "update", "compact", "compact_parts"),
     ("append",),
     ("delete_rows",),
     ("update_rows",),
@@ -403,10 +403,11 @@ _COLUMNS = (
 
 # Row classes: the op being committed.
 _ROWS = {
-    "blind": ("overwrite", "compact", "restore", "analyze",
+    "blind": ("overwrite", "restore", "analyze",
               "rename_column", "drop_column", "widen_column",
               "delete_keys", "wap_stage", "wap_discard"),
-    "copy_on_write": ("merge", "delete", "update", "compact_parts"),
+    "copy_on_write": ("merge", "delete", "update", "compact",
+                      "compact_parts"),
     "append": ("append",),
     "delete_rows": ("delete_rows",),
     "update_rows": ("update_rows",),
@@ -434,10 +435,12 @@ any conflicting commit aborts.
 - blind: the op rebuilds its whole entry from whatever head it finds
   (nothing it commits was computed from an older snapshot), so it
   rebases over everything and the walk is skipped.
-- copy_on_write rewrote its touched partitions from the base. Ops that
+- copy_on_write rewrote its touched partitions from the base;
+  compaction is one of them (it rewrites the rows it read, so a data
+  commit on a partition it read must not be undone). Ops that
   enumerate every partition they changed in ``touched`` (copy-on-write,
-  append, merge-on-read) are safe when disjoint. overwrite, compact and
-  restore list only partitions they KEPT, so disjointness proves
+  compaction, append, merge-on-read) are safe when disjoint. overwrite
+  and restore list only partitions they KEPT, so disjointness proves
   nothing: conflict, or a rebase would resurrect rows they removed.
   Schema changes conflict because our column-mapping fields were taken
   at the base. A delete_keys tombstone conflicts: our survivors were
@@ -1542,31 +1545,35 @@ class VersionedTable:
              "type_widened": {"col": col, "from": cur, "to": new_type}},
         )
 
-    def _harvest_ptr_stats(
-        self, ptr: dict, cols: Sequence[str]
+    def _file_entries(
+        self, ptr: dict, cols: Sequence[str] | None = None
     ) -> list[dict]:
-        """Per-file stats entries for one live pointer, harvested from
-        parquet FOOTERS (driver-side metadata reads — no data scan).
-        Same harvesting rules as _collect_file_stats: a column without
-        usable footer min/max stays unindexed for that file
-        (conservative — the file is simply never pruned on it)."""
+        """The per-file log entries of one pointer: its ``files`` when
+        it has them, else its directory listed, one ``{"f": path
+        relative to the commit dir, "s": {col: [min, max]}, "sz":
+        bytes}`` per parquet file. The stats of ``cols`` come from the
+        parquet FOOTERS (driver-side metadata reads, no data scan); no
+        footer is opened when ``cols`` is empty. A column without
+        usable footer min/max (e.g. an all-null row group) stays
+        unindexed for that file, which is then never pruned on it:
+        conservative by construction."""
+        if ptr.get("files") is not None:
+            return ptr["files"]
         import pyarrow.parquet as pq
 
-        d = os.path.join(
-            self.path, ptr["commit_dir"], ptr.get("part_dir", "")
-        )
+        sub = ptr.get("part_dir", "")
+        d = os.path.join(self.path, ptr["commit_dir"], sub)
         entries = []
         for name in sorted(os.listdir(d)):
             if not name.endswith(".parquet"):
                 continue
-            md = pq.ParquetFile(os.path.join(d, name)).metadata
+            path = os.path.join(d, name)
+            stats: dict[str, list] = {}
+            md = pq.ParquetFile(path).metadata if cols else None
             idx = {
                 md.schema.column(i).name: i for i in range(md.num_columns)
-            }
-            stats: dict[str, list] = {}
-            for c in cols:
-                if c not in idx:
-                    continue
+            } if md else {}
+            for c in (c for c in cols or () if c in idx):
                 mn = mx = None
                 usable = True
                 for rg in range(md.num_row_groups):
@@ -1582,12 +1589,11 @@ class VersionedTable:
                     jmn, jmx = _json_stat(mn), _json_stat(mx)
                     if jmn is not None and jmx is not None:
                         stats[c] = [jmn, jmx]
-            sub = ptr.get("part_dir", "")
             entries.append(
                 {
                     "f": os.path.join(sub, name) if sub else name,
                     "s": stats,
-                    "sz": os.path.getsize(os.path.join(d, name)),
+                    "sz": os.path.getsize(path),
                 }
             )
         return entries
@@ -1616,12 +1622,14 @@ class VersionedTable:
 
         def backfill(ptr: dict) -> dict:
             key = (ptr["commit_dir"], ptr.get("part_dir", ""))
+            # harvested from the directory, whatever ``files`` holds
+            bare = {"commit_dir": key[0], "part_dir": key[1]}
             have = ptr.get("files")
             if have is None:
                 return {
                     **ptr,
                     "files": cache.setdefault(
-                        key, self._harvest_ptr_stats(ptr, cols)
+                        key, self._file_entries(bare, cols)
                     ),
                 }
             missing = [
@@ -1636,7 +1644,7 @@ class VersionedTable:
             # stats win on overlap — they were taken from the same
             # footers, and preserving them keeps this idempotent)
             fresh = cache.setdefault(
-                key, self._harvest_ptr_stats(ptr, cols)
+                key, self._file_entries(bare, cols)
             )
             by_f = {fe["f"]: fe for fe in fresh}
             return {
@@ -1820,30 +1828,14 @@ class VersionedTable:
             }
         else:
             parts = {_UNPARTITIONED: ""}
-        files = self._collect_file_stats(full, parts)
+        # blooms ride the same per-file log entries as stats
+        files = {
+            p: self._file_entries(
+                {"commit_dir": rel, "part_dir": sub}, self.stats_cols
+            )
+            for p, sub in parts.items()
+        } if self.stats_cols or self.bloom_cols else {}
         if self.bloom_cols:
-            if not files:
-                # blooms ride the same per-file log entries as stats
-                files = {
-                    p: [
-                        {
-                            "f": os.path.join(sub, n) if sub else n,
-                            "s": {},
-                            "sz": os.path.getsize(
-                                os.path.join(full, sub, n)
-                                if sub
-                                else os.path.join(full, n)
-                            ),
-                        }
-                        for n in sorted(
-                            os.listdir(
-                                os.path.join(full, sub) if sub else full
-                            )
-                        )
-                        if n.endswith(".parquet")
-                    ]
-                    for p, sub in parts.items()
-                }
             self._collect_blooms(df.sparkSession, full, files)
         return rel, parts, files
 
@@ -1937,62 +1929,6 @@ class VersionedTable:
         )
         return [row[f"p{s}"] for s in range(BLOOM_K)]
 
-    def _collect_file_stats(
-        self, full: str, parts: dict[str, str]
-    ) -> dict[str, list[dict]]:
-        """Harvest per-file min/max for ``stats_cols`` from the parquet
-        footers just written — driver-side metadata reads only, no data
-        scan. A row group without usable footer stats (e.g. all-null)
-        leaves that column unindexed for the file, which means the file
-        is never pruned on it — conservative by construction. Each entry
-        is ``{"f": path-relative-to-commit-dir, "s": {col: [min, max]}}``;
-        log entries grow O(files), the same bound Delta accepts (and the
-        same reason its checkpoints exist)."""
-        if not self.stats_cols:
-            return {}
-        import pyarrow.parquet as pq
-
-        out: dict[str, list[dict]] = {}
-        for p, sub in parts.items():
-            d = os.path.join(full, sub) if sub else full
-            entries = []
-            for name in sorted(os.listdir(d)):
-                if not name.endswith(".parquet"):
-                    continue
-                md = pq.ParquetFile(os.path.join(d, name)).metadata
-                idx = {
-                    md.schema.column(i).name: i
-                    for i in range(md.num_columns)
-                }
-                stats: dict[str, list] = {}
-                for c in self.stats_cols:
-                    if c not in idx:
-                        continue
-                    mn = mx = None
-                    usable = True
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx[c]).statistics
-                        if st is None or not st.has_min_max:
-                            usable = False
-                            break
-                        if mn is None or st.min < mn:
-                            mn = st.min
-                        if mx is None or st.max > mx:
-                            mx = st.max
-                    if usable and mn is not None:
-                        jmn, jmx = _json_stat(mn), _json_stat(mx)
-                        if jmn is not None and jmx is not None:
-                            stats[c] = [jmn, jmx]
-                entries.append(
-                    {
-                        "f": os.path.join(sub, name) if sub else name,
-                        "s": stats,
-                        "sz": os.path.getsize(os.path.join(d, name)),
-                    }
-                )
-            out[p] = entries
-        return out
-
     # --------------------------------------------------------- commits
     def overwrite(
         self,
@@ -2007,19 +1943,12 @@ class VersionedTable:
         contract as merge) — never stamped onto an already-visible
         entry after the fact, because a concurrent writer could read
         the unstamped entry and propagate a txn map without our
-        watermark, losing the idempotence guarantee (ADVICE r6)."""
-        return self._overwrite(df, self._head()[1], txn, op)
+        watermark, losing the idempotence guarantee (ADVICE r6).
 
-    def _overwrite(
-        self,
-        df: DataFrame,
-        entry: dict | None,
-        txn: tuple[str, int] | None = None,
-        op: str = "overwrite",
-    ) -> int:
-        """:meth:`overwrite` of a LOGICAL frame read under ``entry``: it
-        is translated under that entry's column mapping, and a rename or
-        drop landing before the commit is a ConcurrentWriteError."""
+        The frame is translated under the head entry read first, so a
+        rename or drop landing before the commit is a
+        ConcurrentWriteError."""
+        entry = self._head()[1]
         df, cm = self._prep_write(df, entry)
         st = self._colmap_state(entry)
         df = self._materialize_generated(df)
@@ -2031,8 +1960,8 @@ class VersionedTable:
                 p: _ptr(rel, sub, head + 1, files.get(p))
                 for p, sub in parts.items()
             }
-            # a full-snapshot rewrite reads THROUGH the tombstones
-            # (read() applies them), so the dv list resets
+            # no old pointer survives a full-snapshot replacement, so
+            # no tombstone applies: the dv list resets
             return live, [], cm
 
         # txn watermarks survive overwrites: idempotence tracking must
@@ -2600,13 +2529,17 @@ class VersionedTable:
         txn: tuple[str, int] | None = None,
         extra: dict | None = None,
         append: bool = False,
+        drop_dead_dv: bool = False,
     ) -> int:
         """Commit for the copy-on-write DML forms (delete, partition
-        drop, update, MERGE, partition compaction): point each touched
-        partition that still has data (``parts``) at the staged files —
-        appended to its pointer list when ``append`` (MERGE's no-match
-        plan), else replacing it — and drop the rest from live.
-        ``extra`` fields ride into the entry."""
+        drop, update, MERGE, compaction): point each touched partition
+        that still has data (``parts``) at the staged files — appended
+        to its pointer list when ``append`` (MERGE's no-match plan),
+        else replacing it — and drop the rest from live. ``extra``
+        fields ride into the entry. ``drop_dead_dv`` (compaction) drops
+        every tombstone no remaining live pointer can be subject to: a
+        pointer whose ``v`` (0 when absent) is at most the tombstone's
+        keeps it, so a whole-table rewrite clears the list."""
 
         def build(head: int, head_entry: dict):
             live = dict(head_entry["live"])
@@ -2618,7 +2551,17 @@ class VersionedTable:
                 if append and p in live:
                     ptr = _ptrs(live[p]) + [ptr]
                 live[p] = ptr
-            return live, None, extra or {}
+            dv = None
+            if drop_dead_dv:
+                oldest = min(
+                    (x.get("v", 0) for e in live.values() for x in _ptrs(e)),
+                    default=None,
+                )
+                dv = [
+                    t for t in head_entry.get("dv", [])
+                    if oldest is not None and oldest <= t["v"]
+                ]
+            return live, dv, extra or {}
 
         return self._commit(base_version, touched, op, build, txn=txn)
 
@@ -2879,7 +2822,9 @@ class VersionedTable:
         retro-deleted (its rewritten pointers carry a higher stamp and
         were themselves read THROUGH the tombstones — nothing deleted
         can resurface). ``compact()`` / any overwrite materializes the
-        deletes and clears the list; read cost until then is one
+        deletes and clears the list (a partition compaction drops the
+        tombstones no remaining pointer is subject to); read cost until
+        then is one
         broadcast-sized anti-join per tombstone column-set.
 
         vs :meth:`delete_where`: that is copy-on-write (read-optimal,
@@ -3746,13 +3691,13 @@ class VersionedTable:
         cluster_by: Sequence[str] | None = None,
         zorder_by: Sequence[str] | None = None,
     ) -> int:
-        """OPTIMIZE: rewrite the live set into ONE fresh commit. After
-        many merges the live map references many commit dirs (one scan
-        each); compaction returns the reader to a single scan and small
-        files to full row groups. It is just an overwrite of the current
-        snapshot — same atomicity, old versions stay time-travelable
-        until vacuum. Run it on the cadence small-file growth dictates,
-        exactly like Delta OPTIMIZE / Iceberg rewrite_data_files.
+        """OPTIMIZE: rewrite every live partition into ONE fresh commit
+        (:meth:`_compact`, op ``compact``). After many merges the live
+        map references many commit dirs (one scan each); compaction
+        returns the reader to a single scan and small files to full row
+        groups. Old versions stay time-travelable until vacuum. Run it
+        on the cadence small-file growth dictates, exactly like Delta
+        OPTIMIZE / Iceberg rewrite_data_files.
 
         ``cluster_by``: the rewrite sorts rows by the named columns
         (range-partitioned multi-column LEXICOGRAPHIC sort), so parquet
@@ -3771,24 +3716,81 @@ class VersionedTable:
         stats-skipping read path. The min/max scan is one control-plane
         aggregate (2 scalars per column).
 
-        The snapshot is read and translated under one entry, so a
-        rename or drop landing before the commit is a conflict, never a
-        silent revert of the new name."""
-        base, entry = self._head()
-        df = self.read(spark, version=base)
+        Without either, an unpartitioned table is coalesced to ~128 MB
+        files by the log's live byte count. A concurrent data commit on
+        a partition this read is a ConcurrentWriteError, never undone.
+        Returns the committed version (the head when nothing is live)."""
+        return self._compact(
+            spark, cluster_by=cluster_by, zorder_by=zorder_by
+        )[1]
+
+    def _compact(
+        self,
+        spark: SparkSession,
+        partitions: Sequence[str] | None = None,
+        min_files: int | None = None,
+        cluster_by: Sequence[str] | None = None,
+        zorder_by: Sequence[str] | None = None,
+        empty_ok: bool = False,
+    ) -> tuple[bool, int | None]:
+        """The one compaction body behind :meth:`compact`,
+        :meth:`compact_partitions` and :meth:`auto_compact`. It reads
+        the head once and rewrites the partitions it chose there: the
+        explicit ``partitions`` that are live, else those whose
+        pointers hold at least ``min_files`` files (pointer ``files``
+        stats, else one listdir per pointer), else every live one.
+        Nothing chosen returns before any Spark job. A choice
+        (``partitions`` or ``min_files``) on a partitioned table commits
+        as op ``compact_parts``, any other rewrite as ``compact``.
+
+        The chosen partitions are read by :meth:`_read_at_schema`, so
+        the files land at the table's widened types and without
+        dropped columns' bytes. The one layout step (``cluster_by``,
+        ``zorder_by``, or coalescing an unpartitioned table by live
+        bytes) runs, and the staged files commit through
+        :meth:`_commit_delete` with the version read as base:
+        ``touched`` lists every rewritten partition, so a data commit
+        landing on one conflicts, and the tombstones no remaining
+        pointer can be subject to drop. Returns (compacted, head
+        after); (False, None) on a table with no commits when
+        ``empty_ok``, which otherwise raises."""
         if cluster_by and zorder_by:
             raise ValueError("pass cluster_by or zorder_by, not both")
+        base, entry = self._head()
+        if base is None:
+            if empty_ok:
+                return False, None
+            raise FileNotFoundError(f"no commits at {self.path}")
+        live = entry["live"]
+
+        def files_of(p: str) -> list[dict]:
+            return [
+                fe for x in _ptrs(live[p]) for fe in self._file_entries(x)
+            ]
+
+        if partitions is not None:
+            touched = sorted({str(p) for p in partitions} & set(live))
+        else:
+            touched = sorted(
+                p for p in live
+                if min_files is None or len(files_of(p)) >= min_files
+            )
+        if not touched:
+            return False, base
+        _, df = self._read_at_schema(spark, entry, touched)
+        st = self._colmap_state(entry)
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        lead = [self.partition_col] if self.partition_col else []
         if cluster_by:
-            cols = (
-                [self.partition_col] if self.partition_col else []
-            ) + list(cluster_by)
+            cols = lead + self._cols_to_physical(cluster_by, st)
             df = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
         elif zorder_by:
             from de_final_project_spark.plans.clustering import (
                 grid_scale,
                 morton_n,
             )
+
+            zcols = self._cols_to_physical(zorder_by, st)
 
             def zkey(c: str):
                 """An order-preserving numeric key per supported type:
@@ -3806,9 +3808,9 @@ class VersionedTable:
                     )
                 return F.col(c).cast("double")
 
-            keyed = {c: zkey(c) for c in zorder_by}
+            keyed = {c: zkey(c) for c in zcols}
             bounds = df.agg(
-                *[f(keyed[c]) for c in zorder_by for f in (F.min, F.max)]
+                *[f(keyed[c]) for c in zcols for f in (F.min, F.max)]
             ).first()
             z = morton_n(
                 [
@@ -3818,71 +3820,30 @@ class VersionedTable:
                         bounds[2 * i] or 0.0,
                         bounds[2 * i + 1] or 1.0,
                     )
-                    for i, c in enumerate(zorder_by)
+                    for i, c in enumerate(zcols)
                 ]
             )
-            cols = (
-                [self.partition_col] if self.partition_col else []
-            ) + ["__z"]
             df = (
                 df.withColumn("__z", z)
-                .repartitionByRange(n, *cols)
-                .sortWithinPartitions(*cols)
+                .repartitionByRange(n, *lead, "__z")
+                .sortWithinPartitions(*lead, "__z")
                 .drop("__z")
             )
         elif not self.partition_col:
-            # plain unpartitioned compact: the whole point is fewer,
-            # fuller files, but a scan of N tiny files yields N tasks
-            # (Spark splits by totalSize/defaultParallelism), so the
-            # rewrite would reproduce the fragmentation it is meant to
-            # fix. Coalesce (no shuffle) to ~full row groups sized from
-            # the log's own live byte count.
-            target = 128 * 1024 * 1024
-            n_out = max(1, -(-self._live_bytes() // target))
-            df = df.coalesce(n_out)
-        # op is part of the entry from the start (no post-hoc relabel of
-        # a visible entry): writers rebasing across it read 'compact'
-        return self._overwrite(df, entry, op="compact")
-
-    def _live_bytes(self) -> int:
-        """Total bytes of the head's live files — pointer ``sz`` stats
-        when present, else one stat per file (control-plane)."""
-        head = self.latest_version()
-        if head is None:
-            return 0
-        total = 0
-        for e in self._read_entry(head)["live"].values():
-            for ptr in _ptrs(e):
-                if ptr.get("files") is not None:
-                    total += sum(f.get("sz", 0) for f in ptr["files"])
-                    continue
-                d = os.path.join(self.path, ptr["commit_dir"], ptr["part_dir"])
-                try:
-                    total += sum(
-                        os.path.getsize(os.path.join(d, f))
-                        for f in os.listdir(d)
-                        if f.endswith(".parquet")
-                    )
-                except FileNotFoundError:
-                    pass
-        return total
-
-    def _live_file_count(self, entry) -> int:
-        """Files behind one live-map value — pointer ``files`` stats
-        when present, else one listdir per pointer (control-plane)."""
-        total = 0
-        for ptr in _ptrs(entry):
-            if ptr.get("files") is not None:
-                total += len(ptr["files"])
-                continue
-            d = os.path.join(self.path, ptr["commit_dir"], ptr["part_dir"])
-            try:
-                total += sum(
-                    1 for n in os.listdir(d) if n.endswith(".parquet")
-                )
-            except FileNotFoundError:
-                pass
-        return total
+            # the whole point is fewer, fuller files, but a scan of N
+            # tiny files yields N tasks (Spark splits by
+            # totalSize/defaultParallelism), so the rewrite would
+            # reproduce the fragmentation it is meant to fix. Coalesce
+            # (no shuffle) to ~full row groups sized from the log's own
+            # live byte count.
+            size = sum(fe.get("sz", 0) for fe in files_of(_UNPARTITIONED))
+            df = df.coalesce(max(1, -(-size // (128 * 1024 * 1024))))
+        rel, parts, files = self._stage(df)
+        scoped = partitions is not None or min_files is not None
+        op = "compact_parts" if self.partition_col and scoped else "compact"
+        return True, self._commit_delete(
+            base, touched, rel, parts, op=op, files=files, drop_dead_dv=True
+        )
 
     def clone_to(
         self,
@@ -3972,48 +3933,24 @@ class VersionedTable:
         partitions: Sequence[str] | None = None,
         min_files: int = 2,
     ) -> int:
-        """Partition-scoped OPTIMIZE: rewrite only fragmented partitions
-        (those whose live pointer references >= ``min_files`` files, or
-        an explicit list) into one fresh commit each batch, leaving
-        every other pointer untouched. This is the form OPTIMIZE takes
-        at scale — a full-snapshot :meth:`compact` is a table rewrite,
-        unrealistic at 100 TB, while small-file debt accumulates
-        per-partition and can be paid per-partition. Because the commit
-        enumerates exactly the partitions it rewrote, concurrent
-        DISJOINT writers rebase over it, where a whole-snapshot compact
-        conflicts (see _CONFLICTS). Returns the current version when
-        nothing is fragmented. Requires a partitioned table; file
-        counts come from the log's stats entries when present, else
-        from listing the pointer's directory (one listdir per
-        candidate)."""
+        """Partition-scoped OPTIMIZE (:meth:`_compact`, op
+        ``compact_parts``): rewrite only the explicit ``partitions``,
+        or else those whose live pointers hold >= ``min_files`` files,
+        one file each, leaving every other pointer untouched. This is
+        the form OPTIMIZE takes at scale — a full-snapshot
+        :meth:`compact` is a table rewrite, unrealistic at 100 TB,
+        while small-file debt accumulates per-partition and can be paid
+        per-partition. Writers on the other partitions rebase over it
+        (see _CONFLICTS). Returns the current version when nothing is
+        fragmented. Requires a partitioned table."""
         if not self.partition_col:
             raise ValueError(
                 "compact_partitions needs a partitioned table; use "
                 "compact() for the whole-snapshot rewrite"
             )
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no commits at {self.path}")
-        live = self._read_entry(base)["live"]
-        if partitions is not None:
-            touched = sorted(str(p) for p in partitions if str(p) in live)
-        else:
-            touched = sorted(
-                p for p, e in live.items()
-                if self._live_file_count(e) >= min_files
-            )
-        if not touched:
-            return base
-        current = self._read_snapshot(
-            spark, {p: live[p] for p in touched}, self._read_entry(base)
-        )
-        assert current is not None
-        # one output file per partition value: _stage() clusters by the
-        # partition column itself, so no extra repartition here
-        rel, parts, files = self._stage(current)
-        return self._commit_delete(
-            base, touched, rel, parts, op="compact_parts", files=files
-        )
+        return self._compact(
+            spark, partitions, min_files if partitions is None else None
+        )[1]
 
     def auto_compact(
         self,
@@ -4022,37 +3959,22 @@ class VersionedTable:
         vacuum_retention: float | None = None,
     ) -> dict:
         """Post-refresh small-file policy for long-lived incrementally
-        maintained tables (VERDICT r11 item 5): check live file debt
-        from the log (control-plane — pointer ``files`` stats when
-        present, one listdir per candidate otherwise) and pay it only
-        when some partition's live count reaches ``max_files``.
+        maintained tables (VERDICT r11 item 5): :meth:`_compact` of the
+        partitions whose live pointers reach ``max_files`` files
+        (counted from the log: pointer ``files`` stats when present,
+        one listdir per pointer otherwise), as op ``compact_parts`` on
+        a partitioned table and ``compact`` on an unpartitioned one
+        (the append-only verdict/doclen relations — each append adds a
+        pointer, so a 1000-refresh table would otherwise open 1000
+        files per read). ``vacuum_retention`` (seconds), when set,
+        additionally reaps dead commit dirs older than the window — OFF
+        by default so callers keep time travel unless they opt out.
 
-        - partitioned tables: :meth:`compact_partitions` with
-          ``min_files=max_files`` — per-partition OPTIMIZE, disjoint
-          writers rebase over it;
-        - unpartitioned tables: whole-snapshot :meth:`compact` when the
-          single live pointer set reaches ``max_files`` files (the
-          append-only verdict/doclen relations — each append adds a
-          pointer, so a 1000-refresh table would otherwise open 1000
-          files per read);
-        - ``vacuum_retention`` (seconds), when set, additionally reaps
-          dead commit dirs older than the window — OFF by default so
-          callers keep time travel unless they opt out.
-
-        Returns {"compacted": bool, "version": head-after}. A no-op
-        when nothing is fragmented — safe (and cheap) to call on every
+        Returns {"compacted": bool, "version": head-after}; version is
+        None on a table with no commits. A no-op is one head read and
+        no Spark job, so it is safe (and cheap) to call on every
         refresh."""
-        head = self.latest_version()
-        if head is None:
-            return {"compacted": False, "version": None}
-        if self.partition_col:
-            v = self.compact_partitions(spark, min_files=max_files)
-            did = v != head
-        else:
-            entry = self._read_entry(head)["live"].get(_UNPARTITIONED)
-            n = self._live_file_count(entry) if entry else 0
-            did = n >= max_files
-            v = self.compact(spark) if did else head
+        did, v = self._compact(spark, min_files=max_files, empty_ok=True)
         if vacuum_retention is not None:
             self.vacuum(retention_seconds=vacuum_retention)
         return {"compacted": did, "version": v}
@@ -5021,7 +4943,7 @@ def versioned_compacted_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     live set into one commit (every partition folds back to a single
     scan — asserted — with rows sorted so parquet footers index the
     leading column); the pre-compact version stays time-travelable
-    across the compaction (asserted: OPTIMIZE is just an overwrite,
+    across the compaction (asserted: OPTIMIZE commits a new version,
     old snapshots intact); then ``vacuum(retain_versions=1,
     retention_seconds=0)`` deletes the now-unreferenced fragmented
     commit dirs (asserted non-empty) and drops the old log entries, so

@@ -110,17 +110,9 @@ def _table_arrow_fields(table) -> list[tuple[str, pa.DataType]]:
     entry = table._read_entry(head)
     for e in entry["live"].values():
         for ptr in _ptrs(e):
-            d = os.path.join(
-                table.path, ptr["commit_dir"], ptr.get("part_dir", "")
-            )
-            if not os.path.isdir(d):
-                continue
-            for n in sorted(os.listdir(d)):
-                if n.endswith(".parquet"):
-                    sch = pq.read_schema(os.path.join(d, n))
-                    return [
-                        (f.name, _normalize(f.type)) for f in sch
-                    ]
+            for f in _pointer_files(table, ptr):
+                sch = pq.read_schema(f)
+                return [(fd.name, _normalize(fd.type)) for fd in sch]
     raise FileNotFoundError(f"no live data files at {table.path}")
 
 
@@ -157,14 +149,7 @@ def _discover_partition_col(table) -> str | None:
 
 def _pointer_files(table, ptr: dict) -> list[str]:
     base = os.path.join(table.path, ptr["commit_dir"])
-    if ptr.get("files") is not None:
-        return [os.path.join(base, fe["f"]) for fe in ptr["files"]]
-    d = os.path.join(base, ptr.get("part_dir", ""))
-    return [
-        os.path.join(d, n)
-        for n in sorted(os.listdir(d))
-        if n.endswith(".parquet")
-    ]
+    return [os.path.join(base, fe["f"]) for fe in table._file_entries(ptr)]
 
 
 def _part_value_from_path(path: str, part_col: str) -> str | None:

@@ -187,6 +187,20 @@ def test_compact_partitions_folds_fragmented_lists(spark, table_factory):
     assert set(_rows(t.read(spark))) == set(range(30)) | {100}
 
 
+def test_compact_partitions_over_every_partition_clears_the_dv_list(
+    spark, table_factory
+):
+    """A partition compaction over every partition materializes a MOR
+    delete: no tombstone is left for later reads to anti-join, and the
+    read is unchanged."""
+    t = _seeded(table_factory, spark)
+    t.delete_where(spark, "id % 4 = 1", mode="mor")
+    before = _rows(t.read(spark))
+    v = t.compact_partitions(spark, partitions=["0", "1", "2"])
+    assert not t._read_entry(v).get("dv")
+    assert _rows(t.read(spark)) == before
+
+
 def test_time_travel_and_restore_across_dv(spark, table_factory):
     """Old versions read without the DV; RESTORE to a pre-DV version
     resurrects the rows metadata-only; the DV'd version stays readable

@@ -1765,6 +1765,80 @@ def test_compact_partitions_rebases_under_disjoint_merge(
     assert _rows(t.read(spark)) == {1: "a", 2: "B"}
 
 
+def _live_file_schemas(t, version):
+    """{column name: arrow type} of every parquet file live at
+    ``version``, one dict per file."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from de_final_project_spark.operators.txlog import _ptrs
+
+    out = []
+    for e in t._read_entry(version)["live"].values():
+        for ptr in _ptrs(e):
+            d = os.path.join(t.path, ptr["commit_dir"], ptr["part_dir"])
+            for f in sorted(glob.glob(os.path.join(d, "*.parquet"))):
+                out.append({fd.name: fd.type for fd in pq.read_schema(f)})
+    return out
+
+
+def test_compact_conflicts_with_an_append_landing_during_its_read(
+    spark, table_factory
+):
+    """compact rewrites the rows it read, so an append landing between
+    its read and its commit is a ConcurrentWriteError: the appended row
+    stays, and no compaction commits."""
+    t = table_factory("t")
+    t.overwrite(_mk(spark, [(1, "a", 0), (2, "b", 0)]))
+    snap = t._read_snapshot
+
+    def read_then_append(*a, **kw):
+        t._read_snapshot = snap
+        df = snap(*a, **kw)
+        table_factory(t.path).append(_mk(spark, [(3, "c", 0)]))
+        return df
+
+    t._read_snapshot = read_then_append
+    with pytest.raises(ConcurrentWriteError):
+        t.compact(spark)
+    assert _rows(t.read(spark)) == {1: "a", 2: "b", 3: "c"}
+    assert [h["op"] for h in t.history()] == ["overwrite", "append"]
+
+
+def test_compact_partitions_after_drop_column_writes_no_dropped_bytes(
+    spark, table_factory
+):
+    """A partition compaction after drop_column rewrites its files
+    without the dropped column's bytes, as the whole-table compact
+    does."""
+    t = table_factory("t", partition_col="pb")
+    t.overwrite(spark.createDataFrame(
+        [(1, "a", 10, 0), (2, "b", 20, 1)], "id long, s string, x int, pb int"
+    ))
+    t.drop_column(spark, "x")
+    v = t.compact_partitions(spark, partitions=["0", "1"])
+    assert [sorted(f) for f in _live_file_schemas(t, v)] == [["id", "s"]] * 2
+    assert _rows(t.read(spark)) == {1: "a", 2: "b"}
+
+
+def test_compact_partitions_after_widen_column_writes_the_wide_type(
+    spark, table_factory
+):
+    """A partition compaction after widen_column writes the widened
+    type, so later reads pay no cast for the rewritten files."""
+    import pyarrow as pa
+
+    t = table_factory("t", partition_col="pb")
+    t.overwrite(spark.createDataFrame(
+        [(1, "a", 10, 0), (2, "b", 20, 1)], "id long, s string, x int, pb int"
+    ))
+    t.widen_column(spark, "x", "bigint")
+    v = t.compact_partitions(spark, partitions=["0", "1"])
+    assert [f["x"] for f in _live_file_schemas(t, v)] == [pa.int64()] * 2
+    assert {r["x"] for r in t.read(spark).collect()} == {10, 20}
+
+
 # ------------------------------------------------------- concurrency stress
 
 def test_many_threads_merge_without_lost_updates(spark, tmp_path):
@@ -2224,13 +2298,15 @@ class TestColumnMapping:
         )
         t.rename_column(spark, "s", "s0")
         read = t.read
+        snap = t._read_snapshot
 
         def read_then_rename(*a, **kw):
-            df = read(*a, **kw)
+            t._read_snapshot = snap
+            df = snap(*a, **kw)
             table_factory(t.path).rename_column(spark, "x", "y")
             return df
 
-        t.read = read_then_rename
+        t._read_snapshot = read_then_rename
         with pytest.raises(ConcurrentWriteError):
             t.compact(spark)
         assert read(spark).columns == ["id", "s0", "y"]

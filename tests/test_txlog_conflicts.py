@@ -60,13 +60,16 @@ def _visible(entry: dict, p: str) -> list[str]:
                   for _ in range(n) if q == p)
 
 
-def _touched(op: str, parts: list[str], table: VersionedTable) -> list[str]:
-    """The ``touched`` list the real writer of ``op`` records."""
+def _touched(op: str, parts: list[str], table: VersionedTable,
+             read: dict | None = None) -> list[str]:
+    """The ``touched`` list the real writer of ``op`` records, for a
+    writer that read ``read`` (default: the head)."""
     if op in ("analyze", "rename_column", "drop_column", "widen_column",
               "delete_keys", "wap_stage", "wap_discard"):
         return []
     if op == "compact":
-        return sorted(table._read_entry(table.latest_version())["live"])
+        return sorted((read or table._read_entry(table.latest_version()))
+                      ["live"])
     if op == "restore":
         return sorted(table._read_entry(1)["live"])
     return sorted(parts)
@@ -95,8 +98,16 @@ def _build(op: str, tag: str, parts: list[str], table, read: dict | None):
             live = {p: ptr(p, [f"{p}{tag}"]) for p in parts}
             dv = []
         elif op == "compact":
-            live = {p: ptr(p, _visible(src, p)) for p in src["live"]}
-            dv = []
+            # copy-on-write over every partition it read, then drop the
+            # tombstones no remaining pointer is subject to
+            for p in src["live"]:
+                rows = _visible(src, p)
+                if rows:
+                    live[p] = ptr(p, rows, [x["id"] for x in _plist(src, p)])
+                else:
+                    live.pop(p, None)
+            vs = [x["v"] for q in live for x in _ptrs(live[q])]
+            dv = [d for d in onto.get("dv", []) if any(v <= d["v"] for v in vs)]
         elif op == "restore":
             v1 = table._read_entry(1)
             live, dv = dict(v1["live"]), v1.get("dv", [])
@@ -172,8 +183,8 @@ def _commit(t, op, tag, parts, base_entry=None, base=None):
     blind = op in BLIND
     read = None if blind else (
         base_entry or t._read_entry(t.latest_version()))
-    return t._commit(None if blind else base, _touched(op, parts, t), op,
-                     _build(op, tag, parts, t, read))
+    return t._commit(None if blind else base, _touched(op, parts, t, read),
+                     op, _build(op, tag, parts, t, read))
 
 
 def _serial(first, second) -> dict:
@@ -194,7 +205,8 @@ def _scenario(store, ours, theirs, ours_parts, their_parts):
     head = t._read_entry(2)
     rule = (txlog._R if ours in BLIND
             else txlog._RULES[ours].get(theirs, txlog._C))
-    overlap = bool(set(head["touched"]) & set(_touched(ours, ours_parts, t)))
+    overlap = bool(set(head["touched"])
+                   & set(_touched(ours, ours_parts, t, base_entry)))
     expect_conflict = rule == txlog._C or (rule == txlog._O and overlap)
     try:
         v = _commit(t, ours, "O", ours_parts, base_entry=base_entry, base=1)
@@ -256,8 +268,8 @@ def test_table_keeps_the_per_writer_rules():
     also checking touched partitions. Some conflicts are conservative
     (the property test above cannot see the audit a WAP publish relies
     on), so they are pinned here."""
-    dml = {"merge", "delete", "update", "compact_parts", "analyze",
-           "append", "delete_rows", "update_rows"}
+    dml = {"merge", "delete", "update", "compact", "compact_parts",
+           "analyze", "append", "delete_rows", "update_rows"}
     wap = {"wap_stage", "wap_publish", "wap_discard"}
     R, C, O = txlog._R, txlog._C, txlog._O
 
@@ -279,6 +291,33 @@ def test_table_keeps_the_per_writer_rules():
             want = old_rule(ours, theirs)
             got = R if ours in BLIND else rules.get(theirs, C)
             assert got == want, (ours, theirs)
+
+
+def test_compact_conflicts_with_an_append_on_a_partition_it_read():
+    """compact rewrites the rows it read at its base, so an append
+    landing on one of those partitions in between is a conflict, never
+    silently undone."""
+    t = _seeded(ConditionalPutLogStore())
+    base_entry = t._read_entry(1)
+    _commit(t, "append", "T", ["a"])
+    with pytest.raises(ConcurrentWriteError):
+        _commit(t, "compact", "O", [], base_entry=base_entry, base=1)
+    assert t.latest_version() == 2
+    assert "aT" in _visible(t._read_entry(2), "a")
+
+
+def test_append_rebases_over_a_compaction():
+    """A compaction keeps the snapshot's rows, so an append whose base
+    is older rebases over it and both land."""
+    t = _seeded(ConditionalPutLogStore())
+    base_entry = t._read_entry(1)
+    _commit(t, "compact", "T", [])
+    v = _commit(t, "append", "O", ["a"], base_entry=base_entry, base=1)
+    final = t._read_entry(v)
+    assert v == 3 and final["op"] == "append"
+    assert {x["id"] for x in _plist(final, "a")} == {"Ta", "Oa"}
+    assert _visible(final, "a") == sorted(
+        _visible(base_entry, "a") + ["aO"])
 
 
 @pytest.mark.parametrize(

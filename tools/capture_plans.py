@@ -16,13 +16,14 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from de_final_project_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-OUT = os.environ.get("PLANS_OUT", "/root/repo/plans/r13")
+OUT = os.environ.get("PLANS_OUT", os.path.join(ROOT, "plans", "r13"))
 
 
 def main() -> None:

@@ -22,18 +22,15 @@ Exit 0 iff every checked query is green.
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
-import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def canon_frame(df: pd.DataFrame) -> pd.DataFrame:
@@ -127,11 +124,9 @@ def main() -> int:
     # Deliberately bare: the one conf the driver also sets is master.
     spark = SparkSession.builder.master("local[8]").appName("driver-twin").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    from tools.oracle_check import duck_views  # the package, after the session
+
+    con = duck_views(sf_dir)
     import __spark_entry__ as entry_mod
 
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()

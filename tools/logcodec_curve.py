@@ -16,9 +16,11 @@ Prints a markdown table ready for README.md.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from de_final_project_spark.operators.txlog import (  # noqa: E402
     ConditionalPutLogStore,

@@ -9,13 +9,15 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from de_final_project_spark.session import get_spark  # noqa: E402
@@ -23,6 +25,32 @@ from de_final_project_spark.session import get_spark  # noqa: E402
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+
+def duck_views(sf_dir: str):
+    """A DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def compare(s_cols, s_rows, d_cols, d_rows) -> list[str]:
+    """Column set, row count and value-multiset mismatches (none: ok)."""
+    problems = []
+    if sorted(s_cols) != sorted(d_cols):
+        problems.append(f"columns spark={sorted(s_cols)} duck={sorted(d_cols)}")
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
+    if not problems:
+        sm, dm = row_multiset(s_rows, s_cols), row_multiset(d_rows, d_cols)
+        if sm != dm:
+            diff_s = list((sm - dm).items())[:3]
+            diff_d = list((dm - sm).items())[:3]
+            problems.append(f"values spark-only={diff_s} duck-only={diff_d}")
+    return problems
 
 
 def canon(v) -> str:
@@ -50,11 +78,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():
@@ -79,17 +103,7 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb error: {e}")
             failures.append(name)
             continue
-        problems = []
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append(f"columns spark={sorted(s_cols)} duck={sorted(d_cols)}")
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
-        if not problems:
-            sm, dm = row_multiset(s_rows, s_cols), row_multiset(d_rows, d_cols)
-            if sm != dm:
-                diff_s = list((sm - dm).items())[:3]
-                diff_d = list((dm - sm).items())[:3]
-                problems.append(f"values spark-only={diff_s} duck-only={diff_d}")
+        problems = compare(s_cols, s_rows, d_cols, d_rows)
         if problems:
             print(f"FAIL  {name}: " + "; ".join(problems))
             failures.append(name)

@@ -8,10 +8,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from de_final_project_spark.session import get_spark  # noqa: E402
@@ -57,7 +59,7 @@ def main() -> None:
         rows.append(
             f"| `{name}` | {scans} | {bhj} | {smj} | {bnlj} | {exch} | {pushed} |\n"
         )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(HEADER)
         f.writelines(rows)
     print(f"PLANS.md: {len(rows)} queries summarized")

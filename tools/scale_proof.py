@@ -21,13 +21,12 @@ import os
 import sys
 import time
 
-import duckdb
-
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from de_final_project_spark.session import get_spark  # noqa: E402
-from tools.oracle_check import TABLES, row_multiset  # noqa: E402
+from tools.oracle_check import compare, duck_views  # noqa: E402
 
 
 def main() -> int:
@@ -44,7 +43,7 @@ def main() -> int:
                     pass
     spark = get_spark("scale-proof")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
+    con = duck_views(sf_dir)
     # An in-memory DuckDB cannot spill without a temp_directory — the
     # K=64 quantizer oracles at sf1 OOM without out-of-core execution.
     con.execute("SET temp_directory='/tmp/duckdb_spill_scale_proof'")
@@ -62,10 +61,6 @@ def main() -> int:
     con.execute(
         "SET threads=%d" % int(os.environ.get("SCALE_PROOF_DUCK_THREADS", "8"))
     )
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     n_fail = 0
     with open(log_path, "a") as log:
@@ -106,20 +101,8 @@ def main() -> int:
                 log.flush()
                 print(f"FAIL  {name}: duckdb", flush=True)
                 continue
-            problems = []
-            if sorted(s_cols) != sorted(d_cols):
-                problems.append("columns")
-            if len(s_rows) != len(d_rows):
-                problems.append(
-                    f"rowcount spark={len(s_rows)} duck={len(d_rows)}"
-                )
-            if not problems:
-                sm, dm = row_multiset(s_rows, s_cols), row_multiset(d_rows, d_cols)
-                if sm != dm:
-                    so = list((sm - dm).items())[:2]
-                    do = list((dm - sm).items())[:2]
-                    problems.append(f"values s={so} d={do}"[:400])
-            rec["status"] = "ok" if not problems else "; ".join(problems)
+            problems = compare(s_cols, s_rows, d_cols, d_rows)
+            rec["status"] = "ok" if not problems else "; ".join(problems)[:500]
             if problems:
                 n_fail += 1
             log.write(json.dumps(rec) + "\n")
