@@ -475,10 +475,13 @@ def main() -> None:
     # dicts) overflows that tail — BENCH_r11.json was truncated
     # mid-dict and the r12 round-over-round comparison was lost. This
     # line carries the same contract fields (metric/value/unit/
-    # queries/sf) with the FROZEN per-query dict (the set every
-    # round-over-round comparison is computed on) plus the group totals
-    # and calibration, and fits the tail, so a future comparison can
-    # always re-parse the archive. The full line stays first and
+    # queries/sf) with the same ``queries`` dict as the full line: the
+    # FROZEN per-query timings (the set every round-over-round
+    # comparison is computed on) plus the two scaling probes, which
+    # ``timings.update(timings_scaling)`` folded in after ``total``
+    # (so ``value`` sums the frozen set alone) and before both lines;
+    # then the group totals and calibration. It fits the tail, so a
+    # future comparison can always re-parse the archive. The full line stays first and
     # unchanged — nothing is removed, the timing methodology is
     # untouched.
     print(

@@ -885,21 +885,20 @@ def scd2_from_change_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension maintained from a VersionedTable's STREAMED change feed
     instead of a hand-delivered batch. The purchase stream lands in a
     transaction-log table as three commits (base overwrite + two
-    ts-ordered MERGE batches); a ChangeFeedConsumer then replays each
-    commit as one micro-batch and scd2_apply folds the inserts into the
-    dimension — snapshot bootstrap at v1, per-version incremental
-    maintenance after, each folded state localCheckpoint-ed so the loop
-    lineage stays flat. The oracle is the FULL REBUILD over the whole
-    stream (USER_VALUE_SCD2_SQL): exact equality says the composed path
-    — log commits, partition-pruned CDC reads, checkpointed replay,
-    incremental fold — converges to the rebuild. Batches are cut at ts
-    percentiles with <=/> bounds, so equal timestamps never straddle a
-    batch (the scd2_apply contract); replay idempotence under crash /
-    double-consume is pinned by tests/test_txlog.py."""
+    ts-ordered MERGE batches); each later commit's change feed
+    (``read_changes(v-1, v)``) is then one micro-batch, and scd2_apply
+    folds its inserts into the dimension — snapshot bootstrap at v1,
+    per-version incremental maintenance after, each folded state
+    localCheckpoint-ed so the loop lineage stays flat. The oracle is
+    the FULL REBUILD over the whole stream (USER_VALUE_SCD2_SQL): exact
+    equality says the composed path — log commits, partition-pruned
+    CDC reads, incremental fold — converges to the rebuild. Batches are
+    cut at ts percentiles with <=/> bounds, so equal timestamps never
+    straddle a batch (the scd2_apply contract)."""
     import os
 
     from de_final_project_spark.operators.txlog import (
-        ChangeFeedConsumer,
+        EmptyChangeFeed,
         VersionedTable,
     )
     from de_final_project_spark.session import scratch_dir
@@ -935,19 +934,19 @@ def scd2_from_change_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, ev.where(F.col("ts") > F.lit(c2)), ["event_id"],
         txn=("purchase-loader", 2),
     )
-    state = {"scd2": _scd2_build(table.read(spark, version=1))}
-
-    def fold(batch: DataFrame, version: int) -> None:
+    scd2 = _scd2_build(table.read(spark, version=1))
+    for v in range(2, table.latest_version() + 1):
+        try:
+            batch = table.read_changes(
+                spark, ["event_id"], v - 1, v, include_deletes=True
+            )
+        except EmptyChangeFeed:
+            continue  # no live pointer changed: nothing to fold
         inserts = batch.where(F.col("_change_type") == "insert").select(
             "event_id", "user_id", "ts", "value"
         )
-        state["scd2"] = scd2_apply(state["scd2"], inserts).localCheckpoint()
-
-    consumer = ChangeFeedConsumer(
-        table, ["event_id"], os.path.join(root, "_consumer.json")
-    )
-    consumer.replay(spark, fold, start_after=1)
-    return state["scd2"]
+        scd2 = scd2_apply(scd2, inserts).localCheckpoint()
+    return scd2
 
 
 # The streamed fold's oracle IS the batch rebuild — equality is the

@@ -233,6 +233,38 @@ def test_compact_cluster_by_prunes_row_groups(spark, tmp_path):
     assert t.read(spark).count() == 40_000
 
 
+def test_compact_cluster_by_sorts_each_partition(spark, tmp_path):
+    """compact(cluster_by=) on a PARTITIONED table: every rewritten
+    file reads the key in order. The staging shuffle by the partition
+    column once ran after the layout step and discarded its sort."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    t = VersionedTable(str(tmp_path / "t"), partition_col="pb")
+    t.overwrite(
+        spark.range(4_000)
+        .select(
+            F.col("id"),
+            ((F.col("id") * 7919) % 541).alias("v"),
+            (F.col("id") % 2).cast("int").alias("pb"),
+        )
+        .repartition(4)
+    )
+    v = t.compact(spark, cluster_by=["v"])
+    live = t._read_entry(v)["live"]
+    assert sorted(live) == ["0", "1"]
+    for ptr in live.values():
+        files = glob.glob(
+            os.path.join(t.path, ptr["commit_dir"], ptr["part_dir"], "*")
+        )
+        assert files
+        for f in files:
+            vals = pq.read_table(f, columns=["v"]).column("v").to_pylist()
+            assert vals == sorted(vals)
+    assert t.read(spark).count() == 4_000
+
+
 def test_vacuum_drops_old_versions_cleanly(spark, table_factory):
     t = table_factory("t", partition_col="pb")
     t.overwrite(_mk(spark, [(1, "a", 0), (2, "b", 1)]))
@@ -809,50 +841,25 @@ def test_vacuumed_entry_mid_rebase_is_concurrent_write_error(
         t.merge(spark, _mk(spark, [(1, "A", 0)]), ["id"])
 
 
-def test_change_feed_consumer_replays_once_and_resumes(
-    spark, table_factory, tmp_path
-):
-    """ChangeFeedConsumer: per-version batches in commit order; a
-    second replay over a consumed log delivers nothing (checkpoint
-    idempotence); a crash mid-stream (simulated by a handler that dies
-    AFTER its version checkpoints... i.e. a fresh consumer resuming
-    from a partial checkpoint) continues at the next unconsumed
-    version, never re-delivering or skipping one."""
-    from de_final_project_spark.operators.txlog import ChangeFeedConsumer
-
+def test_change_feed_per_version_in_commit_order(spark, table_factory):
+    """``read_changes(v-1, v)`` over each version in commit order is
+    that version's batch — the per-version replay
+    scd2_from_change_stream folds."""
     t = table_factory("t", partition_col="pb")
     t.overwrite(_mk(spark, [(1, "a", 0)]))                      # v1
     t.merge(spark, _mk(spark, [(2, "b", 1)]), ["id"])            # v2
     t.merge(spark, _mk(spark, [(1, "A", 0), (3, "c", 2)]), ["id"])  # v3
-
-    seen: list[tuple[int, set]] = []
-
-    def handler(batch, version):
-        seen.append(
-            (version, {(r["id"], r["_change_type"]) for r in batch.collect()})
-        )
-
-    ckpt = str(tmp_path / "consumer.json")
-    c = ChangeFeedConsumer(t, ["id"], ckpt)
-    assert c.replay(spark, handler, start_after=1) == 2
-    assert [v for v, _ in seen] == [2, 3]
-    assert seen[0][1] == {(2, "insert")}
-    assert seen[1][1] == {(1, "update"), (3, "insert")}
-    # idempotent re-consume: nothing delivered, checkpoint unchanged
-    assert c.replay(spark, handler) == 0
-    assert len(seen) == 2 and c.last_consumed() == 3
-    # crash resume: a consumer that died after v2's checkpoint picks up
-    # at v3 only
-    ckpt2 = str(tmp_path / "consumer2.json")
-    c2 = ChangeFeedConsumer(t, ["id"], ckpt2)
-    c2._advance(2)  # simulate the pre-crash progress
-    late: list[int] = []
-    c2.replay(spark, lambda b, v: late.append(v))
-    assert late == [3]
-    # new commits after consumption stream incrementally
-    t.merge(spark, _mk(spark, [(4, "d", 3)]), ["id"])            # v4
-    assert c.replay(spark, handler) == 1
-    assert seen[-1] == (4, {(4, "insert")})
+    seen = {
+        v: {
+            (r["id"], r["_change_type"])
+            for r in t.read_changes(
+                spark, ["id"], v - 1, v, include_deletes=True
+            ).collect()
+        }
+        for v in (2, 3)
+    }
+    assert seen[2] == {(2, "insert")}
+    assert seen[3] == {(1, "update"), (3, "insert")}
 
 
 def test_merge_rebases_over_disjoint_delete(spark, table_factory):
