@@ -23,8 +23,9 @@ per-version CDC cost is O(changed rows), never O(table):
 
 A version that rewrote or dropped partitions (copy-on-write
 merge/delete/update, an overwrite or restore after v1), added key
-tombstones or replaced the tombstone list carries no row-level
-evidence — its delta needs a snapshot diff, which is ``read_changes``
+tombstones, replaced the tombstone list or re-added files that
+tombstones cut rows from (a restore) carries no row-level evidence —
+its delta needs a snapshot diff, which is ``read_changes``
 territory and needs a SparkSession the Python workers lack; this
 source fails FAST and loudly on such a version rather than silently
 skipping it. A pipeline that wants readStream subscription therefore
@@ -44,6 +45,7 @@ the transaction log."""
 from __future__ import annotations
 
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -58,90 +60,93 @@ from pyspark.sql.datasource import (
 _CHANGE_TYPE = "_change_type"
 _COMMIT_VERSION = "_commit_version"
 
+# fixed arrow types <-> Spark DDL; the widen_column targets (smallint,
+# int, bigint, double, decimal) map back through the inverse
+_ARROW_DDL = {
+    pa.int8(): "tinyint",
+    pa.int16(): "smallint",
+    pa.int32(): "int",
+    pa.int64(): "bigint",
+    pa.float32(): "float",
+    pa.float64(): "double",
+    pa.bool_(): "boolean",
+    pa.binary(): "binary",
+    pa.large_binary(): "binary",
+    pa.string(): "string",
+    pa.large_string(): "string",
+}
+_DDL_ARROW = {d: t for t, d in _ARROW_DDL.items()}
+
+
 def _arrow_to_ddl(t: pa.DataType) -> str:
-    if pa.types.is_int64(t):
-        return "bigint"
-    if pa.types.is_int32(t):
-        return "int"
-    if pa.types.is_int16(t):
-        return "smallint"
-    if pa.types.is_int8(t):
-        return "tinyint"
-    if pa.types.is_float64(t):
-        return "double"
-    if pa.types.is_float32(t):
-        return "float"
-    if pa.types.is_boolean(t):
-        return "boolean"
+    if t in _ARROW_DDL:
+        return _ARROW_DDL[t]
     if pa.types.is_date(t):
         return "date"
     if pa.types.is_timestamp(t):
         return "timestamp"
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return "binary"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "string"
     if pa.types.is_decimal(t):
         return f"decimal({t.precision},{t.scale})"
     raise ValueError(f"unsupported arrow type for change feed: {t}")
 
 
-def _normalize(t: pa.DataType) -> pa.DataType:
-    # Spark hands timestamps to Arrow as microseconds; parquet files may
-    # carry ns (NANOS/INT96 round-trips) — normalize so batches conform.
-    if pa.types.is_timestamp(t):
-        return pa.timestamp("us")
-    return t
+def _widened_arrow(sql: str) -> pa.DataType:
+    m = re.fullmatch(r"decimal\((\d+),(\d+)\)", sql)
+    return pa.decimal128(int(m[1]), int(m[2])) if m else _DDL_ARROW[sql]
 
 
-def _table_arrow_fields(table) -> list[tuple[str, pa.DataType]]:
-    """Data-column arrow schema from any live file of the head entry
-    (one footer read — the table's files share one logical schema; an
-    additively-evolved older file just null-fills at conform time)."""
+def _stream_columns(table):
+    """The stream's output columns, resolved from the head entry, which
+    is returned with them: the data columns as (physical file name,
+    logical name, arrow type) and the partition column's physical and
+    logical names (Nones when unpartitioned).
+
+    Names resolve under the head's column mapping (files keep physical
+    names, so older versions read correctly through it; an unmapped
+    physical column is dropped-column bytes, omitted). Types come from
+    one footer of a live file — the table's files share one logical
+    schema; an additively-evolved older file null-fills at conform time
+    — with the head's widened columns at their widened types, since
+    that file may predate the widen. Spark hands timestamps to Arrow as
+    microseconds while files may carry ns, so those normalize to us.
+    The table handle is rebuilt from just a path (the readStream
+    option), so the partition column is discovered Hive-style from the
+    live pointers' ``col=value`` dir names, as the engine's partition
+    discovery reader does."""
     from de_final_project_spark.operators.txlog import _ptrs
 
     head = table.latest_version()
     if head is None:
         raise FileNotFoundError(f"no commits at {table.path}")
     entry = table._read_entry(head)
-    for e in entry["live"].values():
-        for ptr in _ptrs(e):
-            for f in _pointer_files(table, ptr):
-                sch = pq.read_schema(f)
-                return [(fd.name, _normalize(fd.type)) for fd in sch]
-    raise FileNotFoundError(f"no live data files at {table.path}")
-
-
-def _head_colmap(table) -> dict | None:
-    """The head entry's column mapping ({logical -> physical}) or None
-    when the table never enabled mapping. The stream resolves names
-    under the mapping FROZEN at reader start (files keep physical
-    names, so older versions read correctly through the current map);
-    a rename/drop (or a widen_column) committed mid-stream raises in
-    partitions() — the Delta rule: restart the stream to adopt a new
-    schema."""
-    head = table.latest_version()
-    if head is None:
-        return None
-    return table._read_entry(head).get("colmap")
-
-
-def _discover_partition_col(table) -> str | None:
-    """The table handle here is reconstructed from just a path (the
-    readStream option), so the partition column is discovered
-    Hive-style from the live pointers' ``col=value`` dir names — the
-    same convention the engine's partition discovery reader (S4) uses."""
-    from de_final_project_spark.operators.txlog import _ptrs
-
-    head = table.latest_version()
-    if head is None:
-        return None
-    for e in table._read_entry(head)["live"].values():
-        for ptr in _ptrs(e):
-            pd = ptr.get("part_dir", "")
-            if "=" in pd:
-                return pd.split("=", 1)[0]
-    return None
+    ptrs = [ptr for e in entry["live"].values() for ptr in _ptrs(e)]
+    first = next(
+        (f for ptr in ptrs for f in _pointer_files(table, ptr)), None
+    )
+    if first is None:
+        raise FileNotFoundError(f"no live data files at {table.path}")
+    cmap, widened = entry.get("colmap"), entry.get("widened", {})
+    inv = {p: l for l, p in cmap.items()} if cmap else {}
+    fields = [
+        (
+            fd.name,
+            inv.get(fd.name, fd.name),
+            _widened_arrow(widened[fd.name]) if fd.name in widened
+            else pa.timestamp("us") if pa.types.is_timestamp(fd.type)
+            else fd.type,
+        )
+        for fd in pq.read_schema(first)
+        if not cmap or fd.name in inv
+    ]
+    part = next(
+        (
+            ptr["part_dir"].split("=", 1)[0]
+            for ptr in ptrs
+            if "=" in ptr.get("part_dir", "")
+        ),
+        None,
+    )
+    return entry, fields, part, inv.get(part, part)
 
 
 def _pointer_files(table, ptr: dict) -> list[str]:
@@ -165,7 +170,9 @@ def version_tasks(table, entry: dict) -> list[dict]:
     positional sidecar), positional sidecars are deletes (update
     preimages when it also appends). Compactions render as no tasks.
     Raises ValueError on a version that rewrote or dropped partitions,
-    added key tombstones or replaced the tombstone list — it carries no
+    added key tombstones, replaced the tombstone list or appended a
+    pointer older than a tombstone in the entry (a restore re-adding
+    files that tombstones still cut rows from) — it carries no
     row-level change evidence — and FileNotFoundError when the parent
     version was vacuumed (a vacuumed range has no change feed)."""
     from de_final_project_spark.operators.txlog import _entry_delta
@@ -174,12 +181,26 @@ def version_tasks(table, entry: dict) -> list[dict]:
     if op in ("compact", "compact_parts"):
         return []  # content-preserving rewrite: no change rows
     d = _entry_delta(table._read_entry(v - 1) if v > 1 else None, entry)
-    if d.rewritten or d.dropped or d.key_tombstones or d.dv_replaced:
+    # A tombstone written at version t cuts rows only out of pointers
+    # made before t. Every writer stamps a pointer it appends with the
+    # committing version, so only a restored pointer can be older than
+    # a tombstone — and then its files are not all rows of this version.
+    newest_tomb = max((t["v"] for t in entry.get("dv", [])), default=0)
+    gated = any(
+        ptr.get("v", 0) < newest_tomb
+        for suffix in d.appended.values()
+        for ptr in suffix
+    )
+    if (
+        d.rewritten or d.dropped or d.key_tombstones or d.dv_replaced
+        or gated
+    ):
         raise ValueError(
             f"version {v} is a '{op}' commit, which records no row-level "
-            "change evidence (it rewrote or dropped partitions, or added "
-            "key tombstones). Write DML through the merge-on-read forms, "
-            "or consume via read_changes (snapshot-diff CDC)."
+            "change evidence (it rewrote or dropped partitions, added "
+            "key tombstones or re-added files under tombstones). Write "
+            "DML through the merge-on-read forms, or consume via "
+            "read_changes (snapshot-diff CDC)."
         )
     pos = d.pos_tombstones
     tasks = [
@@ -257,31 +278,15 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
         from de_final_project_spark.operators.txlog import VersionedTable
 
         self._table = VersionedTable(self.path)
-        # name resolution frozen at stream start (see _head_colmap)
-        self._init_head = self._table.latest_version() or 0
-        self._colmap = _head_colmap(self._table)
-        self._widened = (
-            self._table._read_entry(self._init_head).get("widened")
-            if self._init_head
-            else None
+        # The output schema is resolved once, at reader start; a
+        # rename, drop or widen committed after that raises in
+        # partitions() — the Delta rule: restart the stream to adopt a
+        # new schema.
+        head, self._fields, self._part_col, self._part_col_out = (
+            _stream_columns(self._table)
         )
-        inv = (
-            {p: l for l, p in self._colmap.items()}
-            if self._colmap
-            else None
-        )
-        raw = _table_arrow_fields(self._table)
-        self._fields = (
-            [(n, inv[n], t) for n, t in raw if n in inv]
-            if inv is not None
-            else [(n, n, t) for n, t in raw]
-        )
-        self._part_col = _discover_partition_col(self._table)
-        self._part_col_out = (
-            inv.get(self._part_col, self._part_col)
-            if inv is not None and self._part_col
-            else self._part_col
-        )
+        self._init_head = head["version"]
+        self._schema_state = (head.get("colmap"), head.get("widened"))
 
     def initialOffset(self):
         return {"version": self.starting}
@@ -315,7 +320,7 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
             entry = self._table._read_entry(v)
             if v > self._init_head and (
                 entry.get("colmap"), entry.get("widened")
-            ) != (self._colmap, self._widened):
+            ) != self._schema_state:
                 raise ValueError(
                     f"column mapping or types changed at v{v} mid-stream "
                     "(RENAME/DROP/WIDEN COLUMN); the stream's output "
@@ -389,18 +394,10 @@ class ChangeFeedDataSource(DataSource):
     def schema(self) -> str:
         from de_final_project_spark.operators.txlog import VersionedTable
 
-        table = VersionedTable(self.options["path"])
-        cmap = _head_colmap(table)
-        inv = {p: l for l, p in cmap.items()} if cmap else None
-        fields = _table_arrow_fields(table)
-        if inv is not None:
-            # logical names under the head's column mapping; unmapped
-            # physical columns are dropped-column bytes — omitted
-            fields = [(inv[n], t) for n, t in fields if n in inv]
-        parts = [f"`{n}` {_arrow_to_ddl(t)}" for n, t in fields]
-        part_col = _discover_partition_col(table)
-        if part_col and inv is not None:
-            part_col = inv.get(part_col, part_col)
+        _, fields, _, part_col = _stream_columns(
+            VersionedTable(self.options["path"])
+        )
+        parts = [f"`{n}` {_arrow_to_ddl(t)}" for _, n, t in fields]
         if part_col:
             # staged files never contain the partition column (it lives
             # in dir names); surfaced as a string for the consumer to

@@ -12,6 +12,8 @@ import copy
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from de_final_project_spark.operators.txlog import (
@@ -19,7 +21,11 @@ from de_final_project_spark.operators.txlog import (
     VersionedTable,
     _entry_delta,
 )
-from de_final_project_spark.streaming.change_source import version_tasks
+from de_final_project_spark.streaming.change_source import (
+    ChangeFeedDataSource,
+    ChangeFeedStreamReader,
+    version_tasks,
+)
 
 
 def _ptr(cd: str, p: str, v: int) -> dict:
@@ -161,6 +167,34 @@ _CASES = {
         {"live_set": {"0": A0}, "dv_set": []},
         NOTHING,
     ),
+    "restore_dropped_partition": (
+        [("delete", {"0": A0}, [], {}),
+         ("restore", {"0": A0, "1": A1}, [], {"restored_from": 1})],
+        {"live_set": {"1": A1}},
+        [("insert", "1", "a")],
+    ),
+    # the restored pointer A1 is older than the carried tombstone d,
+    # which still cuts rows from it: its files are not the new rows
+    "restore_after_partition_drop": (
+        [("delete_rows", {"0": A0, "1": A1}, [_pos("d", 2)], {}),
+         ("delete", {"0": A0}, [_pos("d", 2)], {}),
+         ("restore", {"0": A0, "1": A1}, [_pos("d", 2)],
+          {"restored_from": 2})],
+        {"live_set": {"1": A1}},
+        NOTHING,
+    ),
+    # a pointer and the sidecar that cuts rows from it come back
+    # together: no row was updated
+    "restore_pointer_and_sidecar": (
+        [("append", {"0": A0, "1": A1, "2": _ptr("b", "2", 2)}, [], {}),
+         ("delete_rows", {"0": A0, "1": A1, "2": _ptr("b", "2", 2)},
+          [_pos("d", 3)], {}),
+         ("restore", {"0": A0, "1": A1}, [], {"restored_from": 1}),
+         ("restore", {"0": A0, "1": A1, "2": _ptr("b", "2", 2)},
+          [_pos("d", 3)], {"restored_from": 3})],
+        {"live_set": {"2": _ptr("b", "2", 2)}, "dv_add": [_pos("d", 3)]},
+        NOTHING,
+    ),
     "wap_publish": (
         [("wap_stage", {"0": A0, "1": A1}, [],
           {"wap": {"id": "w", "files": {"1": _ptr("w", "1", 2)},
@@ -242,27 +276,56 @@ def test_version_tasks_needs_the_parent_entry(table):
         version_tasks(fresh, entry)
 
 
+def _int_table(tmp_path) -> VersionedTable:
+    """A real table whose v1 files {0: A0, 1: A1} hold one int32 ``id``
+    each (the partition value)."""
+    t = VersionedTable(str(tmp_path / "t"))
+    for p in ("0", "1"):
+        _write_ids(t, "a", p, pa.array([int(p)], pa.int32()))
+    _commit(t, "overwrite", {"0": A0, "1": A1})
+    return t
+
+
+def _write_ids(t: VersionedTable, cd: str, p: str, ids: pa.Array) -> None:
+    d = os.path.join(t.path, "data", cd, f"pb={p}")
+    os.makedirs(d)
+    pq.write_table(pa.table({"id": ids}), os.path.join(d, "part-0.parquet"))
+
+
 def test_stream_fails_on_mid_stream_widen(tmp_path):
     """widen_column renders no tasks, so the readStream source guards
     it with the rename/drop rule: the output schema was resolved at
     start, and a widen committed after that fails the next trigger."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from de_final_project_spark.streaming.change_source import (
-        ChangeFeedStreamReader,
-    )
-
-    t = VersionedTable(str(tmp_path / "t"))
-    for p in ("0", "1"):
-        os.makedirs(os.path.join(t.path, "data", "a", f"pb={p}"))
-        pq.write_table(pa.table({"id": pa.array([int(p)], pa.int32())}),
-                       os.path.join(t.path, "data", "a", f"pb={p}",
-                                    "part-0.parquet"))
-    _commit(t, "overwrite", {"0": A0, "1": A1})
+    t = _int_table(tmp_path)
     reader = ChangeFeedStreamReader({"path": t.path})
     assert len(reader.partitions({"version": 0}, {"version": 1})) == 1
     _commit(t, "widen_column", {"0": A0, "1": A1},
             widened={"id": "bigint"})
     with pytest.raises(ValueError, match="mid-stream"):
         reader.partitions({"version": 1}, {"version": 2})
+
+
+def test_stream_across_an_earlier_widen_reads_the_widened_type(tmp_path):
+    """A stream started after a widen but reading from before it
+    declares the widened type, though the footer it reads the schema
+    from predates the widen: narrow files cast up, and a value beyond
+    the narrow range written after the widen reads back whole."""
+    t = _int_table(tmp_path)
+    _commit(t, "widen_column", {"0": A0, "1": A1},
+            widened={"id": "bigint"})
+    big = 2**31 + 5
+    _write_ids(t, "b", "1", pa.array([big], pa.int64()))
+    # every later commit carries the widen state forward
+    _commit(t, "append", {"0": A0, "1": [A1, _ptr("b", "1", 3)]},
+            widened={"id": "bigint"})
+    assert "`id` bigint" in ChangeFeedDataSource({"path": t.path}).schema()
+    reader = ChangeFeedStreamReader({"path": t.path})
+    batches = [
+        b for part in reader.partitions({"version": 0}, {"version": 3})
+        for b in reader.read(part)
+    ]
+    assert {b.schema.field("id").type for b in batches} == {pa.int64()}
+    rows = pa.Table.from_batches(batches).to_pylist()
+    assert sorted((r["id"], r["_commit_version"]) for r in rows) == [
+        (0, 1), (1, 1), (big, 3),
+    ]
