@@ -233,11 +233,12 @@ class IncrementalAggView:
                     )
         return out
 
-    def _align_types(self, df: DataFrame, spark: SparkSession) -> DataFrame:
+    def _align_types(self, df: DataFrame) -> DataFrame:
         """Cast a source frame to the view's exact stored types so a
         merge can never widen the on-disk schema (a delta SUM of
-        DECIMAL(12,2) is wider than the stored DECIMAL(22,2))."""
-        stored = dict(self.mv.read(spark).dtypes)
+        DECIMAL(12,2) is wider than the stored DECIMAL(22,2)). The
+        stored types come from the view table's log, not its files."""
+        stored = {f.name: f.dataType for f in self.mv.data_schema()}
         return df.select(
             *[F.col(c).cast(stored[c]).alias(c) for c in df.columns]
         )
@@ -313,7 +314,7 @@ class IncrementalAggView:
         # vanished groups (every row deleted) appear in `affected` but
         # not in the recompute: left join marks them with a NULL _N.
         src = self._align_types(
-            affected.join(recomputed, self.group_by, "left"), w.spark
+            affected.join(recomputed, self.group_by, "left")
         )
         upd = {_N: f"s.{_N}"}
         for col, (kind, _) in self.aggs.items():
@@ -388,7 +389,7 @@ class IncrementalAggView:
         ).otherwise(F.lit(-1))
         deltas = signed.groupBy(*self.group_by).agg(*self._delta_aggs(sign))
         if self.mv.latest_version() is not None:
-            deltas = self._align_types(deltas, spark)
+            deltas = self._align_types(deltas)
         # Persist the group-cardinality-sized deltas and run the
         # null-key rejection against THEM: a NULL group key in the feed
         # survives aggregation as a NULL-key delta row (same condition
@@ -444,7 +445,7 @@ class IncrementalAggView:
         full = self._full(
             self._input(*(t.read(spark) for t, _ in self.group.sources))
         )
-        stored = self._align_types(full, spark)
+        stored = self._align_types(full)
         mv = self.mv.read(spark)
         cols = mv.columns
         diff = stored.select(cols).exceptAll(mv.select(cols)).limit(1)

@@ -56,12 +56,27 @@ Vacuum materializes a checkpoint at the oldest retained version before
 dropping older entries, so reconstruction never needs a vacuumed
 entry.
 
+Every entry also records the table's physical data SCHEMA (``schema``:
+Spark's JSON of a StructType — the data columns under their file names
+at the table's read types; Delta's ``metaData.schemaString``). An
+overwrite takes it from the frame it stages, ``merge_schema`` adds
+columns to it, ``widen_column`` rewrites one type, ``drop_column``
+removes one, ``restore`` takes the restored version's, and every other
+commit carries it forward (writers cast their frames to it). An entry
+written before entries carried a schema falls back to one inference
+over its live files, memoized per handle; the table's next commit
+records it.
+
 Scan shape: live partitions are grouped by owning commit dir and each
-group is ONE parquet scan with ``basePath`` set to the commit dir (so
-Spark's partition discovery restores the partition column); the plan
-holds O(live commits) scans — bounded by vacuum/compaction — not
-O(partitions). Cost of MERGE is O(touched partitions) new data plus one
-log write: the touched-file bound at partition granularity.
+group is ONE parquet scan at the entry's schema (``reader.schema`` — no
+scan infers one from a footer) with ``basePath`` set to the commit dir
+(so Spark's partition discovery restores, and types, the partition
+column, which the schema leaves out). The reader widens an older
+file's narrower types and null-fills the columns it lacks, so the
+scans union as they are. The plan holds O(live commits) scans —
+bounded by vacuum/compaction — not O(partitions). Cost of MERGE is
+O(touched partitions) new data plus one log write: the touched-file
+bound at partition granularity.
 
 Reference analog: none — the reference overwrites whole tables
 (src/warehousing_lambda.py:64-71); this is the transactional layer a
@@ -84,6 +99,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
 
 _UNPARTITIONED = "__all__"
 
@@ -197,18 +213,23 @@ def _entry_delta(parent: dict | None, entry: dict) -> _EntryDelta:
         replaced,
     )
 
-# Process-level commit-dir schema memo. A commit dir is written exactly
-# once under a uuid4-hex name and never mutated (vacuum deletes it
-# whole), so the schema Spark infers on the FIRST scan of any part of
-# it is THE schema of every later scan. Supplying it via
-# ``reader.schema(...)`` skips the per-DataFrame footer read + schema
-# resolution on the driver — measured ~0.13 s per ``spark.read.parquet``
-# call, multiplied by O(live pointers) scans per snapshot read and by
-# every re-read in a multi-commit scenario. Keyed by (table path,
-# commit_dir rel, basePath?) because a partitioned read's schema carries
-# the partition column appended by directory discovery. Bounded FIFO.
-_COMMIT_SCHEMAS: dict[tuple, object] = {}
-_COMMIT_SCHEMAS_CAP = 8192
+# The columns of a positional deletion-vector sidecar (see _with_pos).
+_POS_SCHEMA = StructType().add("__file", "string").add("__pos", "long")
+
+
+def _scan(
+    spark: SparkSession,
+    schema: StructType,
+    paths: Sequence[str],
+    base_path: str | None = None,
+) -> DataFrame:
+    """``spark.read.parquet`` at a known schema: no footer is read on
+    the driver and no inference job runs. With ``base_path`` partition
+    discovery appends the partition column."""
+    r = spark.read.schema(schema)
+    if base_path is not None:
+        r = r.option("basePath", base_path)
+    return r.parquet(*paths)
 
 
 # ------------------------------------------------------------------ stats
@@ -1192,6 +1213,10 @@ class VersionedTable:
         # values (Delta's rule for feature state under RESTORE)
         if e.get("widened"):
             out["widened"] = dict(e["widened"])
+        # the data schema carries forward too; the writers that change
+        # it (overwrite, merge_schema, widen/drop column, restore)
+        # spread their own after this dict
+        out["schema"] = self._schema(e).jsonValue()
         # protocol floor carries forward (never downgrades); a writer
         # older than the table's recorded min_writer must not commit —
         # its entries would silently drop feature fields it doesn't
@@ -1257,11 +1282,72 @@ class VersionedTable:
         v = self.latest_version()
         return v, (self._read_entry(v) if v is not None else None)
 
-    def _head_colmap(self):
-        return self._colmap_state(self._head()[1])
+    # --------------------------------------------------- table schema
+    def _schema(self, entry: dict) -> StructType:
+        """The data schema ``entry``'s scans read at: its ``schema``
+        field. An entry written before entries recorded one falls back
+        to ONE inference over its live commit dirs (their file schemas
+        unioned, the ``widened`` map applied, dropped columns' bytes
+        left out), memoized in the reconstruction memo so every later
+        read of the version takes the same path; the table's next commit
+        records it (see _meta_fields)."""
+        if "schema" not in entry:
+            entry["schema"] = self._infer_schema(entry)
+            cached = self._entry_cache.get(entry.get("version"))
+            if cached is not None:
+                cached["schema"] = entry["schema"]
+        return StructType.fromJson(entry["schema"])
+
+    def _infer_schema(self, entry: dict) -> dict:
+        dirs = {
+            ptr["commit_dir"]: ptr["part_dir"]
+            for e in entry["live"].values() for ptr in _ptrs(e)
+        }
+        union = None
+        for rel, sub in dirs.items():
+            # a leaf dir holds the data columns only
+            df = SparkSession.builder.getOrCreate().read.parquet(
+                os.path.join(self.path, rel, sub)
+            )
+            union = df if union is None else union.unionByName(
+                df, allowMissingColumns=True
+            )
+        cmap = entry.get("colmap")
+        widened = entry.get("widened", {})
+        return StructType([
+            StructField(f.name, DataType.fromDDL(widened[f.name]))
+            if f.name in widened else f
+            for f in (union.schema if union is not None else [])
+            if cmap is None or f.name in cmap.values()
+        ]).jsonValue()
+
+    def _frame_schema(self, df: DataFrame) -> StructType:
+        """The data schema a staged frame records: its columns but the
+        partition column, nullable as every parquet column reads."""
+        return StructType([
+            StructField(f.name, f.dataType, True, f.metadata)
+            for f in df.schema if f.name != self.partition_col
+        ])
+
+    def data_schema(self, version: int | None = None) -> StructType:
+        """The table's data columns at ``version`` (default: the head)
+        under their LOGICAL names and read types, from the log entry —
+        no file is opened (unless the entry predates recorded schemas,
+        see _schema). The partition column is not among them: its
+        values live in directory names and partition discovery types
+        it."""
+        v = self.latest_version() if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"no commits at {self.path}")
+        entry = self._read_entry(v)
+        inv = {ph: lg for lg, ph in entry.get("colmap", {}).items()}
+        return StructType([
+            StructField(inv.get(f.name, f.name), f.dataType)
+            for f in self._schema(entry)
+        ])
 
     def _prep_write(
-        self, df: DataFrame, entry: dict | None
+        self, df: DataFrame, entry: dict | None, replace: bool = False
     ) -> tuple[DataFrame, dict]:
         """Translate a LOGICAL frame to physical file names under the
         column mapping of ``entry`` (the version the write is based on,
@@ -1269,40 +1355,57 @@ class VersionedTable:
         mapping fields). New logical columns (additive evolution under
         mapping) are bound to fresh physical names collision-checked
         against every name ever used; writes naming a dropped column are
-        rejected. No-op ({} fields) when mapping is disabled — the
-        zero-cost default path. Widened columns are cast to their
-        recorded target type so post-widen files land physically wide
-        (the read-side cast then only pays for pre-widen file
-        generations)."""
+        rejected. No mapping fields ({}) when mapping is disabled — the
+        zero-cost default path. Columns the table has are cast to the
+        types ``entry``'s schema records, so every file reads at them
+        (post-widen files land physically wide); an overwrite
+        (``replace``), whose frame replaces the schema, casts only the
+        widened columns."""
         st = self._colmap_state(entry)
-        if st is None:
-            return self._apply_widen(df, entry), {}
-        cmap, dropped, used = st
-        bad = sorted(set(df.columns) & set(dropped))
-        if bad:
-            raise ValueError(
-                f"write names dropped column(s) {bad}; dropped columns "
-                "cannot be written (re-add under a different name)"
-            )
-        for c in df.columns:
-            if c not in cmap:
-                ph, k = c, 0
-                while ph in used:
-                    k += 1
-                    ph = f"{c}__p{k}"
-                cmap[c] = ph
-                used.append(ph)
-        # one-shot simultaneous rename (a sequential withColumnRenamed
-        # loop can transiently collide when a rename freed a name that
-        # a later column re-bound)
-        if any(cmap[c] != c for c in df.columns):
-            df = df.select(
-                *[F.col(f"`{c}`").alias(cmap[c]) for c in df.columns]
-            )
-        fields: dict = {"colmap": cmap, "colmap_used": used}
-        if dropped:
-            fields["dropped_cols"] = dropped
-        return self._apply_widen(df, entry), fields
+        fields: dict = {}
+        if st is not None:
+            cmap, dropped, used = st
+            bad = sorted(set(df.columns) & set(dropped))
+            if bad:
+                raise ValueError(
+                    f"write names dropped column(s) {bad}; dropped columns "
+                    "cannot be written (re-add under a different name)"
+                )
+            for c in df.columns:
+                if c not in cmap:
+                    ph, k = c, 0
+                    while ph in used:
+                        k += 1
+                        ph = f"{c}__p{k}"
+                    cmap[c] = ph
+                    used.append(ph)
+            # one-shot simultaneous rename (a sequential
+            # withColumnRenamed loop can transiently collide when a
+            # rename freed a name that a later column re-bound)
+            if any(cmap[c] != c for c in df.columns):
+                df = df.select(
+                    *[F.col(f"`{c}`").alias(cmap[c]) for c in df.columns]
+                )
+            fields = {"colmap": cmap, "colmap_used": used}
+            if dropped:
+                fields["dropped_cols"] = dropped
+        if entry:
+            widened = entry.get("widened", {})
+            types = {
+                f.name: f.dataType for f in self._schema(entry)
+                if not replace or f.name in widened
+            }
+            todo = {
+                c for c, t in df.dtypes
+                if c in types and types[c].simpleString() != t
+            }
+            if todo:
+                df = df.select(*[
+                    F.col(f"`{c}`").cast(types[c]).alias(c) if c in todo
+                    else F.col(f"`{c}`")
+                    for c in df.columns
+                ])
+        return df, fields
 
     def _check_colmap(self, st, head_entry: dict) -> None:
         """A blind writer's staged files carry the physical names of the
@@ -1376,24 +1479,18 @@ class VersionedTable:
             )
         return out
 
-    def _from_physical(
-        self, df: DataFrame, entry: dict, keep: Sequence[str] = ()
-    ) -> DataFrame:
+    def _from_physical(self, df: DataFrame, entry: dict) -> DataFrame:
         """Rename a physical frame to the LOGICAL names recorded by
         ``entry`` (the version being read — time travel resolves old
-        snapshots under old names). Physical columns without a mapping
-        are DROPPED columns' bytes — omitted. ``keep`` passes internal
-        columns (``_change_type``) through unrenamed."""
+        snapshots under old names). Columns the mapping does not name
+        (``_change_type``) keep theirs."""
         st = self._colmap_state(entry)
         if st is None:
             return df
         inv = {ph: lg for lg, ph in st[0].items()}
-        cols = [
-            F.col(f"`{c}`").alias(inv[c])
-            for c in df.columns
-            if c in inv
-        ] + [F.col(c) for c in df.columns if c in keep]
-        return df.select(*cols)
+        return df.select(
+            *[F.col(f"`{c}`").alias(inv.get(c, c)) for c in df.columns]
+        )
 
     def _assert_unreferenced(self, logical: str, physical: str, op: str):
         """RENAME/DROP of a column referenced by a CHECK constraint,
@@ -1417,10 +1514,12 @@ class VersionedTable:
     def _bootstrap_colmap(self, spark: SparkSession):
         """Current mapping state, creating the identity bootstrap from
         the live schema on first use."""
-        st = self._head_colmap()
+        head = self._head()[1]
+        st = self._colmap_state(head)
         if st is not None:
             return st
-        cols = self.read(spark).columns
+        pc = [self.partition_col] if self.partition_col else []
+        cols = self._schema(head).names + pc
         return {c: c for c in cols}, [], list(cols)
 
     def _commit_metadata(self, op: str, fields: dict) -> int:
@@ -1483,23 +1582,37 @@ class VersionedTable:
             raise ValueError(
                 f"cannot drop partition column '{col}'"
             )
-        self._assert_unreferenced(col, cmap[col], "drop")
+        phys = cmap[col]
+        self._assert_unreferenced(col, phys, "drop")
+        head = self._head()[1]
+        if any(phys in t.get("cols", ()) for t in head.get("dv", [])):
+            # the schema stops reading the column, so the tombstones'
+            # anti-join could no longer match on it
+            raise ValueError(
+                f"cannot drop column '{col}': live key tombstones match "
+                "on it (compact first, which applies them)"
+            )
         cmap2 = {lg: ph for lg, ph in cmap.items() if lg != col}
         fields = {
             "colmap": cmap2,
             "colmap_used": used,
             "dropped_cols": dropped + [col],
+            "schema": StructType(
+                [f for f in self._schema(head) if f.name != phys]
+            ).jsonValue(),
         }
         return self._commit_metadata("drop_column", fields)
 
     # --------------------------------------------------- type widening
     # Delta-style type widening: int->bigint / float->double (and the
     # rest of the lossless lattice below) as a METADATA-ONLY commit.
-    # Old files keep their narrow physical type; every read CASTS each
-    # widened column to the entry's recorded target, so snapshots are
+    # Old files keep their narrow physical type; the commit rewrites
+    # the column's type in the entry's schema, which every scan reads
+    # at (the parquet reader widens the narrow files), so snapshots are
     # uniformly typed no matter which file generation a row came from,
     # and post-widen writes land physically wide (values beyond the
     # narrow range — the reason to widen — need no rewrite of history).
+    # The ``widened`` map is still recorded (and gates the protocol).
     # Narrowing is rejected: a lossy cast would silently corrupt
     # out-of-range rows. State is keyed by PHYSICAL name so it is
     # stable across renames. Reference analog: none — Delta's
@@ -1531,30 +1644,6 @@ class VersionedTable:
             return sn >= sc and (pn - sn) >= (pc - sc)
         return False
 
-    def _widen_state(self, entry: dict | None) -> dict[str, str]:
-        return dict(entry.get("widened", {})) if entry else {}
-
-    def _apply_widen(
-        self, df: DataFrame | None, entry: dict | None
-    ) -> DataFrame | None:
-        """Cast the physical columns named by ``entry``'s widen map to
-        their recorded target types — the read-side half of the
-        feature. Version-scoped: time travel to a pre-widen entry
-        applies that entry's (empty) map and reads the narrow type."""
-        if df is None:
-            return None
-        widened = self._widen_state(entry)
-        todo = {c: t for c, t in widened.items() if c in df.columns}
-        if not todo:
-            return df
-        return df.select(
-            *[
-                F.col(f"`{c}`").cast(todo[c]).alias(c) if c in todo
-                else F.col(f"`{c}`")
-                for c in df.columns
-            ]
-        )
-
     def widen_column(self, spark: SparkSession, col: str, new_type: str) -> int:
         """WIDEN COLUMN as a metadata-only commit: record ``col`` (a
         logical name; resolution to physical survives renames) as
@@ -1574,7 +1663,9 @@ class VersionedTable:
         phys = cmap[col]
         if self.partition_col and phys == self.partition_col:
             raise ValueError(f"cannot widen partition column '{col}'")
-        cur = dict(self.read(spark).dtypes).get(col)
+        head = self._head()[1]
+        schema = self._schema(head)
+        cur = schema[phys].dataType.simpleString()
         if not self._widen_allowed(cur, new_type):
             raise ValueError(
                 f"cannot widen column '{col}' from {cur} to {new_type}: "
@@ -1583,11 +1674,17 @@ class VersionedTable:
                 "decimal scale/integral-digit growth); narrowing would "
                 "silently corrupt out-of-range rows"
             )
-        widened = self._widen_state(self._head()[1])
+        widened = dict(head.get("widened", {}))
         widened[phys] = new_type.lower()
+        wide = DataType.fromDDL(new_type)
         return self._commit_metadata(
             "widen_column",
             {"widened": widened,
+             "schema": StructType([
+                 StructField(f.name, wide, f.nullable, f.metadata)
+                 if f.name == phys else f
+                 for f in schema
+             ]).jsonValue(),
              "type_widened": {"col": col, "from": cur, "to": new_type}},
         )
 
@@ -1890,27 +1987,32 @@ class VersionedTable:
             for p, sub in parts.items()
         } if self.stats_cols or self.bloom_cols else {}
         if self.bloom_cols:
-            self._collect_blooms(df.sparkSession, full, files)
+            self._collect_blooms(
+                df.sparkSession, full, self._frame_schema(df), files
+            )
         return rel, parts, files
 
     def _collect_blooms(
-        self, spark: SparkSession, full: str, files: dict[str, list[dict]]
+        self,
+        spark: SparkSession,
+        full: str,
+        schema: StructType,
+        files: dict[str, list[dict]],
     ) -> None:
         """Build per-file Bloom bit sets for ``bloom_cols`` and annotate
         the file entries in place (``"b": {col: {"t": dtype, "h": hex}}``).
-        One aggregate over the newly staged files per column: k=BLOOM_K
-        positions per value via Spark's xxhash64 (value, seed) chaining,
-        folded into 64-bit words with bit_or — all JVM-side; only the
-        (files x 64)-row word table is collected."""
-        scan = (
-            spark.read.option("basePath", full).parquet(full)
-            if self.partition_col
-            else spark.read.parquet(full)
+        One aggregate over the newly staged files per column, read at
+        the staged frame's ``schema``: k=BLOOM_K positions per value via
+        Spark's xxhash64 (value, seed) chaining, folded into 64-bit
+        words with bit_or — all JVM-side; only the (files x 64)-row word
+        table is collected."""
+        scan = _scan(
+            spark, schema, [full], full if self.partition_col else None
         )
-        dtypes = dict(scan.dtypes)
+        dtypes = {f.name: f.dataType.simpleString() for f in schema}
         nwords = self.bloom_bits // 64
         for c in self.bloom_cols:
-            if c not in dtypes or c == self.partition_col:
+            if c not in dtypes:
                 continue
             pos = F.explode(
                 F.array(
@@ -2003,9 +2105,10 @@ class VersionedTable:
         rename or drop landing before the commit is a
         ConcurrentWriteError."""
         entry = self._head()[1]
-        df, cm = self._prep_write(df, entry)
+        df, cm = self._prep_write(df, entry, replace=True)
         st = self._colmap_state(entry)
         df = self._materialize_generated(df)
+        schema = self._frame_schema(df).jsonValue()
         rel, parts, files = self._stage(df)
 
         def build(head: int, head_entry: dict):
@@ -2016,7 +2119,7 @@ class VersionedTable:
             }
             # no old pointer survives a full-snapshot replacement, so
             # no tombstone applies: the dv list resets
-            return live, [], cm
+            return live, [], {**cm, "schema": schema}
 
         # txn watermarks survive overwrites: idempotence tracking must
         # not reset when the data is replaced
@@ -2235,7 +2338,9 @@ class VersionedTable:
                     # rather than surviving as duplicates.
                     found |= {
                         str(r[0])
-                        for r in self._read_live(spark, entry["live"])
+                        for r in self._read_live(
+                            spark, entry["live"], self._schema(entry)
+                        )
                         .select(*keys, pc)
                         .join(
                             F.broadcast(source.select(*keys).distinct()),
@@ -2247,11 +2352,10 @@ class VersionedTable:
                         .collect()
                     }
                 touched = sorted(found)
-            types, current = self._read_at_schema(
-                spark, entry, touched, like=source
-            )
-            new_cols = set(source.columns) - set(types)
-            missing = set(types) - set(source.columns)
+            schema, current = self._read_at_schema(spark, entry, touched)
+            cols = set(schema.names) | ({pc} if pc else set())
+            new_cols = set(source.columns) - cols
+            missing = cols - set(source.columns)
             if missing or (new_cols and not merge_schema):
                 # A narrow source used to silently NARROW the table for
                 # every rewritten partition: data loss, not evolution.
@@ -2327,7 +2431,7 @@ class VersionedTable:
                     )
                     if assign is not None and c in assign:
                         v = F.when(
-                            upd, F.expr(assign[c]).cast(types[c])
+                            upd, F.expr(assign[c]).cast(schema[c].dataType)
                         ).otherwise(v)
                     return v.alias(c)
 
@@ -2347,6 +2451,9 @@ class VersionedTable:
         return self._commit_delete(
             base, touched, rel, parts, op="merge", files=files, txn=txn,
             extra={**cm, "op": "append"} if append else cm, append=append,
+            new_fields=[
+                f for f in self._frame_schema(source) if f.name in new_cols
+            ],
         )
 
     def _read_at_schema(
@@ -2355,49 +2462,32 @@ class VersionedTable:
         entry: dict,
         parts,
         with_pos: bool = False,
-        like: DataFrame | None = None,
-    ) -> tuple[dict[str, str], DataFrame | None]:
-        """The schema rules of the MERGE and row-level DML bodies:
-        returns (table types, the partitions ``parts`` of ``entry`` read
-        at those types; None when none of them is live).
-
-        The types are judged against the FULL live snapshot, widened,
-        rather than against the read partitions' files: after an
-        evolution those may be narrower than the table, and judging by
-        them would make acceptance partition-dependent. Under column
-        mapping only mapped columns count (a dropped column's bytes
-        still sit in old files but are not part of the schema). So
-        older files null-fill the columns added since, and dropped bytes
-        drop. ``like``'s types stand in when nothing is live;
+    ) -> tuple[StructType, DataFrame | None]:
+        """The schema rules of the MERGE, row-level DML and compaction
+        bodies: returns (``entry``'s data schema, the partitions
+        ``parts`` of ``entry`` read at it; None when none of them is
+        live). Judging by the table's schema, not the read partitions'
+        files, keeps acceptance partition-independent: older files
+        null-fill the columns added since and read at the widened
+        types, and dropped columns' bytes are not read at all.
         ``with_pos`` keeps the (__file, __pos) row identity."""
-        full = self._apply_widen(self._read_live(spark, entry["live"]), entry)
-        src = full if full is not None else like
-        st = self._colmap_state(entry)
-        types = {
-            c: t for c, t in (src.dtypes if src is not None else [])
-            if st is None or c in st[0].values()
-        }
-        df = self._apply_widen(
-            self._read_snapshot(
-                spark,
-                {p: e for p, e in entry["live"].items() if p in parts},
-                entry,
-                with_pos=with_pos,
-            ),
+        return self._schema(entry), self._read_snapshot(
+            spark,
+            {p: e for p, e in entry["live"].items() if p in parts},
             entry,
+            with_pos=with_pos,
         )
-        pos = ["__file", "__pos"] if with_pos else []
-        if df is not None and set(df.columns) != set(types) | set(pos):
-            have = set(df.columns)
-            df = df.select(
-                *[
-                    F.col(f"`{c}`") if c in have
-                    else F.lit(None).cast(t).alias(c)
-                    for c, t in types.items()
-                ],
-                *pos,
+
+    def _check_columns(self, entry: dict, df: DataFrame, what: str) -> None:
+        """A write that only adds rows must carry exactly the table's
+        columns (additive evolution is merge's, with merge_schema)."""
+        cols = set(self._schema(entry).names)
+        cols |= {self.partition_col} if self.partition_col else set()
+        if entry["live"] and set(df.columns) != cols:
+            raise ValueError(
+                f"{what} requires the exact table schema; table "
+                f"{sorted(cols)} vs {what} {sorted(df.columns)}"
             )
-        return types, df
 
     def append(
         self, df: DataFrame, txn: tuple[str, int] | None = None
@@ -2424,12 +2514,7 @@ class VersionedTable:
                 return self.latest_version()
         if base is None:
             return self.overwrite(df, txn=txn, op="append")
-        full = self._read_live(df.sparkSession, entry["live"])
-        if full is not None and set(full.columns) != set(df.columns):
-            raise ValueError(
-                "append requires the exact table schema; table "
-                f"{sorted(full.columns)} vs append {sorted(df.columns)}"
-            )
+        self._check_columns(entry, df, "append")
         rel, parts, files = self._stage(df)
 
         def build(head: int, head_entry: dict):
@@ -2466,12 +2551,7 @@ class VersionedTable:
         df, cm = self._prep_write(df, entry)
         st = self._colmap_state(entry)
         df = self._materialize_generated(df)
-        full = self._read_live(df.sparkSession, entry["live"])
-        if full is not None and set(full.columns) != set(df.columns):
-            raise ValueError(
-                "stage_wap requires the exact table schema; table "
-                f"{sorted(full.columns)} vs staged {sorted(df.columns)}"
-            )
+        self._check_columns(entry, df, "stage_wap")
         rel, parts, files = self._stage(df)
 
         def build(head: int, head_entry: dict):
@@ -2506,11 +2586,10 @@ class VersionedTable:
         e = self._wap_entry(staged_version, wap_id)
         snap = self.read(spark, version=staged_version)
         # staged files carry no merge-on-read history: read them
-        # through the entry's colmap/widen context but with no dv
+        # through the entry's colmap and schema but with no dv
         staged_entry = {k: v for k, v in e.items() if k != "dv"}
-        staged_df = self._apply_widen(
-            self._read_snapshot(spark, e["wap"]["files"], staged_entry),
-            staged_entry,
+        staged_df = self._read_snapshot(
+            spark, e["wap"]["files"], staged_entry
         )
         assert staged_df is not None
         return snap.unionByName(self._from_physical(staged_df, staged_entry))
@@ -2584,16 +2663,20 @@ class VersionedTable:
         extra: dict | None = None,
         append: bool = False,
         drop_dead_dv: bool = False,
+        new_fields: Sequence[StructField] = (),
     ) -> int:
         """Commit for the copy-on-write DML forms (delete, partition
         drop, update, MERGE, compaction): point each touched partition
         that still has data (``parts``) at the staged files — appended
         to its pointer list when ``append`` (MERGE's no-match plan),
         else replacing it — and drop the rest from live. ``extra``
-        fields ride into the entry. ``drop_dead_dv`` (compaction) drops
-        every tombstone no remaining live pointer can be subject to: a
-        pointer whose ``v`` (0 when absent) is at most the tombstone's
-        keeps it, so a whole-table rewrite clears the list."""
+        fields ride into the entry; ``new_fields`` (merge_schema's
+        added columns) extend the schema of the head committed on, so
+        a rebase keeps the columns a concurrent commit added.
+        ``drop_dead_dv`` (compaction) drops every tombstone no remaining
+        live pointer can be subject to: a pointer whose ``v`` (0 when
+        absent) is at most the tombstone's keeps it, so a whole-table
+        rewrite clears the list."""
 
         def build(head: int, head_entry: dict):
             live = dict(head_entry["live"])
@@ -2615,7 +2698,13 @@ class VersionedTable:
                     t for t in head_entry.get("dv", [])
                     if oldest is not None and oldest <= t["v"]
                 ]
-            return live, dv, extra or {}
+            fields = dict(extra or {})
+            if new_fields:
+                schema = self._schema(head_entry)
+                fields["schema"] = StructType(schema.fields + [
+                    f for f in new_fields if f.name not in schema.names
+                ]).jsonValue()
+            return live, dv, fields
 
         return self._commit(base_version, touched, op, build, txn=txn)
 
@@ -2804,10 +2893,10 @@ class VersionedTable:
         parts = entry["live"].keys()
         if candidate_partitions is not None:
             parts = {str(v) for v in candidate_partitions}
-        types, snap = self._read_at_schema(
+        schema, snap = self._read_at_schema(
             spark, entry, parts, with_pos=mode == "mor"
         )
-        unknown = set(assign or ()) - set(types)
+        unknown = set(assign or ()) - set(schema.names)
         if unknown:
             raise ValueError(
                 f"assignments reference unknown columns: {sorted(unknown)}"
@@ -2832,7 +2921,8 @@ class VersionedTable:
                 if c not in assign:
                     return F.col(c)
                 v = assign[c]
-                v = (F.expr(v) if isinstance(v, str) else v).cast(types[c])
+                v = F.expr(v) if isinstance(v, str) else v
+                v = v.cast(schema[c].dataType)
                 if guard is not None:
                     v = F.when(guard, v).otherwise(F.col(c))
                 return v.alias(c)
@@ -2891,7 +2981,7 @@ class VersionedTable:
             # the write leaves orphan files under data/ that no log
             # entry references (dead weight until vacuum).
             raise FileNotFoundError(f"no commits at {self.path}")
-        cmst = self._head_colmap()
+        cmst = self._colmap_state(self._head()[1])
         if cmst is not None:
             phys = self._cols_to_physical(keys_df.columns, cmst)
             keys_df = keys_df.select(
@@ -2907,48 +2997,30 @@ class VersionedTable:
         keys_df.coalesce(1).write.parquet(os.path.join(self.path, rel))
 
         def build(head: int, head_entry: dict):
-            tomb = {"commit_dir": rel, "cols": cols, "v": head + 1}
+            tomb = {"commit_dir": rel, "cols": cols, "v": head + 1,
+                    "schema": keys_df.schema.jsonValue()}
             dv = head_entry.get("dv", []) + [tomb]
             return dict(head_entry["live"]), dv, {}
 
         return self._commit(None, [], "delete_keys", build)
 
     # ---------------------------------------------------------- reads
-    def _commit_scan(
-        self,
-        spark: SparkSession,
-        rel: str,
-        paths: Sequence[str],
-        base_path: str | None = None,
-    ) -> DataFrame:
-        """``spark.read.parquet`` over files of ONE commit dir, with the
-        dir's schema served from :data:`_COMMIT_SCHEMAS` after the first
-        inference (see the memo's contract note). Any file subset of a
-        commit shares the commit's schema — one write, one schema."""
-        key = (self.path, rel, base_path is not None)
-        sch = _COMMIT_SCHEMAS.get(key)
-        r = spark.read
-        if base_path is not None:
-            r = r.option("basePath", base_path)
-        if sch is not None:
-            return r.schema(sch).parquet(*paths)
-        df = r.parquet(*paths)
-        if len(_COMMIT_SCHEMAS) >= _COMMIT_SCHEMAS_CAP:
-            _COMMIT_SCHEMAS.pop(next(iter(_COMMIT_SCHEMAS)))
-        _COMMIT_SCHEMAS[key] = df.schema
-        return df
-
     def _read_dv_files(
         self, spark: SparkSession, dvs: list[dict]
     ) -> DataFrame:
-        """Union of the named DV sidecar parquets (distinct rows)."""
+        """Union of the named DV sidecar parquets (distinct rows). A
+        positional sidecar's columns are fixed; a key tombstone records
+        those of the key frame its writer passed (one written before
+        tombstones recorded them is read from its footer)."""
         out = None
         for t in dvs:
-            k = self._commit_scan(
-                spark,
-                t["commit_dir"],
-                [os.path.join(self.path, t["commit_dir"])],
-            )
+            path = os.path.join(self.path, t["commit_dir"])
+            if "cols" not in t:
+                k = _scan(spark, _POS_SCHEMA, [path])
+            elif "schema" in t:
+                k = _scan(spark, StructType.fromJson(t["schema"]), [path])
+            else:
+                k = spark.read.parquet(path)
             out = k if out is None else out.unionByName(k)
         return out.distinct()
 
@@ -2958,26 +3030,29 @@ class VersionedTable:
         live: dict,
         entry: dict,
         with_pos: bool = False,
+        schema: StructType | None = None,
     ) -> DataFrame | None:
-        """A live-map subset read with the entry's merge-on-read
-        deletes applied. Key tombstones (entries with "cols"): pointers
-        are grouped by WHICH tombstones apply (tombstone.v >= pointer.v
-        — a rewritten pointer is exempt from older tombstones because
-        its rows were read through them), each group anti-joins the
-        union of its applicable key sets, and the groups re-union.
-        Positional deletion vectors (entries without "cols"): one
+        """A live-map subset read at ``schema`` (default: the entry's)
+        with the entry's merge-on-read deletes applied. Key tombstones
+        (entries with "cols"): pointers are grouped by WHICH tombstones
+        apply (tombstone.v >= pointer.v — a rewritten pointer is exempt
+        from older tombstones because its rows were read through them),
+        each group anti-joins the union of its applicable key sets, and
+        the groups re-union. Positional deletion vectors (entries
+        without "cols"): one
         anti-join on (__file, __pos) over the union of DV sidecars —
         file-addressed, so no version gating is needed (a rewritten
         pointer's files are new names an old DV cannot match).
         ``with_pos=True`` keeps the (__file, __pos) identity columns in
         the output (the DV writers' probe read). No deletes = exactly
         :meth:`_read_live`."""
+        schema = self._schema(entry) if schema is None else schema
         dvs = entry.get("dv", [])
         key_dvs = [t for t in dvs if "cols" in t]
         pos_dvs = [t for t in dvs if "cols" not in t]
         need_pos = with_pos or bool(pos_dvs)
         if not dvs and not with_pos:
-            return self._read_live(spark, live)
+            return self._read_live(spark, live, schema)
         groups: dict[tuple, dict] = {}
         for p, e in live.items():
             for ptr in _ptrs(e):
@@ -2990,7 +3065,7 @@ class VersionedTable:
                 grp.setdefault(p, []).append(ptr)
         out = None
         for applicable, sub in groups.items():
-            df = self._read_live(spark, sub, with_pos=need_pos)
+            df = self._read_live(spark, sub, schema, with_pos=need_pos)
             if df is None:
                 continue
             by_cols: dict[tuple, list[dict]] = {}
@@ -3002,11 +3077,7 @@ class VersionedTable:
                 df = df.join(
                     self._read_dv_files(spark, ts), list(cset), "left_anti"
                 )
-            out = (
-                df
-                if out is None
-                else out.unionByName(df, allowMissingColumns=True)
-            )
+            out = df if out is None else out.unionByName(df)
         if out is not None and pos_dvs:
             out = out.join(
                 self._read_dv_files(spark, pos_dvs),
@@ -3018,57 +3089,39 @@ class VersionedTable:
         return out
 
     def _read_live(
-        self, spark: SparkSession, live: dict, with_pos: bool = False
+        self,
+        spark: SparkSession,
+        live: dict,
+        schema: StructType,
+        with_pos: bool = False,
     ) -> DataFrame | None:
-        """One scan per distinct commit dir (basePath restores the
-        partition column), unioned — O(live commits) scans. A pointer
-        restricted to an explicit file subset (the output of stats
-        pruning) scans exactly those files instead of its directory.
-        ``with_pos`` attaches per-file row identity (see _with_pos) to
-        every scan before the union."""
+        """One scan at ``schema`` per distinct commit dir (basePath
+        restores the partition column), unioned — O(live commits)
+        scans. A pointer restricted to an explicit file subset (the
+        output of stats pruning) scans exactly those files instead of
+        its partition dir. ``with_pos`` attaches per-file row identity
+        (see _with_pos) to every scan before the union."""
         if not live:
             return None
-        by_commit: dict[str, list[str]] = {}
-        by_commit_files: dict[str, list[str]] = {}
+        by_commit: dict[str, set[str]] = {}
         for e in live.values():
             for ptr in _ptrs(e):
-                if "only_files" in ptr:
-                    by_commit_files.setdefault(
-                        ptr["commit_dir"], []
-                    ).extend(ptr["only_files"])
-                else:
-                    by_commit.setdefault(ptr["commit_dir"], []).append(
-                        ptr["part_dir"]
-                    )
+                by_commit.setdefault(ptr["commit_dir"], set()).update(
+                    ptr.get("only_files") or [ptr["part_dir"]]
+                )
         scans = []
         for rel, subs in by_commit.items():
             base = os.path.join(self.path, rel)
-            if subs == [""]:
-                scans.append(self._commit_scan(spark, rel, [base]))
+            if subs == {""}:
+                scans.append(_scan(spark, schema, [base]))
             else:
-                paths = [os.path.join(base, s) for s in sorted(set(subs))]
-                scans.append(
-                    self._commit_scan(spark, rel, paths, base_path=base)
-                )
-        for rel, names in by_commit_files.items():
-            base = os.path.join(self.path, rel)
-            paths = [os.path.join(base, n) for n in sorted(names)]
-            if self.partition_col:
-                scans.append(
-                    self._commit_scan(spark, rel, paths, base_path=base)
-                )
-            else:
-                scans.append(self._commit_scan(spark, rel, paths))
+                paths = [os.path.join(base, s) for s in sorted(subs)]
+                scans.append(_scan(spark, schema, paths, base))
         if with_pos:
             scans = [_with_pos(s) for s in scans]
         out = scans[0]
         for s in scans[1:]:
-            # allowMissingColumns: after additive schema evolution
-            # (merge_schema=True) older commits' files lack the new
-            # columns — the reader null-fills them instead of forcing
-            # a historical rewrite. Identical schemas take the same
-            # path with zero behavior change.
-            out = out.unionByName(s, allowMissingColumns=True)
+            out = out.unionByName(s)
         return out
 
     def version_as_of(self, timestamp: float) -> int:
@@ -3265,13 +3318,13 @@ class VersionedTable:
             if not kept and live:
                 # every file pruned: an empty frame with the table schema
                 # (limit(0) short-circuits before any file is read)
-                full = self._apply_widen(self._read_live(spark, live), entry)
+                full = self._read_live(spark, live, self._schema(entry))
                 assert full is not None
                 return self._from_physical(
                     full.limit(0).where(F.expr(where)), entry
                 )
             live = kept
-        df = self._apply_widen(self._read_snapshot(spark, live, entry), entry)
+        df = self._read_snapshot(spark, live, entry)
         if df is None:
             raise ValueError(
                 f"version {v} has no live data (every partition deleted); "
@@ -3306,7 +3359,9 @@ class VersionedTable:
                 anchor_v = u
                 if isinstance(self._store, LocalFSLogStore):
                     base = (
-                        spark.read.parquet(self._store._p(self._ckpt_name(u)))
+                        spark.read.schema("kind string, key string, "
+                                          "payload string")
+                        .parquet(self._store._p(self._ckpt_name(u)))
                         .where(F.col("kind") == "ptr")
                         .select(
                             F.col("key").alias("partition"),
@@ -3396,7 +3451,7 @@ class VersionedTable:
             include_deletes,
             include_update_preimages,
         )
-        return self._from_physical(out, to_entry, keep=("_change_type",))
+        return self._from_physical(out, to_entry)
 
     def _cdf_single_commit_fast(
         self,
@@ -3451,12 +3506,11 @@ class VersionedTable:
         ):
             return None  # not this shape
         suffix, new_dvs = d.appended, d.pos_tombstones
+        schema = self._schema(to_entry)
         if op == "append":
             if new_dvs:
                 return None
-            new_rows = self._apply_widen(
-                self._read_live(spark, suffix), to_entry
-            )
+            new_rows = self._read_live(spark, suffix, schema)
             if new_rows is None:
                 return None
             return new_rows.withColumn("_change_type", F.lit("insert"))
@@ -3464,19 +3518,19 @@ class VersionedTable:
         upd_cols = to_entry.get("dv_update_cols")
         if upd_cols is None or set(keys) & set(upd_cols):
             return None
-        post = self._apply_widen(self._read_live(spark, suffix), to_entry)
+        post = self._read_live(spark, suffix, schema)
         e_from = from_entry["live"]
         pre_snap = self._read_snapshot(
             spark,
             {p: e_from[p] for p in suffix if p in e_from},
             from_entry,
             with_pos=True,
+            schema=schema,
         )
         if post is None or pre_snap is None:
             return None
         pre = (
-            self._apply_widen(pre_snap, to_entry)
-            .join(
+            pre_snap.join(
                 self._read_dv_files(spark, new_dvs),
                 ["__file", "__pos"],
                 "inner",
@@ -3579,22 +3633,19 @@ class VersionedTable:
         }
         # both sides read THROUGH their version's tombstones, so a row
         # merge-on-read-deleted before from_version can never reappear
-        # in the diff. BOTH sides cast to the END version's widened
-        # types (a feed across a widen_column would otherwise struct-
-        # compare int against bigint and its unions would mix types).
-        new = self._apply_widen(
-            self._read_snapshot(spark, changed, to_entry), to_entry
-        )
-        old = self._apply_widen(
-            self._read_snapshot(
-                spark,
-                {
-                    **{p: e_from[p] for p in changed if p in e_from},
-                    **dropped,
-                },
-                from_entry,
-            ),
-            to_entry,
+        # in the diff. BOTH sides read at the END version's schema: a
+        # feed across a widen_column struct-compares wide against wide,
+        # and across an additive evolution old files null-fill the new
+        # columns, so an old row differs from its rewritten image
+        # exactly when real values changed OR the new column is
+        # non-null.
+        schema = self._schema(to_entry)
+        new = self._read_snapshot(spark, changed, to_entry)
+        old = self._read_snapshot(
+            spark,
+            {**{p: e_from[p] for p in changed if p in e_from}, **dropped},
+            from_entry,
+            schema=schema,
         )
         # tombstones ADDED in the window delete rows out of partitions
         # whose pointers never moved; surface them as 'delete' changes.
@@ -3603,8 +3654,8 @@ class VersionedTable:
         new_key_dv, new_pos_dv = d.key_tombstones, d.pos_tombstones
         dv_gone = None
         if include_deletes and new_key_dv:
-            remaining = self._apply_widen(
-                self._read_snapshot(spark, unchanged, from_entry), to_entry
+            remaining = self._read_snapshot(
+                spark, unchanged, from_entry, schema=schema
             )
             if remaining is not None:
                 by_cols: dict[tuple, list[dict]] = {}
@@ -3628,11 +3679,8 @@ class VersionedTable:
             # from-side snapshot of UNCHANGED partitions on exact file
             # identity. Partitions whose pointers DID change (e.g. an
             # update_rows append) are covered by the struct diff below.
-            rem = self._apply_widen(
-                self._read_snapshot(
-                    spark, unchanged, from_entry, with_pos=True
-                ),
-                to_entry,
+            rem = self._read_snapshot(
+                spark, unchanged, from_entry, with_pos=True, schema=schema
             )
             if rem is not None:
                 hit = rem.join(
@@ -3658,17 +3706,6 @@ class VersionedTable:
                 )
             return inserts
         cols = (new if new is not None else old).columns
-        if new is not None:
-            # Across an additive schema evolution the old version's
-            # files lack the new columns; null-fill them (typed from
-            # the new schema) so the row-struct compare still works —
-            # an old row then differs from its rewritten image exactly
-            # when real values changed OR the new column is non-null.
-            for f in new.schema.fields:
-                if f.name not in old.columns:
-                    old = old.withColumn(
-                        f.name, F.lit(None).cast(f.dataType)
-                    )
         old_k = old.select(
             *keys, F.struct(*cols).alias("_old_row")
         )
@@ -3954,6 +3991,7 @@ class VersionedTable:
                 )
                 if k in entry
             },
+            "schema": self._schema(entry).jsonValue(),
         }
         if not dest._try_commit(new_entry):
             raise ConcurrentWriteError(
@@ -4036,7 +4074,8 @@ class VersionedTable:
         # schema travels with the restore: the RESTORED version's
         # column mapping replaces the head's (including restoring to a
         # pre-mapping state, where the keys must disappear — None drops
-        # a field)
+        # a field), and so does its data schema, at the head's widened
+        # types (widening never downgrades, see _meta_fields)
         extra = {
             "restored_from": version,
             **{
@@ -4044,14 +4083,20 @@ class VersionedTable:
                 for k in ("colmap", "colmap_used", "dropped_cols", "renamed")
             },
         }
-        return self._commit(
-            None,
-            sorted(entry["live"]),
-            "restore",
-            lambda head, head_entry: (
-                dict(entry["live"]), entry.get("dv", []), extra
-            ),
-        )
+
+        def build(head: int, head_entry: dict):
+            wide = {
+                f.name: f for f in self._schema(head_entry)
+                if f.name in head_entry.get("widened", {})
+            }
+            schema = StructType(
+                [wide.get(f.name, f) for f in self._schema(entry)]
+            )
+            return dict(entry["live"]), entry.get("dv", []), {
+                **extra, "schema": schema.jsonValue()
+            }
+
+        return self._commit(None, sorted(entry["live"]), "restore", build)
 
     def register_sql(
         self,

@@ -45,7 +45,6 @@ the transaction log."""
 from __future__ import annotations
 
 import os
-import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -56,92 +55,51 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DataType, StructType
 
 _CHANGE_TYPE = "_change_type"
 _COMMIT_VERSION = "_commit_version"
 
-# fixed arrow types <-> Spark DDL; the widen_column targets (smallint,
-# int, bigint, double, decimal) map back through the inverse
-_ARROW_DDL = {
-    pa.int8(): "tinyint",
-    pa.int16(): "smallint",
-    pa.int32(): "int",
-    pa.int64(): "bigint",
-    pa.float32(): "float",
-    pa.float64(): "double",
-    pa.bool_(): "boolean",
-    pa.binary(): "binary",
-    pa.large_binary(): "binary",
-    pa.string(): "string",
-    pa.large_string(): "string",
-}
-_DDL_ARROW = {d: t for t, d in _ARROW_DDL.items()}
-
-
-def _arrow_to_ddl(t: pa.DataType) -> str:
-    if t in _ARROW_DDL:
-        return _ARROW_DDL[t]
-    if pa.types.is_date(t):
-        return "date"
-    if pa.types.is_timestamp(t):
-        return "timestamp"
-    if pa.types.is_decimal(t):
-        return f"decimal({t.precision},{t.scale})"
-    raise ValueError(f"unsupported arrow type for change feed: {t}")
-
-
-def _widened_arrow(sql: str) -> pa.DataType:
-    m = re.fullmatch(r"decimal\((\d+),(\d+)\)", sql)
-    return pa.decimal128(int(m[1]), int(m[2])) if m else _DDL_ARROW[sql]
-
-
 def _stream_columns(table):
     """The stream's output columns, resolved from the head entry, which
     is returned with them: the data columns as (physical file name,
-    logical name, arrow type) and the partition column's physical and
+    logical name, Spark type) and the partition column's physical and
     logical names (Nones when unpartitioned).
 
-    Names resolve under the head's column mapping (files keep physical
-    names, so older versions read correctly through it; an unmapped
-    physical column is dropped-column bytes, omitted). Types come from
-    one footer of a live file — the table's files share one logical
-    schema; an additively-evolved older file null-fills at conform time
-    — with the head's widened columns at their widened types, since
-    that file may predate the widen. Spark hands timestamps to Arrow as
-    microseconds while files may carry ns, so those normalize to us.
-    The table handle is rebuilt from just a path (the readStream
-    option), so the partition column is discovered Hive-style from the
-    live pointers' ``col=value`` dir names, as the engine's partition
-    discovery reader does."""
+    Everything comes from the entry — no file is opened, so this runs
+    in the Python workers that host the source. Names resolve under the
+    head's column mapping (files keep physical names, so older versions
+    read correctly through it); types are the entry's recorded schema,
+    widened columns included, so an older narrow file casts up and an
+    additively-evolved one null-fills at conform time. The table handle
+    is rebuilt from just a path (the readStream option), so the
+    partition column is discovered Hive-style from the live pointers'
+    ``col=value`` dir names, as the engine's partition discovery reader
+    does."""
     from de_final_project_spark.operators.txlog import _ptrs
 
     head = table.latest_version()
     if head is None:
         raise FileNotFoundError(f"no commits at {table.path}")
     entry = table._read_entry(head)
-    ptrs = [ptr for e in entry["live"].values() for ptr in _ptrs(e)]
-    first = next(
-        (f for ptr in ptrs for f in _pointer_files(table, ptr)), None
-    )
-    if first is None:
-        raise FileNotFoundError(f"no live data files at {table.path}")
-    cmap, widened = entry.get("colmap"), entry.get("widened", {})
+    if "schema" not in entry:
+        raise ValueError(
+            f"the head entry of {table.path} records no schema (it was "
+            "written before log entries carried one): commit to the "
+            "table once, then start the stream"
+        )
+    cmap = entry.get("colmap")
     inv = {p: l for l, p in cmap.items()} if cmap else {}
     fields = [
-        (
-            fd.name,
-            inv.get(fd.name, fd.name),
-            _widened_arrow(widened[fd.name]) if fd.name in widened
-            else pa.timestamp("us") if pa.types.is_timestamp(fd.type)
-            else fd.type,
-        )
-        for fd in pq.read_schema(first)
-        if not cmap or fd.name in inv
+        (f.name, inv.get(f.name, f.name), f.dataType)
+        for f in StructType.fromJson(entry["schema"])
     ]
     part = next(
         (
             ptr["part_dir"].split("=", 1)[0]
-            for ptr in ptrs
+            for e in entry["live"].values()
+            for ptr in _ptrs(e)
             if "=" in ptr.get("part_dir", "")
         ),
         None,
@@ -226,7 +184,7 @@ class _VersionPartition(InputPartition):
     def __init__(self, version, tasks, fields, part_col, part_col_out=None):
         self.version = version
         self.tasks = tasks
-        # [(physical file name, logical output name, arrow type)]
+        # [(physical file name, logical output name, Spark type)]
         self.fields = fields
         self.part_col = part_col  # physical (parses col=value dirs)
         self.part_col_out = part_col_out or part_col  # logical name
@@ -234,7 +192,7 @@ class _VersionPartition(InputPartition):
 
 def _conform(
     tbl: pa.Table,
-    fields: list[tuple[str, str, pa.DataType]],
+    fields: list[tuple[str, str, DataType]],
     part_col_out: str | None,
     pval: str | None,
     tag: str,
@@ -243,12 +201,14 @@ def _conform(
     """Project an arrow table onto the declared stream schema: data
     columns selected by their PHYSICAL file name and emitted under
     their LOGICAL name (identical unless column mapping renamed them),
-    null-filled if an old file lacks one, cast to the normalized type;
-    then the partition value as a string column and the CDC metadata
-    columns."""
+    null-filled if an old file lacks one, cast to the column's arrow
+    type (timestamps as tz-naive microseconds, which is how Spark
+    hands them to Arrow whatever unit a file carries); then the
+    partition value as a string column and the CDC metadata columns."""
     n = tbl.num_rows
     cols, names = [], []
-    for phys, logical, typ in fields:
+    for phys, logical, dt in fields:
+        typ = to_arrow_type(dt, timestamp_utc=False)
         if phys in tbl.column_names:
             cols.append(tbl.column(phys).cast(typ))
         else:
@@ -397,7 +357,7 @@ class ChangeFeedDataSource(DataSource):
         _, fields, _, part_col = _stream_columns(
             VersionedTable(self.options["path"])
         )
-        parts = [f"`{n}` {_arrow_to_ddl(t)}" for _, n, t in fields]
+        parts = [f"`{n}` {t.simpleString()}" for _, n, t in fields]
         if part_col:
             # staged files never contain the partition column (it lives
             # in dir names); surfaced as a string for the consumer to

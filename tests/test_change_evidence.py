@@ -24,6 +24,7 @@ from de_final_project_spark.operators.txlog import (
 from de_final_project_spark.streaming.change_source import (
     ChangeFeedDataSource,
     ChangeFeedStreamReader,
+    _stream_columns,
     version_tasks,
 )
 
@@ -276,13 +277,23 @@ def test_version_tasks_needs_the_parent_entry(table):
         version_tasks(fresh, entry)
 
 
+def _schema(typ: str) -> dict:
+    """The ``schema`` field ``_commit`` records for one ``id`` column."""
+    return {"type": "struct", "fields": [
+        {"name": "id", "type": typ, "nullable": True, "metadata": {}},
+    ]}
+
+
+INT_ID, LONG_ID = _schema("integer"), _schema("long")
+
+
 def _int_table(tmp_path) -> VersionedTable:
     """A real table whose v1 files {0: A0, 1: A1} hold one int32 ``id``
     each (the partition value)."""
     t = VersionedTable(str(tmp_path / "t"))
     for p in ("0", "1"):
         _write_ids(t, "a", p, pa.array([int(p)], pa.int32()))
-    _commit(t, "overwrite", {"0": A0, "1": A1})
+    _commit(t, "overwrite", {"0": A0, "1": A1}, schema=INT_ID)
     return t
 
 
@@ -300,24 +311,24 @@ def test_stream_fails_on_mid_stream_widen(tmp_path):
     reader = ChangeFeedStreamReader({"path": t.path})
     assert len(reader.partitions({"version": 0}, {"version": 1})) == 1
     _commit(t, "widen_column", {"0": A0, "1": A1},
-            widened={"id": "bigint"})
+            widened={"id": "bigint"}, schema=LONG_ID)
     with pytest.raises(ValueError, match="mid-stream"):
         reader.partitions({"version": 1}, {"version": 2})
 
 
 def test_stream_across_an_earlier_widen_reads_the_widened_type(tmp_path):
     """A stream started after a widen but reading from before it
-    declares the widened type, though the footer it reads the schema
-    from predates the widen: narrow files cast up, and a value beyond
-    the narrow range written after the widen reads back whole."""
+    declares the widened type, though the files it reads predate the
+    widen: narrow files cast up, and a value beyond the narrow range
+    written after the widen reads back whole."""
     t = _int_table(tmp_path)
     _commit(t, "widen_column", {"0": A0, "1": A1},
-            widened={"id": "bigint"})
+            widened={"id": "bigint"}, schema=LONG_ID)
     big = 2**31 + 5
     _write_ids(t, "b", "1", pa.array([big], pa.int64()))
-    # every later commit carries the widen state forward
+    # every later commit carries the widen state and schema forward
     _commit(t, "append", {"0": A0, "1": [A1, _ptr("b", "1", 3)]},
-            widened={"id": "bigint"})
+            widened={"id": "bigint"}, schema=LONG_ID)
     assert "`id` bigint" in ChangeFeedDataSource({"path": t.path}).schema()
     reader = ChangeFeedStreamReader({"path": t.path})
     batches = [
@@ -329,3 +340,36 @@ def test_stream_across_an_earlier_widen_reads_the_widened_type(tmp_path):
     assert sorted((r["id"], r["_commit_version"]) for r in rows) == [
         (0, 1), (1, 1), (big, 3),
     ]
+
+
+def test_stream_columns_read_the_entry_not_a_footer(tmp_path):
+    """The stream's columns come from the head entry's schema alone:
+    resolved over pointers whose files were never written, under the
+    column mapping, with the partition column from the dir names. A
+    head entry without a schema (written before entries carried one)
+    is refused, since the source's workers have no Spark to infer it."""
+    t = VersionedTable(str(tmp_path / "t"))
+    schema = {"type": "struct", "fields": [
+        {"name": n, "type": typ, "nullable": True, "metadata": {}}
+        for n, typ in (("id", "long"), ("s__p1", "string"),
+                       ("ts", "timestamp"), ("amt", "decimal(12,4)"))
+    ]}
+    _commit(t, "overwrite", {"0": A0, "1": A1}, schema=schema,
+            colmap={"id": "id", "name": "s__p1", "ts": "ts", "amt": "amt",
+                    "pb": "pb"})
+    assert not os.path.exists(os.path.join(t.path, "data"))
+    _, fields, part, part_out = _stream_columns(t)
+    assert [(p, n, dt.simpleString()) for p, n, dt in fields] == [
+        ("id", "id", "bigint"), ("s__p1", "name", "string"),
+        ("ts", "ts", "timestamp"), ("amt", "amt", "decimal(12,4)"),
+    ]
+    assert (part, part_out) == ("pb", "pb")
+    assert ChangeFeedDataSource({"path": t.path}).schema() == (
+        "`id` bigint, `name` string, `ts` timestamp, `amt` decimal(12,4), "
+        "`pb` string, `_change_type` string, `_commit_version` bigint"
+    )
+    legacy = VersionedTable(str(tmp_path / "old"),
+                            log_store=ConditionalPutLogStore())
+    _commit(legacy, "overwrite", {"0": A0, "1": A1})
+    with pytest.raises(ValueError, match="records no schema"):
+        _stream_columns(legacy)

@@ -3,6 +3,7 @@ MERGE, optimistic concurrency, vacuum."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -1493,6 +1494,15 @@ def test_bloom_index_point_lookup_skips_files(spark, table_factory):
     rep_k = t.prune_report("k = 4321", spark=spark)
     assert rep_k["files_scanned"] <= 2
     assert t.read(spark, where="k = 4321").count() == 1
+    # the bloom pass reads the staged files at the staged frame's
+    # schema: the first bloom column costs the jobs every further one
+    # does, with no job re-reading the files to learn their types
+    def staging_jobs(cols):
+        u = table_factory(f"jobs{len(cols)}", bloom_cols=cols)
+        return _jobs_fired(spark, lambda: u.overwrite(df.repartition(8)))[0]
+
+    none, one, two = map(staging_jobs, ([], ["doc_id"], ["doc_id", "k"]))
+    assert one - none == two - one > 0
 
 
 def test_bloom_index_never_false_negative(spark, table_factory):
@@ -2497,6 +2507,18 @@ class TestTypeWidening:
         at = t.read(spark, version=v)
         assert dict(at.dtypes)["clicks"] == "bigint"
         assert {r["clicks"] for r in at.collect()} == {10, 20}
+        # RESTORE to before the widen keeps the wide type (widening
+        # never downgrades), so a wide value still lands whole
+        t.restore(v - 1)
+        t.append(
+            spark.createDataFrame([(4, 6_000_000_000)],
+                                  "id long, clicks long")
+        )
+        head = t.read(spark)
+        assert dict(head.dtypes)["clicks"] == "bigint"
+        assert {r["id"]: r["clicks"] for r in head.collect()} == {
+            1: 10, 2: 20, 4: 6_000_000_000,
+        }
 
     def test_narrowing_and_lossy_transitions_rejected(
         self, spark, table_factory
@@ -3095,26 +3117,34 @@ def test_merge_probe_no_match_unpartitioned_and_txn(spark, table_factory):
     assert _rows(t.read(spark)) == {1: "a", 2: "b"}
 
 
-def test_commit_scan_schema_memo(spark, table_factory):
-    """r12 optimization pin: the commit-dir schema memo serves later
-    scans without re-inference and never changes what a read returns —
-    including across additive schema evolution, where each commit dir
-    keeps its own schema."""
+def _jobs_fired(spark, build):
+    """(Spark jobs ``build()`` fired, its result): a job group around
+    the call, counted by the status tracker."""
+    sc = spark.sparkContext
+    group = f"jobs-fired-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_reads_take_the_schema_from_the_log(spark, table_factory):
+    """Every scan reads at the schema the log entry records, so
+    building a head read, a time-travel read and a change feed fires
+    no Spark job — no schema inference, even on a table no read has
+    touched yet — and the reads return the same rows across additive
+    evolution, a widen_column, a merge-on-read delete and a key
+    tombstone."""
     t = table_factory("t", partition_col="pb")
     t.overwrite(_mk(spark, [(1, "a", 0), (2, "b", 1)]))
-    before = dict(txlog._COMMIT_SCHEMAS)
+    assert _jobs_fired(spark, lambda: t.read(spark))[0] == 0
     r1 = _rows(t.read(spark))
-    # the read populated the memo for this table's commit dirs
-    new_keys = [k for k in txlog._COMMIT_SCHEMAS if k not in before]
-    assert any(k[0] == t.path for k in new_keys)
-    # second read serves from the memo (no new keys) and is identical
-    n_after = len(txlog._COMMIT_SCHEMAS)
     assert _rows(t.read(spark)) == r1 == {1: "a", 2: "b"}
-    assert len(txlog._COMMIT_SCHEMAS) == n_after
-    # additive evolution: the widened commit caches its own schema and
-    # old commits still read through theirs (null-filled union)
+    # additive evolution: old commits' files null-fill the new columns
     wide = spark.createDataFrame(
-        [(3, "c", 0, 9.5)], "id long, s string, pb long, x double"
+        [(3, "c", 0, 9.5, 7)], "id long, s string, pb long, x double, n int"
     )
     t.merge(spark, wide, ["id"], merge_schema=True)
     got = {
@@ -3122,3 +3152,125 @@ def test_commit_scan_schema_memo(spark, table_factory):
         for r in t.read(spark).collect()
     }
     assert got == {(1, "a", None), (2, "b", None), (3, "c", 9.5)}
+    t.widen_column(spark, "n", "bigint")
+    t.delete_where(spark, "id = 2", mode="mor")
+    t.delete_keys(spark, spark.createDataFrame([(1,)], "id long"))
+    jobs, (head, v1, feed) = _jobs_fired(spark, lambda: (
+        t.read(spark),
+        t.read(spark, version=1),
+        t.read_changes(spark, ["id"], 1, include_deletes=True),
+    ))
+    assert jobs == 0
+    assert dict(head.dtypes)["n"] == "bigint"
+    assert {
+        (r["id"], r["s"], r["x"], r["n"]) for r in head.collect()
+    } == {(3, "c", 9.5, 7)}
+    assert v1.columns == ["id", "s", "pb"] and _rows(v1) == {1: "a", 2: "b"}
+    assert dict(feed.dtypes)["n"] == "bigint"
+    assert {(r["id"], r["_change_type"]) for r in feed.collect()} == {
+        (3, "insert"), (2, "delete"), (1, "delete"),
+    }
+
+
+def test_merge_schema_rebase_keeps_a_concurrent_added_column(
+    spark, table_factory
+):
+    """Two merge_schema merges on disjoint partitions race: the one
+    that staged first commits second, rebased on the other. It extends
+    the schema of the head it commits on, so the column the other one
+    added stays readable."""
+    t = table_factory("t", partition_col="pb")
+    other = table_factory("t", partition_col="pb")
+    t.overwrite(_mk(spark, [(1, "a", 0), (2, "b", 1)]))
+    stage = t._stage
+
+    def racing_stage(df, sort_by=None):
+        t._stage = stage
+        other.merge(spark, spark.createDataFrame(
+            [(2, "B", 1, 7)], "id long, s string, pb int, y int"
+        ), ["id"], merge_schema=True)
+        return stage(df, sort_by)
+
+    t._stage = racing_stage
+    v = t.merge(spark, spark.createDataFrame(
+        [(1, "A", 0, 9.5)], "id long, s string, pb int, x double"
+    ), ["id"], merge_schema=True)
+    assert v == 3
+    assert {
+        r["id"]: (r["s"], r["x"], r["y"]) for r in t.read(spark).collect()
+    } == {1: ("A", 9.5, None), 2: ("B", None, 7)}
+
+
+def test_drop_column_refused_while_key_tombstones_match_on_it(
+    spark, table_factory
+):
+    """A dropped column is no longer read, so a live key tombstone
+    matching on it could not apply: the drop is refused until a
+    compaction has applied the tombstones."""
+    t = table_factory("t")
+    t.overwrite(_mk(spark, [(1, "a", 0), (2, "b", 1)]))
+    t.delete_keys(spark, spark.createDataFrame([("a",)], "s string"))
+    with pytest.raises(ValueError, match="key tombstones"):
+        t.drop_column(spark, "s")
+    t.compact(spark)
+    t.drop_column(spark, "s")
+    got = t.read(spark)
+    assert got.columns == ["id", "pb"]
+    assert [r["id"] for r in got.collect()] == [2]
+
+
+def test_log_without_schemas_reads_like_its_twin(spark, table_factory):
+    """A log written before entries recorded their schema (here: the
+    ``schema`` field stripped from every raw entry through the
+    LogStore) reads through the fallback — one inference of the live
+    snapshot, the ``widened`` map applied — and returns the same rows
+    and dtypes as its unstripped twin: head, every version, and the
+    change feed. Its next commit records the schema again."""
+    def build(name):
+        t = table_factory(name, partition_col="pb")
+        t.overwrite(spark.createDataFrame(
+            [(1, "a", 5, 0), (2, "b", 6, 1)],
+            "id long, s string, n int, pb int",
+        ))
+        t.merge(spark, spark.createDataFrame(
+            [(3, "c", 7, 2, 1.5)], "id long, s string, n int, pb int, x double"
+        ), ["id"], merge_schema=True)
+        t.widen_column(spark, "n", "bigint")
+        t.append(spark.createDataFrame(
+            [(4, "d", 2**40, 0, 2.5)],
+            "id long, s string, n bigint, pb int, x double",
+        ))
+        return t
+
+    twin, old = build("twin"), build("old")
+    assert len({p["commit_dir"] for e in old._read_entry(4)["live"].values()
+                for p in txlog._ptrs(e)}) >= 3
+    for v in old._list_versions():
+        raw = json.loads(old._store.read(old._entry_name(v)))
+        assert raw.pop("schema")
+        old._store.put(old._entry_name(v), json.dumps(raw).encode())
+    old = table_factory("old", partition_col="pb")  # no memo
+    assert "schema" not in json.loads(old._store.read(old._entry_name(4)))
+
+    def same(a, b):
+        assert a.dtypes == b.dtypes
+        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+    same(old.read(spark), twin.read(spark))
+    for v in range(1, 5):
+        same(old.read(spark, version=v), twin.read(spark, version=v))
+    for lo in (1, 2):
+        same(
+            old.read_changes(spark, ["id"], lo, include_deletes=True),
+            twin.read_changes(spark, ["id"], lo, include_deletes=True),
+        )
+    more = spark.createDataFrame(
+        [(5, "e", 9, 1, None)], "id long, s string, n bigint, pb int, x double"
+    )
+    old.append(more)
+    twin.append(more)
+    raw = json.loads(old._store.read(old._entry_name(5)))
+    assert raw["schema"] == json.loads(
+        twin._store.read(twin._entry_name(5))
+    )["schema"]
+    same(old.read(spark), twin.read(spark))

@@ -14,6 +14,7 @@ from collections import Counter
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql.types import StringType, StructField, StructType
 
 from de_final_project_spark.operators import txlog
 from de_final_project_spark.operators.txlog import (
@@ -172,7 +173,8 @@ def _seeded(store) -> VersionedTable:
     live = {p: {"id": f"s{p}", "rows": [f"{p}{k}" for k in range(4)],
                 "src": [], "commit_dir": "data/seed", "part_dir": p, "v": 1}
             for p in PARTS}
-    extra = {"colmap": {"x": "x"}, "colmap_used": ["x"]}
+    extra = {"colmap": {"x": "x"}, "colmap_used": ["x"],
+             "schema": _Frame(["x"]).schema.jsonValue()}
     t._commit(None, list(PARTS), "overwrite", lambda h, e: (live, [], extra))
     return t
 
@@ -376,10 +378,12 @@ def test_list_txn_stamp_commits_replays_and_advances():
 
 class _Frame:
     """The part of a DataFrame a blind writer touches before staging
-    when no column needs a rename: its column names."""
+    when no column needs a rename or a cast: its columns and types."""
 
     def __init__(self, columns):
         self.columns = list(columns)
+        self.dtypes = [(c, "string") for c in columns]
+        self.schema = StructType([StructField(c, StringType()) for c in columns])
         self.sparkSession = None
 
 
@@ -404,7 +408,6 @@ def test_blind_writer_conflicts_with_a_schema_change_after_staging(
         return "data/ours", {"a": "a"}, {}
 
     monkeypatch.setattr(t, "_stage", stage)
-    monkeypatch.setattr(t, "_read_live", lambda *a, **k: _Frame(["x"]))
     with pytest.raises(ConcurrentWriteError, match="column mapping"):
         if writer == "overwrite":
             t.overwrite(_Frame(["x"]))
